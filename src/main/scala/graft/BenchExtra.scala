@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.streaming.StreamingQueryListener
+
 /** Extra (non-contract) benchmark harness for the optimization round:
   * times arbitrary SparkEntry queries with EXACTLY Bench's methodology
   * (t0 before the query closure runs, `.count()` as the action — the
@@ -11,7 +13,11 @@ package graft
   * `explain=DIR` writes each query's .explain("formatted") to
   * DIR/<query>.txt (plan evidence for plans/r06/). `all` expands to the
   * full sorted sweep. Between reps the kg pipeline cache is reset like
-  * Bench does between sweeps. One JSON line per query on stdout. */
+  * Bench does between sweeps. One JSON line per query and rep on stdout;
+  * a failed rep prints `{"q":…,"rep":…,"error":…}` with no `sec` or
+  * `rows` (a failure never reads as a timing) and the process exits
+  * non-zero. Every streaming micro-batch prints one progress line on
+  * stderr. */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -28,19 +34,33 @@ object BenchExtra {
     explainDir.foreach(d => new java.io.File(d).mkdirs())
     val spark = Bench.newSession(cpus)
     val sc = spark.sparkContext
+    @volatile var current = ""
+    spark.streams.addListener(new StreamingQueryListener {
+      def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
+        val p = e.progress
+        val state = p.stateOperators.map(so =>
+          s"(rows=${so.numRowsTotal},updated=${so.numRowsUpdated},commitMs=${so.commitTimeMs})")
+        System.err.println(s"[benchextra] $current batch=${p.batchId} " +
+          s"rows=${p.numInputRows} durationMs=${p.durationMs} state=${state.mkString(";")}")
+      }
+    })
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    var failed = 0
     for (r <- 1 to reps) {
       if (r > 1) {
         graft.queries.KgQueries.resetRunCache()
         spark.catalog.clearCache()
       }
       for (name <- names) {
-        val fn = SparkEntry.queries(name)
+        current = name
         sc.setJobDescription(s"bx:$name")
         val t0 = System.nanoTime()
-        var rows = -1L
         try {
-          val df = fn(spark, sfDir)
-          rows = df.count()
+          val df = SparkEntry.queries(name)(spark, sfDir)
+          val rows = df.count()
+          val sec = (System.nanoTime() - t0) / 1e9
           if (r == 1) explainDir.foreach { d =>
             val plan = df.queryExecution.explainString(
               org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
@@ -48,14 +68,16 @@ object BenchExtra {
               java.nio.file.Paths.get(s"$d/$name.txt"),
               plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
           }
+          println(f"""{"q":"$name","rep":$r,"sec":$sec%.3f,"rows":$rows}""")
         } catch { case e: Throwable =>
-          System.err.println(s"[benchextra] $name failed: ${e.getMessage}")
+          failed += 1
+          val msg = json.writeValueAsString(Option(e.getMessage).getOrElse(e.toString))
+          println(s"""{"q":"$name","rep":$r,"error":$msg}""")
         }
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"""{"q":"$name","rep":$r,"sec":$sec%.3f,"rows":$rows}""")
         sc.setJobDescription(null)
       }
     }
     spark.stop()
+    if (failed > 0) sys.exit(1)
   }
 }

@@ -27,7 +27,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    `SparkSessionExtensions` (`GraftExtensions` for
   *    `--conf spark.sql.extensions=graft.ext.GraftExtensions`).
   *
-  * Measured honestly (tools/ExprVsUdf, 200k docs, local[8]): the regex
+  * Measured honestly (200k docs, local[8]): the regex
   * kernel dominates per-row cost and wall time is within noise of the
   * UDF (0.97×) — exactly SURVEY §7.3's prediction. The expression's
   * value is PLAN quality, not raw speed: whole-stage fusion (ExprSpec

@@ -66,18 +66,13 @@ object Pipeline {
       } catch { case scala.util.control.NonFatal(_) => "" }
     } else ""
 
-  /** Stable url-hash partitioning (north_rule): every per-url operation
-    * downstream is partition-local and run-count independent. */
-  def partitionByUrl(pages: Dataset[Page], nPartitions: Int): Dataset[Page] =
-    pages.repartition(nPartitions, pmod(xxhash64(pages("url")), lit(nPartitions)))
-
   /** Extract + clean (C1 kernel). A purely narrow pass: no repartition —
     * shuffling the fat (html-carrying) page rows costs a full
     * spill-to-disk cycle of the corpus and plain parquet retains no
     * bucketing metadata to pay it back. On a real cluster the url-hash
-    * layout (north_rule) is the TABLE's job: write with an Iceberg
-    * `bucket(N, url)` partition spec via `partitionByUrl`, so narrow
-    * passes stay narrow and per-url joins co-locate. The checkpoint holds
+    * layout (north_rule) is the TABLE's job: write it with an Iceberg
+    * `bucket(N, url)` partition spec, so narrow passes stay narrow and
+    * per-url joins co-locate. The checkpoint holds
     * only derived clean text — raw stays in the source table (at 100 TB,
     * writing raw twice is the bill, not the regex). */
   def extractClean(spark: SparkSession, pages: Dataset[Page], nPartitions: Int): Dataset[CleanDoc] = {
@@ -172,14 +167,6 @@ object Pipeline {
       }
       .toDF("key_a", "key_b")
       .distinct()
-  }
-
-  /** Normalize mentions to entity keys (lowercase surface). */
-  def linkedMentions(spark: SparkSession, triples: Dataset[Triple]): Dataset[LinkedMention] = {
-    import spark.implicits._
-    triples
-      .filter(_.pred == "mentionsEntity")
-      .map(t => LinkedMention(t.url, t.pred, Py.lower(t.obj), t.surface, t.kind, t.weight))
   }
 
   // ------------------------------------------------------------ stage 4

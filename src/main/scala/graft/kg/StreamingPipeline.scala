@@ -190,7 +190,7 @@ object StreamingPipeline {
     * because overwriting the parquet a lazy plan is still reading is the
     * classic self-overwrite corruption; versioning also gives the resume
     * story — a crashed pass leaves the previous version intact. */
-  def recanonicalize(spark: SparkSession, workDir: String,
+  private def recanonicalize(spark: SparkSession, workDir: String,
       seeded: Boolean = true): Unit = {
     import spark.implicits._
     val raw = spark.read.parquet(s"$workDir/triples_stream")

@@ -1,6 +1,5 @@
 package graft.kg
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
 
 /** Spark UDF surface over the pure kernel (SURVEY §2.10: plain Scala
@@ -15,9 +14,6 @@ object Udfs {
 
   /** C1 — byte-identity cleaning kernel. */
   val cleanText = udf((s: String) => if (s == null) "" else RefText.cleanText(s))
-
-  /** N1 — TextProcessor reversed-text repair (exposed for tests/stages). */
-  val fixReversed = udf((s: String) => if (s == null) "" else RefText.fixReversedText(s))
 
   /** K1 — chunker; explode downstream. */
   val chunkText = udf((s: String) =>
@@ -69,16 +65,4 @@ object Udfs {
     val t = if (s == null) "" else s
     RefAnalyzers.suggestedQuestions(t, RefAnalyzers.extractKeywords(t))
   })
-
-  /** S1 — html→text extraction for rows with null text: UTF-8 decode,
-    * strip tags, collapse whitespace (generalizes
-    * /root/reference/src/pdf_processor.py:55-93 to web pages). */
-  val htmlToText = udf((b: Array[Byte]) =>
-    if (b == null) ""
-    else {
-      val s = new String(b, java.nio.charset.StandardCharsets.UTF_8)
-      Py.strip(Py.collapseWs(s.replaceAll("<[^>]+>", " ")))
-    })
-
-  def cleanTextCol(c: Column): Column = cleanText(c)
 }

@@ -51,11 +51,13 @@ object Crawl {
     require(perHostPerRound > 0, s"perHostPerRound must be positive: $perHostPerRound")
     // `round` and the internal skew-count column are WRITTEN onto the
     // pass-through frontier row — a caller column of the same name
-    // would be silently overwritten (r5 ADVICE): reserve them loudly
-    require(!frontier.columns.contains("round"),
+    // would be silently overwritten (r5 ADVICE): reserve them loudly.
+    // Case-insensitively: `withColumn` resolves names that way by default
+    val taken = frontier.columns.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
+    require(!taken("round"),
       "scheduleRounds: the frontier must not already carry a 'round' column " +
         "(reserved for the schedule output); rename it upstream")
-    require(!frontier.columns.contains("__sched_host_n"),
+    require(!taken("__sched_host_n"),
       "scheduleRounds: '__sched_host_n' is a reserved internal column name")
     val w = Window.partitionBy(col(host))
       .orderBy(col(priority).desc, col(url).asc)

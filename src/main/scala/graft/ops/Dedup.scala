@@ -25,12 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Distinct (id, token) pairs from a space-tokenized text column. */
-  def docTokens(df: DataFrame, id: String, text: String): DataFrame =
-    df.select(col(id), explode(split(col(text), " ")).as("token"))
-      .where(col("token") =!= "")
-      .distinct()
-
   /** Exact-duplicate groups: md5 over raw text, keep groups of ≥2.
     * Output: (text_md5, n_docs, min_id) — min_id is the canonical
     * representative (first by id). */
@@ -50,10 +44,6 @@ object Dedup {
   final val MinhashP: Long = 2147483647L // 2^31 - 1
   def minhashA(seed: Int): Long = (1103515245L * (seed + 1) + 12345L) % MinhashP
   def minhashB(seed: Int): Long = (69069L * (seed + 1) + 362437L) % MinhashP
-
-  /** MinHash signatures over whitespace tokens. Output: (id, seed, minhash). */
-  def minhashSignatures(df: DataFrame, id: String, text: String, nHashes: Int = 16): DataFrame =
-    minhashOver(docTokens(df, id, text), id, "token", nHashes)
 
   /** MinHash over any (id, unit) row set. All nHashes hashes are computed
     * per unit into ONE array row and reduced with an elementwise-min
@@ -245,16 +235,6 @@ object Dedup {
       .join(sizes.withColumnRenamed(id, "id2").withColumnRenamed("sz", "sz2"), Seq("id2"))
       .select(col("id1"), col("id2"),
         round(col("inter") / (col("sz1") + col("sz2") - col("inter")), 4).as("jaccard"))
-  }
-
-  /** Full MinHash-LSH near-dup pipeline: signatures → bands → candidate
-    * pairs → exact-Jaccard verify ≥ threshold. */
-  def minhashNearDups(df: DataFrame, id: String, text: String,
-      nHashes: Int = 16, rowsPerBand: Int = 4, threshold: Double = 0.8): DataFrame = {
-    val sigs = minhashSignatures(df, id, text, nHashes)
-    val pairs = candidatePairs(minhashBands(sigs, id, rowsPerBand), id)
-    jaccardVerify(pairs, docTokens(df, id, text), id)
-      .where(col("jaccard") >= threshold)
   }
 
   /** SimHash-64 core over weighted hash rows (id, cnt, h=md5 hex): per

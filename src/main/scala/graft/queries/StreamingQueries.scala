@@ -37,10 +37,11 @@ object StreamingQueries {
     * state-store commit wall vs 2.5 s at 8 — pure per-store overhead,
     * no data. */
   private def statePartitions(s: SparkSession, dir: String, name: String): Int = {
-    val f = new java.io.File(s"$dir/$name.parquet")
-    val bytes =
-      if (f.isFile) f.length()
-      else Option(f.listFiles()).map(_.filter(_.isFile).map(_.length()).sum).getOrElse(0L)
+    // sized through the path's own FileSystem, so hdfs:// and s3a://
+    // sources count their bytes too
+    val path = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
+    val bytes = path.getFileSystem(s.sessionState.newHadoopConf())
+      .getContentSummary(path).getLength
     val perPart = sys.env.getOrElse("SPARK_GRAFT_ST_PART_BYTES", (32L << 20).toString).toLong
     val derived = math.max(4L, (bytes + perPart - 1) / perPart)
     math.min(s.sessionState.conf.numShufflePartitions.toLong, derived).toInt
@@ -395,7 +396,7 @@ object StreamingQueries {
           val shard = DataOps.ddExpand(
               batch.repartition(s.sparkContext.defaultParallelism))
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          graft.kg.Pipeline.inParallel(Seq(
+          try graft.kg.Pipeline.inParallel(Seq(
             () => graft.ops.Dedup.minhashBands(
                 graft.ops.Dedup.minhashShingles(shard, "doc_id", "text", 8, 8),
                 "doc_id", 4)
@@ -404,7 +405,7 @@ object StreamingQueries {
             () => graft.ops.Dedup.charShingles(shard, "doc_id", "text", 8)
               .withColumnRenamed("shingle", "token")
               .write.mode("overwrite").parquet(s"$work/sh_v$batchId")))
-          shard.unpersist(false)
+          finally shard.unpersist(false)
           val allBands = s.read.parquet(
             versions("bands").filter(_ <= batchId).map(v => s"$work/bands_v$v"): _*)
           val allSh = s.read.parquet(

@@ -1262,6 +1262,12 @@ class OpsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       graft.ops.Crawl.scheduleRounds(f, "url", "host", "priority", 0)
     }
+    // the reserved output column is guarded case-insensitively
+    val e = intercept[IllegalArgumentException] {
+      graft.ops.Crawl.scheduleRounds(f.withColumn("Round", lit(7)),
+        "url", "host", "priority", 2)
+    }
+    assert(e.getMessage.contains("'round'"), e.getMessage)
     // caller column names other than url/host/priority must also resolve
     val renamed = f.toDF("page_url", "site", "score")
     val out2 = graft.ops.Crawl.scheduleRounds(renamed, "page_url", "site", "score", 2)
