@@ -2,13 +2,14 @@ package graft.kg
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.kg.Schema.{LinkedMention, Triple}
 
 /** Entity linking (north_star: "alias-table + context-similarity entity
   * linking"):
   *
   *  1. Alias discovery — within a url, acronym A pairs with phrase P when
-  *     initials(P) == A (Pipeline.aliasEdges).
+  *     initials(P) == A (urlAliasPairs).
   *  2. Ambiguity split — an acronym whose global pair set holds MORE than
   *     one expansion ("CNN" → convolutional neural network / cable news
   *     network) must NOT become a global alias edge: connected components
@@ -21,19 +22,29 @@ import graft.kg.Schema.{LinkedMention, Triple}
   *     the expansion itself decides instantly); ties break
   *     lexicographically. Deterministic.
   *
-  * Shuffle shape: profiles and candidate tables are entity-vocabulary-
-  * sized — small enough that AQE promotes them to broadcast at runtime;
-  * no FORCED broadcast hints (at 10^12 pages the vocabulary tables can
-  * outgrow driver memory, and a wrong hint OOMs where AQE degrades to a
-  * shuffled join). Only the url-keyword join necessarily shuffles, keyed
-  * by url (the natural partitioning).
+  * Shuffle shape: every read of the triples is a Column filter on `pred`
+  * (and `kind`) plus a projection, so parquet pushes the filter into the
+  * scan and never reads `context`, the bulk of a triple row; keys are
+  * lowered after projection. The ambiguity split is computed ONCE per
+  * resolve and persisted — both outputs read it. Profiles, the split and
+  * candidate tables are entity-vocabulary-sized — small enough that AQE
+  * promotes them to broadcast at runtime; no FORCED broadcast hints (at
+  * 10^12 pages the vocabulary tables can outgrow driver memory, and a
+  * wrong hint OOMs where AQE degrades to a shuffled join). Only the
+  * url-keyword join necessarily shuffles, keyed by url (the natural
+  * partitioning).
   */
 object EntityLinking {
+
+  /** Python `str.lower()` over a column: the Scala kernel (Locale.ROOT),
+    * never Spark's `lower`, whose non-ASCII path follows the JVM default
+    * locale. */
+  private val pyLower = udf((s: String) => Py.lower(s))
 
   /** Acronym candidate of a phrase: first letter of each word, uppercased.
     * Word split is Python `str.split()` (Py.split — any whitespace incl.
     * NBSP that survives raw text), consistent with the Py.* semantics used
-    * everywhere else. Shared by urlAliasPairs and Pipeline.aliasEdges. */
+    * everywhere else. */
   def initialsOf(phrase: String): String =
     Py.split(phrase).map(w => Character.toUpperCase(w.charAt(0))).mkString
 
@@ -42,8 +53,9 @@ object EntityLinking {
   def urlAliasPairs(spark: SparkSession, triples: Dataset[Triple]): DataFrame = {
     import spark.implicits._
     val ents = triples
-      .filter(t => t.pred == "mentionsEntity" && (t.kind == "acronym" || t.kind == "concept"))
-      .map(t => (t.url, t.obj, t.kind))
+      .where(col("pred") === "mentionsEntity" && col("kind").isin("acronym", "concept"))
+      .select(col("url"), col("obj"), col("kind"))
+      .as[(String, String, String)]
     ents.groupByKey(_._1)
       .flatMapGroups { (url, it) =>
         val ms = it.toVector
@@ -92,28 +104,26 @@ object EntityLinking {
       .select(col("id1").as("key_a"), col("id2").as("key_b"))
   }
 
-  /** (unambiguousEdges(key_a,key_b), ambiguousCandidates(acr_key,exp_key)) */
-  def splitAmbiguity(pairs: DataFrame): (DataFrame, DataFrame) = {
-    val global = pairs.select(col("acr_key"), col("exp_key")).distinct()
-    val counts = global.groupBy(col("acr_key")).agg(count(lit(1)).as("n_exp"))
-    val unambiguous = global.join(counts.where(col("n_exp") === 1), Seq("acr_key"))
-      .select(col("acr_key").as("key_a"), col("exp_key").as("key_b"))
-    val ambiguous = global.join(counts.where(col("n_exp") > 1), Seq("acr_key"))
-      .select(col("acr_key"), col("exp_key"))
-    (unambiguous, ambiguous)
-  }
+  /** The global ambiguity split: every distinct (acr_key, exp_key) pair
+    * with its acronym's expansion count `n_exp` — vocabulary-sized. An
+    * acronym with one expansion is an alias edge; one with more is
+    * ambiguous. One shuffle: the per-acronym expansion set combines
+    * map-side, so a hot acronym never loads a single reducer. */
+  def splitAmbiguity(pairs: DataFrame): DataFrame =
+    pairs.groupBy(col("acr_key")).agg(collect_set(col("exp_key")).as("exps"))
+      .select(col("acr_key"), explode(col("exps")).as("exp_key"),
+        size(col("exps")).as("n_exp"))
 
   /** Global keyword profile per expansion: top-20 keywords (by url count,
-    * ties lexicographic) across urls that mention the expansion phrase. */
-  def expansionProfiles(spark: SparkSession, triples: Dataset[Triple], expansions: DataFrame): DataFrame = {
-    import spark.implicits._
-    val expMentions = triples
-      .filter(t => t.pred == "mentionsEntity" && t.kind == "concept")
-      .map(t => (t.url, Py.lower(t.obj)))
-      .toDF("url", "exp_key")
-      .join(expansions.select(col("exp_key")).distinct(), Seq("exp_key"))
+    * ties lexicographic) across urls that mention the expansion phrase.
+    * `mentions` is resolve's lowered mention projection, `urlKw` its
+    * (url, kw) keyword projection. */
+  def expansionProfiles(mentions: DataFrame, urlKw: DataFrame, expansions: DataFrame): DataFrame = {
+    val expMentions = mentions
+      .where(col("kind") === "concept")
+      .select(col("url"), col("entity_key").as("exp_key"))
+      .join(expansions, Seq("exp_key"), "left_semi")
       .distinct()
-    val urlKw = triples.filter(_.pred == "hasKeyword").map(t => (t.url, t.obj)).toDF("url", "kw")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("exp_key")).orderBy(col("n").desc, col("kw").asc)
     expMentions.join(urlKw, Seq("url"))
@@ -139,33 +149,36 @@ object EntityLinking {
     * alias edges); ambiguous acronyms are resolved per url. */
   def resolve(spark: SparkSession, triples: Dataset[Triple]): Resolved = {
     import spark.implicits._
-    // both returned plans (alias edges AND resolved mentions) hang off
-    // this groupByKey shuffle; persisted so the caller's two stage writes
-    // (run concurrently in Pipeline.run) compute it once, not three times
-    // (isEmpty probe + each write). The handle is returned in `cached`
-    // for the caller to drop after checkpointing.
-    val pairs = urlAliasPairs(spark, triples)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (unambiguous, ambiguous) = splitAmbiguity(pairs)
+    // both returned plans (alias edges AND resolved mentions) read the
+    // ambiguity split, and the resolved mentions also read the per-url
+    // pairs (local bonus). Both are persisted and the isEmpty probe
+    // below materializes them, so the caller's two stage writes (run
+    // concurrently in Pipeline.run) compute neither again. `cached`
+    // lists the split first: it is the cache that depends on pairs.
+    val pairs = urlAliasPairs(spark, triples).persist(StorageLevel.MEMORY_AND_DISK)
+    val split = splitAmbiguity(pairs).persist(StorageLevel.MEMORY_AND_DISK)
+    val cached = Seq(split, pairs)
+    val unambiguous = split.where(col("n_exp") === 1)
+      .select(col("acr_key").as("key_a"), col("exp_key").as("key_b"))
+    val ambiguous = split.where(col("n_exp") > 1)
+      .select(col("acr_key"), col("exp_key"))
     val mentions = triples
-      .filter(_.pred == "mentionsEntity")
-      .map(t => LinkedMention(t.url, t.pred, Py.lower(t.obj), t.surface, t.kind, t.weight))
+      .where(col("pred") === "mentionsEntity")
+      .select(col("url"), col("pred"), pyLower(col("obj")).as("entity_key"),
+        col("surface"), col("kind"), col("weight"))
 
-    if (ambiguous.isEmpty) return Resolved(unambiguous, mentions, Seq(pairs))
+    if (ambiguous.isEmpty) return Resolved(unambiguous, mentions.as[LinkedMention], cached)
 
-    val profiles = expansionProfiles(spark, triples, ambiguous)
-    val urlKw = triples.filter(_.pred == "hasKeyword").map(t => (t.url, t.obj)).toDF("url", "kw")
+    val urlKw = triples.where(col("pred") === "hasKeyword")
+      .select(col("url"), col("obj").as("kw"))
+    val profiles = expansionProfiles(mentions, urlKw, ambiguous)
 
     // candidate grid: every ambiguous-acronym mention × its expansions.
     // No forced broadcast hints anywhere in linking: the ambiguous/profile
     // tables are usually vocabulary-sized, but at 10^12 pages "usually"
     // is not a guarantee — a forced hint OOMs when it's wrong, while AQE
     // promotes small sides to broadcast at runtime from observed sizes.
-    val ambMentions = mentions.toDF()
-      .join(ambiguous.select(col("acr_key")).distinct(),
-        col("entity_key") === col("acr_key"))
-    val grid = ambMentions
-      .join(ambiguous, Seq("acr_key"))
+    val grid = mentions.join(ambiguous, col("entity_key") === col("acr_key"))
 
     // context score: |url keywords ∩ expansion profile|
     val overlap = urlKw
@@ -187,18 +200,9 @@ object EntityLinking {
       .where(col("rn") === 1)
       .select(col("url"), col("pred"), col("exp_key").as("entity_key"),
         col("surface"), col("kind"), col("weight"))
-      .as[LinkedMention]
 
-    // NB: joins reorder columns and Dataset.union is positional — select
-    // the canonical column order on both sides before unioning
-    val cols = Seq("url", "pred", "entity_key", "surface", "kind", "weight").map(col)
-    val untouched = mentions.toDF()
-      .join(ambiguous.select(col("acr_key").as("entity_key")).distinct(),
-        Seq("entity_key"), "left_anti")
-      .select(cols: _*)
+    val untouched = mentions.join(ambiguous, col("entity_key") === col("acr_key"), "left_anti")
 
-    Resolved(unambiguous,
-      untouched.union(resolved.toDF().select(cols: _*)).as[LinkedMention],
-      Seq(pairs))
+    Resolved(unambiguous, untouched.unionByName(resolved).as[LinkedMention], cached)
   }
 }

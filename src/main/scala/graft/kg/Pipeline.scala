@@ -143,31 +143,7 @@ object Pipeline {
   }
 
   // ------------------------------------------------------------ stage 3
-  /** Acronym↔expansion alias discovery: within a url, an acronym mention
-    * A links to a phrase mention P when initials(P) == A. Pure per-url
-    * logic (partition-local after the stage-1 repartition) followed by a
-    * global distinct — the alias table is tiny relative to mentions. */
-  def aliasEdges(spark: SparkSession, triples: Dataset[Triple]): DataFrame = {
-    import spark.implicits._
-    // project to (url, obj, kind) BEFORE the shuffle — context/surface
-    // columns are the bulk of a mention row and irrelevant here
-    val ents = triples.filter(t => t.pred == "mentionsEntity" &&
-        (t.kind == "acronym" || t.kind == "concept"))
-      .map(t => (t.url, t.obj, t.kind))
-    ents.groupByKey(_._1)
-      .flatMapGroups { (_, it) =>
-        val ms = it.toVector
-        val acronyms = ms.filter(_._3 == "acronym")
-        val phrases = ms.filter(_._3 == "concept")
-        for {
-          a <- acronyms
-          p <- phrases
-          if EntityLinking.initialsOf(p._2) == a._2
-        } yield (Py.lower(a._2), Py.lower(p._2))
-      }
-      .toDF("key_a", "key_b")
-      .distinct()
-  }
+  // entity linking: EntityLinking.resolve
 
   // ------------------------------------------------------------ stage 4
   /** Canonicalize entity keys: CC over alias edges; canonical name = the
@@ -443,12 +419,12 @@ object Pipeline {
       } else {
         val t0 = System.nanoTime()
         val resolved = EntityLinking.resolve(spark, triples)
-        // independent outputs sharing resolve's persisted pairs shuffle —
+        // independent outputs sharing resolve's persisted ambiguity split —
         // overlapped like the stage-1/2 and nodes/edges write pairs
         inParallel(Seq(
           () => writeStage(resolved.aliasEdges, aliasPath),
           () => ckWrite(resolved.linked.toDF(), "linked_mentions", linkedPath)))
-        resolved.unpersistCached() // exactly resolve's pairs persist
+        resolved.unpersistCached() // exactly resolve's split + pairs persists
         metrics += (("entity_linking", -1L, (System.nanoTime() - t0) / 1000000L))
         (spark.read.parquet(aliasPath), ckRead("linked_mentions", linkedPath))
       }

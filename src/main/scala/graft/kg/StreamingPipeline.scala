@@ -266,6 +266,13 @@ object StreamingPipeline {
       () => canonical.nodes.write.mode(SaveMode.Overwrite).parquet(s"$workDir/nodes_stream"),
       () => canonical.edges.write.mode(SaveMode.Overwrite).parquet(s"$workDir/edges_stream")))
     canonical.unpersistCached()
+    // this fold has landed (labels version + both outputs): every OTHER
+    // coverage's linking stage is dead — later folds cover more rows,
+    // and the drain fold can only reuse this one. Without the prune
+    // link_stage grows as O(folds × corpus) on tmpfs.
+    Option(new java.io.File(s"$workDir/link_stage").listFiles()).toSeq.flatten
+      .filterNot(_.getName.endsWith(s"_$nCovered"))
+      .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
   }
 
   /** Per-entity running state over the stream. */

@@ -133,6 +133,41 @@ class PlanSpec extends AnyFunSuite {
       "results must not depend on the join strategy")
   }
 
+  test("entity linking scans triples without context, pred pushed to the scan") {
+    // every linking read of the (context-fat) triples checkpoint must
+    // prune to the columns it uses and push its pred filter into parquet
+    import graft.kg.{EntityLinking, PagesGen, Pipeline}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val tmp = java.nio.file.Files.createTempDirectory("link_scans").toString
+    Pipeline.triplesFromPages(spark, PagesGen.pages(spark, 60L))
+      .write.mode("overwrite").parquet(tmp)
+    val triples = spark.read.parquet(tmp).as[graft.kg.Schema.Triple]
+    // the scans under resolve's persisted tables and AQE stages included
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case s: FileSourceScanExec => Seq(s)
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
+      case o => o.children.flatMap(scans)
+    }
+    val resolved = EntityLinking.resolve(spark, triples)
+    try {
+      for ((name, df) <- Seq("linked" -> resolved.linked.toDF(),
+          "aliasEdges" -> resolved.aliasEdges)) {
+        val found = scans(df.queryExecution.executedPlan)
+        assert(found.nonEmpty, s"$name: no parquet scan found:\n${plan(df)}")
+        for (s <- found) {
+          assert(!s.requiredSchema.fieldNames.contains("context"),
+            s"$name reads context: ${s.metadata("ReadSchema")}")
+          assert(s.metadata("PushedFilters").contains("EqualTo(pred,"),
+            s"$name pushes no pred filter: ${s.metadata("PushedFilters")}")
+        }
+      }
+    } finally resolved.unpersistCached()
+  }
+
   test("per-url triple extraction is a purely narrow pass (zero shuffles)") {
     val pages = graft.kg.PagesGen.pages(spark, 10L)
     val triples = graft.kg.Pipeline.extractTriples(spark,

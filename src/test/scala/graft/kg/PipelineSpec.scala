@@ -84,6 +84,36 @@ class PipelineSpec extends AnyFunSuite {
     assert(mlEdges == mlUrls.size, s"$mlEdges of ${mlUrls.size}")
   }
 
+  test("resolve leaks no cache on the ambiguous or the early-return path") {
+    import Schema.{LinkedMention, Triple}
+    // run both outputs (so every persist materializes), then drop resolve's
+    // handles: the session must hold exactly the caches it held before
+    def linkedRows(triples: org.apache.spark.sql.Dataset[Triple]): Set[LinkedMention] = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val resolved = EntityLinking.resolve(spark, triples)
+      resolved.aliasEdges.collect()
+      val rows = resolved.linked.collect().toSet
+      resolved.unpersistCached()
+      assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+      assert(resolved.cached.forall(_.storageLevel == org.apache.spark.storage.StorageLevel.NONE))
+      rows
+    }
+    // PagesGen pages carry CNN with two expansions
+    assert(linkedRows(Pipeline.triplesFromPages(spark, PagesGen.pages(spark, 60L)))
+      .exists(_.entity_key == "cable news network"))
+    // one expansion per acronym: the early return, every mention keeps
+    // its own Py.lower key (non-ASCII included)
+    val triples = Seq(
+      Triple("u1", "mentionsEntity", "SGD", "acronym", "SGD", "ctx", 2),
+      Triple("u1", "mentionsEntity", "Stochastic Gradient Descent", "concept",
+        "Stochastic Gradient Descent", "ctx", 1),
+      Triple("u2", "mentionsEntity", "İstanbul Élan", "concept", "İstanbul Élan", "ctx", 3),
+      Triple("u2", "hasKeyword", "gradient", "keyword", "gradient", "", 1)).toDS()
+    assert(linkedRows(triples) == triples.collect().filter(_.pred == "mentionsEntity")
+      .map(t => LinkedMention(t.url, t.pred, Py.lower(t.obj), t.surface, t.kind, t.weight))
+      .toSet)
+  }
+
   test("reversed-text docs flow through (detector fires in-pipeline)") {
     val u = PagesGen.url(99L)
     val got = spark.read.parquet(workDir + "/triples").where(col("url") === u).count()

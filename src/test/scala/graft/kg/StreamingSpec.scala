@@ -158,6 +158,12 @@ class StreamingSpec extends AnyFunSuite {
     val lineage = spark.read.parquet(s"$work/stream_lineage")
     assert(lineage.select("batch_id").distinct().count() == 4L)
     val lSum = lineage.agg(org.apache.spark.sql.functions.sum("rows")).head.getLong(0)
-    assert(lSum == spark.read.parquet(s"$work/triples_stream").count())
+    val landed = spark.read.parquet(s"$work/triples_stream").count()
+    assert(lSum == landed)
+    // link_stage keeps one coverage, the landed one: each fold prunes the
+    // linking tables of every other coverage once its outputs land
+    val stages = new java.io.File(s"$work/link_stage").listFiles().map(_.getName)
+    val coverages = stages.map(n => n.substring(n.lastIndexOf('_') + 1).toLong).toSet
+    assert(coverages == Set(landed), stages.sorted.mkString(","))
   }
 }
