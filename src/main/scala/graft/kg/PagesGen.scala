@@ -107,6 +107,10 @@ We presented a scalable system for ${t0._3}. Future work includes multilingual g
     } else body
   }
 
+  /** The html payload `pages` stores for a doc's text. */
+  def html(text: String): Array[Byte] =
+    ("<html><body><p>" + text + "</p></body></html>").getBytes(StandardCharsets.UTF_8)
+
   def url(id: Long): String = f"https://example.org/${if (id % 20 == 7) "xx" else "en"}/doc$id%08d"
 
   /** Distributed generation — spark.range scales to any nDocs. */
@@ -116,10 +120,8 @@ We presented a scalable system for ${t0._3}. Future work includes multilingual g
     spark.range(nDocs).map { id =>
       val text = docText(id)
       val lang = if (id % 20 == 7) "xx" else "en"
-      val html = ("<html><body><p>" + text + "</p></body></html>")
-        .getBytes(StandardCharsets.UTF_8)
       // every 50th row: text null → pipeline must extract from html
-      Page(url(id), new Timestamp(epoch + id * 1000L), html,
+      Page(url(id), new Timestamp(epoch + id * 1000L), html(text),
         if (id % 50 == 49) null else text, lang)
     }
   }

@@ -54,6 +54,8 @@ object Pipeline {
     s"kg_${java.lang.Integer.toHexString(workDir.hashCode)}_$stage"
 
   // ------------------------------------------------------------ stage 1
+  private val htmlTag = java.util.regex.Pattern.compile("<[^>]+>")
+
   /** Raw text per page: html→text when text is null (S1), with per-row
     * failure isolation (S2 continue_on_error,
     * /root/reference/src/pdf_processor.py:117-124). */
@@ -62,7 +64,7 @@ object Pipeline {
     else if (p.html != null) {
       try {
         val s = new String(p.html, java.nio.charset.StandardCharsets.UTF_8)
-        Py.strip(Py.collapseWs(s.replaceAll("<[^>]+>", " ")))
+        Py.strip(Py.collapseWs(htmlTag.matcher(s).replaceAll(" ")))
       } catch { case scala.util.control.NonFatal(_) => "" }
     } else ""
 

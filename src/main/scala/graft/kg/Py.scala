@@ -12,6 +12,12 @@ import java.util.Locale
   * and differ from Java defaults, so every primitive the reference relies
   * on is reproduced here explicitly and pinned by golden tests generated
   * from the reference implementation itself (tools/gen_goldens.py).
+  *
+  * The whitespace primitives (`split`, `strip`, `collapseWs`) are
+  * code-point loops over `isPyWs`, not regex scans: every whitespace code
+  * point is in the BMP, so a char loop sees exactly the code points a
+  * `WS_CLASS` regex would, and `collapseWs` returns its input untouched
+  * unless some run is not already one plain space.
   */
 object Py {
 
@@ -22,9 +28,6 @@ object Py {
   val WS_CLASS: String =
     "[\\t-\\r\\x1c-\\x20\\x85\\xa0\\u1680\\u2000-\\u200a\\u2028\\u2029\\u202f\\u205f\\u3000]"
 
-  private val wsSplitPat = Pattern.compile(WS_CLASS + "+")
-  private val wsCollapsePat = wsSplitPat
-
   def isPyWs(cp: Int): Boolean =
     (cp >= 0x9 && cp <= 0xd) || (cp >= 0x1c && cp <= 0x20) ||
       cp == 0x85 || cp == 0xa0 || cp == 0x1680 ||
@@ -33,9 +36,16 @@ object Py {
 
   /** Python `str.split()` — split on runs of whitespace, no empties. */
   def split(s: String): Array[String] = {
-    if (s.isEmpty) return Array.empty
-    val parts = wsSplitPat.split(s)
-    if (parts.nonEmpty && parts(0).isEmpty) parts.drop(1) else parts
+    val out = Array.newBuilder[String]
+    val n = s.length
+    var i = 0
+    while (i < n) {
+      while (i < n && isPyWs(s.charAt(i))) i += 1
+      val start = i
+      while (i < n && !isPyWs(s.charAt(i))) i += 1
+      if (i > start) out += s.substring(start, i)
+    }
+    out.result()
   }
 
   /** Python `str.strip()` (no args) — strip `isspace` chars both ends. */
@@ -72,7 +82,27 @@ object Py {
   def cpIndex(s: String, utf16: Int): Int = s.codePointCount(0, utf16)
 
   /** Python `re.sub(r'\s+', ' ', s)`. */
-  def collapseWs(s: String): String = wsCollapsePat.matcher(s).replaceAll(" ")
+  def collapseWs(s: String): String = {
+    val n = s.length
+    // the first run that is not a lone ' ' — the first char to rewrite
+    var i = 0
+    while (i < n && {
+        val c = s.charAt(i)
+        !isPyWs(c) || (c == ' ' && (i + 1 == n || !isPyWs(s.charAt(i + 1))))
+      }) i += 1
+    if (i == n) return s
+    val sb = new java.lang.StringBuilder(n).append(s, 0, i)
+    while (i < n) {
+      val start = i
+      while (i < n && !isPyWs(s.charAt(i))) i += 1
+      sb.append(s, start, i)
+      if (i < n) {
+        sb.append(' ')
+        while (i < n && isPyWs(s.charAt(i))) i += 1
+      }
+    }
+    sb.toString
+  }
 
   /** Python `str.capitalize()` — first cp titlecased, rest lowered. */
   def capitalize(s: String): String = {

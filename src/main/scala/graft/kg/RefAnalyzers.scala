@@ -1,6 +1,6 @@
 package graft.kg
 
-import java.util.regex.Pattern
+import java.util.regex.{Matcher, Pattern}
 import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
@@ -17,20 +17,37 @@ final case class DocStats(words: Int, readingTime: String, sentences: Int, parag
   * app-level extractors (/root/reference/app_enhanced.py:193-279,695-745).
   * All regex programs replicate the reference's patterns, flags, slice
   * bounds, tie-breaking (insertion order), and caps. Golden-pinned.
+  *
+  * Anchoring rule for the hot scans (equations, figure/table refs,
+  * section headers): a scan tries a start only where its required
+  * literal is, never at every char. Candidates come from the literal
+  * itself ('=', '(', '\n') or from the `CodePointSet` of the pattern's
+  * first atom, enumerated under the pattern's own flags; `matchesAt`
+  * tries each with `lookingAt`, so every scan reports exactly what
+  * `find()` would (KernelSpec keeps the plain-`find()` forms as oracles).
   */
 object RefAnalyzers {
 
   private def ws(re: String): String = re.replace("\\s", Py.WS_CLASS)
 
+  /** Every code point `[A-Za-z]` matches under `Py.CASE_I`: the ASCII
+    * letters and the code points whose case mapping folds onto one. It is
+    * the only set enumerated over all code points; each first-atom set of
+    * a case-insensitive letter atom is filtered from it, because such an
+    * atom matches only code points this class matches (KernelSpec checks
+    * every filtered set against a full enumeration). */
+  private[kg] val letterFolds = CodePointSet.enumerate("[A-Za-z]", Py.CASE_I)
+
   // ---------------------------------------------------------------- A1
   private val sentenceSplitStats = Py.pat("[.!?]+")
+  private val paragraphSplit = Pattern.compile("\n\n")
   /** Word/sentence/paragraph stats
     * (/root/reference/src/document_analyzer.py:97-117). */
   def computeStats(text: String): DocStats = {
     val wc = Py.split(text).length
     val readingMin = math.max(1, math.ceil(wc / 250.0).toInt)
     val sentences = Py.reSplit(sentenceSplitStats, text).count(s => Py.strip(s).nonEmpty)
-    val paragraphs = text.split("\n\n", -1).count(p => Py.strip(p).nonEmpty)
+    val paragraphs = paragraphSplit.split(text, -1).count(p => Py.strip(p).nonEmpty)
     DocStats(wc, s"$readingMin min", sentences, paragraphs, Py.len(text))
   }
 
@@ -175,16 +192,18 @@ object RefAnalyzers {
   }
 
   // --------------------------------------------------------------- E12
+  private val questionTopics: Array[(Pattern, String)] = Array(
+    Py.pat("\\b(?:method|methodology|approach)\\b") -> "What methodology or approach does this paper use?",
+    Py.pat("\\b(?:result|finding|experiment)\\b") -> "What are the main results and findings?",
+    Py.pat("\\b(?:conclusion|future work|limitation)\\b") -> "What are the conclusions and limitations?",
+    Py.pat("\\b(?:contribut|novel|propos)\\b") -> "What are the key contributions of this work?",
+    Py.pat("\\b(?:compar|baseline|benchmark|state.of.the.art)\\b") -> "How does this approach compare to existing methods?")
+
   /** Suggested questions (/root/reference/src/document_analyzer.py:224-258). */
   def suggestedQuestions(text: String, keywords: Seq[String]): Vector[String] = {
     val q = ArrayBuffer.empty[String]
     val lower = Py.lower(text)
-    def has(re: String): Boolean = Py.pat(re).matcher(lower).find()
-    if (has("\\b(?:method|methodology|approach)\\b")) q += "What methodology or approach does this paper use?"
-    if (has("\\b(?:result|finding|experiment)\\b")) q += "What are the main results and findings?"
-    if (has("\\b(?:conclusion|future work|limitation)\\b")) q += "What are the conclusions and limitations?"
-    if (has("\\b(?:contribut|novel|propos)\\b")) q += "What are the key contributions of this work?"
-    if (has("\\b(?:compar|baseline|benchmark|state.of.the.art)\\b")) q += "How does this approach compare to existing methods?"
+    for ((p, question) <- questionTopics if p.matcher(lower).find()) q += question
     if (keywords.nonEmpty) q += s"Can you explain the role of '${keywords.head}' in this paper?"
     if (q.isEmpty) {
       q += "What is this paper about?"
@@ -196,6 +215,8 @@ object RefAnalyzers {
   // ---------------------------------------------------------------- E6
   private val figurePat = Py.pat(ws("(Figure|Fig\\.?)\\s+(\\d+)[.:]?\\s*([^\\n]{0,200})"), Py.CASE_I)
   private val tablePat = Py.pat(ws("(Table)\\s+(\\d+)[.:]?\\s*([^\\n]{0,200})"), Py.CASE_I)
+  private[kg] val figureStart = letterFolds.filter("F", Py.CASE_I)
+  private[kg] val tableStart = letterFolds.filter("T", Py.CASE_I)
 
   /** Figure/table references with first-wins dedup on normalized title and
     * page ≈ cp_start/3000+1 (/root/reference/src/paper_analyzer.py:87-126).
@@ -203,9 +224,8 @@ object RefAnalyzers {
   def extractFigureRefs(text: String): Vector[FigureRef] = {
     val refs = ArrayBuffer.empty[FigureRef]
     val seen = mutable.Set.empty[String]
-    for ((p, kind) <- Seq((figurePat, "figure"), (tablePat, "table"))) {
-      val m = p.matcher(text)
-      while (m.find()) {
+    for ((p, start, kind) <- Seq((figurePat, figureStart, "figure"), (tablePat, tableStart, "table"))) {
+      matchesAt(p, text, start.next(text, _)) { m =>
         val title = s"${m.group(1)} ${m.group(2)}"
         val titleKey = Py.strip(Py.lower(title).replace(".", ""))
         if (!seen.contains(titleKey)) {
@@ -351,11 +371,19 @@ object RefAnalyzers {
       "Acknowledgment(?:s)?|References|Appendix)" +
       "\\s*(?:\\n|$)"), Py.CASE_I | Py.MULTI)
 
+  /** The first position ≥ `from` where `(?:^|\n)` can match under
+    * MULTILINE and UNIX_LINES, or -1: a '\n', or the start of a line
+    * that is not the end of the text. */
+  private def lineStart(text: String, from: Int): Int =
+    if (from >= text.length) -1
+    else if (from == 0 || text.charAt(from - 1) == '\n') from
+    else text.indexOf('\n', from)
+
   /** Section structure (/root/reference/app_enhanced.py:242-279). */
   def extractSections(text: String): Vector[SectionRef] = {
     val out = Vector.newBuilder[SectionRef]
-    val m = sectionHeaderPat.matcher(text)
-    while (m.find()) {
+    // a header match starts at a line start or at its '\n'
+    matchesAt(sectionHeaderPat, text, lineStart(text, _)) { m =>
       val number = Py.strip(Option(m.group(1)).getOrElse(""))
       val name = Py.strip(m.group(2))
       val cpStart = Py.cpIndex(text, m.start())
@@ -374,54 +402,150 @@ object RefAnalyzers {
   }
 
   // --------------------------------------------------------------- E10
-  private val eqPatterns: Array[Pattern] = Array(
-    Py.pat(ws("(?:Equation|Eq\\.?)\\s*\\(?(\\d+)\\)?\\s*[:.]?\\s*([^\\n]+)"), Py.MULTI | Py.CASE_I),
-    Py.pat(ws("(\\([0-9]+\\))\\s*$.*?([A-Za-z].*?=.*?)(?:\\n|$)"), Py.MULTI | Py.CASE_I),
-    Py.pat(ws("([A-Z][a-z]*\\([^)]+\\))\\s*=\\s*([^,.\\n]+)"), Py.MULTI | Py.CASE_I),
-    Py.pat(ws("((?:Attention|Loss|Softmax|ReLU|BLEU)\\s*\\([^)]*\\))\\s*=\\s*([^\\n]+)"), Py.MULTI | Py.CASE_I))
-  /** Math patterns 1-2 get a `(?<![A-Za-z])` start guard: a match can
-    * never begin directly after a letter (any suffix of a failed
-    * `[A-Za-z]+` run fails on the identical following context), so the
-    * guard is semantics-preserving (fuzz-verified) and turns the
-    * quadratic per-word retry into a linear scan. */
-  private val mathPatterns: Array[Pattern] = Array(
-    Py.pat(ws("(?<![A-Za-z])[A-Za-z]+\\s*=\\s*(?:softmax|sigmoid|tanh|exp|log|sum|max|min)\\s*\\([^)]+\\)")),
-    Py.pat(ws("(?<![A-Za-z])[A-Za-z]+\\s*=\\s*\\d+\\s*[×*/+-]\\s*[A-Za-z0-9]+")),
-    Py.pat("∑|∏|∫|√|∂|∇|α|β|γ|θ|λ|σ|μ"))
+  private val eqFlags = Py.MULTI | Py.CASE_I
+  private val eqNumbered = Py.pat(ws("(?:Equation|Eq\\.?)\\s*\\(?(\\d+)\\)?\\s*[:.]?\\s*([^\\n]+)"), eqFlags)
+  private[kg] val eqNumberedStart = letterFolds.filter("E", eqFlags)
+  /** Start guard `(?<![A-Z])`, under the pattern's own flags. A match
+    * never begins directly after a code point `[A-Z]` matches: its own
+    * first code point matches `[A-Z]` too, and under `Py.CASE_I` every
+    * such code point also matches `[a-z]` (KernelSpec enumerates both
+    * sets), so the start one code point earlier matches the identical
+    * continuation through `[a-z]*`, and `find()` tries it first (it is
+    * never inside the previous match, which ends before ',', '.', '\n'
+    * or the end). The guard is semantics-preserving and makes every
+    * start inside a word fail at once. */
+  private val eqCall = Py.pat(ws("(?<![A-Z])([A-Z][a-z]*\\([^)]+\\))\\s*=\\s*([^,.\\n]+)"), eqFlags)
+  private val eqNamed = Py.pat(ws("((?:Attention|Loss|Softmax|ReLU|BLEU)\\s*\\([^)]*\\))\\s*=\\s*([^\\n]+)"), eqFlags)
+  private[kg] val eqNamedStart = letterFolds.filter("A|L|S|R|B", eqFlags)
+  /** Two of the reference's seven scans are not run, because neither can
+    * ever emit (the same dead code is in the reference):
+    *  - the second equation scan, `(\([0-9]+\))\s*$.*?([A-Za-z].*?=.*?)(?:\n|$)`:
+    *    after its `$` the next char is '\n' or there is none, and
+    *    neither `.` nor `[A-Za-z]` matches '\n', so it never matches;
+    *  - the third math scan, the glyph alternation
+    *    `∑|∏|∫|√|∂|∇|α|β|γ|θ|λ|σ|μ`: each match is one code point, which
+    *    the `Py.len(content) > 5` check rejects. */
+  private val mathCall = Py.pat(ws("[A-Za-z]+\\s*=\\s*(?:softmax|sigmoid|tanh|exp|log|sum|max|min)\\s*\\([^)]+\\)"))
+  private val mathArith = Py.pat(ws("[A-Za-z]+\\s*=\\s*\\d+\\s*[×*/+-]\\s*[A-Za-z0-9]+"))
+
+  /** The first position ≥ `from` where `eqCall` can start, or -1. Its
+    * `[A-Z][a-z]*\(` is a run of `letterFolds` code points ending at a
+    * '(', so from each '(' walk back over that set, to `from` at most.
+    * Every position of the run is a candidate; the start guard rejects
+    * at once each one that follows an `[A-Z]` code point. */
+  private def callStart(text: String, from: Int): Int = {
+    var paren = text.indexOf('(', from)
+    while (paren >= 0) {
+      var start = paren
+      while (start > from && letterFolds.contains(text.codePointBefore(start)))
+        start -= Character.charCount(text.codePointBefore(start))
+      if (start < paren) return start
+      paren = text.indexOf('(', paren + 1)
+    }
+    -1
+  }
+
+  private def isAsciiLetter(c: Char): Boolean = (c >= 'A' && c <= 'Z') || (c >= 'a' && c <= 'z')
+
+  /** The first position ≥ `from` where `[A-Za-z]+\s*=` can start, or
+    * -1. Such a match is a maximal ASCII-letter run (it cannot end early:
+    * the next char would be a letter, neither whitespace nor '='), then
+    * whitespace, then '='; so from each '=' walk back over `Py.isPyWs`,
+    * then over ASCII letters, to the run start. A run that starts before
+    * `from` is skipped, as `find()` skips it: there every later letter
+    * follows a letter, so no start inside it can be a run start. This
+    * is the math scans' former `(?<![A-Za-z])` guard, applied before the
+    * regex runs. */
+  private def assignmentStart(text: String, from: Int): Int = {
+    var eq = text.indexOf('=', from)
+    while (eq >= 0) {
+      var end = eq
+      while (end > 0 && Py.isPyWs(text.charAt(end - 1))) end -= 1
+      var start = end
+      while (start > 0 && isAsciiLetter(text.charAt(start - 1))) start -= 1
+      if (start < end && start >= from) return start
+      eq = text.indexOf('=', eq + 1)
+    }
+    -1
+  }
 
   /** Equation extraction with exact-content dedup, first-wins ids, cap 20
     * (/root/reference/app_enhanced.py:695-745). */
   def extractEquations(text: String): Vector[Equation] = {
+    // Each scan tries a start only where its required literal is: the
+    // `Equation`/`Eq` and named-function scans at their first atom's code
+    // points, the call scan at the letter run before each '(', the math
+    // scans at the letter run before each '='. All but the first need a
+    // literal '=', so a page without one runs only the first.
     val out = ArrayBuffer.empty[Equation]
     val seen = mutable.Set.empty[String]
-    var id = 1
-    // patterns 2-4 and math 1-2 all require a literal '=' somewhere in the
-    // match; most real web pages have none — one indexOf gates five scans
-    val hasEq = text.indexOf('=') >= 0
-    val activeEq = if (hasEq) eqPatterns else eqPatterns.take(1)
-    val activeMath = if (hasEq) mathPatterns else Array(mathPatterns(2))
-    for (p <- activeEq) {
-      val m = p.matcher(text)
-      while (m.find()) {
-        val content = Py.strip(m.group(0))
-        if (!seen.contains(content) && Py.len(content) > 10) {
-          seen += content
-          out += Equation(id, Py.slice(content, 200), math.max(1, Py.cpIndex(text, m.start()) / 3000 + 1))
-          id += 1
-        }
+    def emit(minLen: Int, cap: Int)(m: Matcher): Unit = {
+      val content = Py.strip(m.group(0))
+      if (!seen.contains(content) && Py.len(content) > minLen) {
+        seen += content
+        out += Equation(out.length + 1, Py.slice(content, cap), math.max(1, Py.cpIndex(text, m.start()) / 3000 + 1))
       }
     }
-    for (p <- activeMath) {
-      val m = p.matcher(text)
-      while (m.find()) {
-        val content = Py.strip(m.group(0))
-        if (!seen.contains(content) && Py.len(content) > 5) {
-          seen += content
-          out += Equation(id, Py.slice(content, 150), math.max(1, Py.cpIndex(text, m.start()) / 3000 + 1))
-          id += 1
-        }
-      }
+    val eq = emit(10, 200) _
+    matchesAt(eqNumbered, text, eqNumberedStart.next(text, _))(eq)
+    if (text.indexOf('=') >= 0) {
+      matchesAt(eqCall, text, callStart(text, _))(eq)
+      matchesAt(eqNamed, text, eqNamedStart.next(text, _))(eq)
+      matchesAt(mathCall, text, assignmentStart(text, _))(emit(5, 150))
+      matchesAt(mathArith, text, assignmentStart(text, _))(emit(5, 150))
     }
     out.take(20).toVector
+  }
+
+  /** Every match `p.matcher(text).find()` reports, given that a match can
+    * start only at the positions `next` yields (`next(from)`: the first
+    * candidate ≥ `from`, or -1). Each candidate is tried with `lookingAt`
+    * on a region that starts there, with transparent, non-anchoring
+    * bounds, so lookarounds, `^` and `$` see the whole text exactly as
+    * under `find()`; positions between candidates are never tried. `p`
+    * must not match the empty string (the next search starts at the
+    * match end). */
+  private def matchesAt(p: Pattern, text: String, next: Int => Int)(f: Matcher => Unit): Unit = {
+    val m = p.matcher(text).useTransparentBounds(true).useAnchoringBounds(false)
+    var at = next(0)
+    while (at >= 0) {
+      m.region(at, text.length)
+      at = if (m.lookingAt()) { f(m); next(m.end()) } else next(at + 1)
+    }
+  }
+
+  /** A set of code points, for the anchored scans' candidate tests. */
+  private[kg] final class CodePointSet private (val codePoints: Array[Int]) {
+    private val members = new java.util.BitSet
+    codePoints.foreach(members.set)
+
+    def contains(cp: Int): Boolean = members.get(cp)
+
+    /** The members the one-code-point regex `atom` matches under `flags`. */
+    def filter(atom: String, flags: Int): CodePointSet = CodePointSet.matching(atom, flags, codePoints)
+
+    /** First UTF-16 index ≥ `from` whose code point is in the set, or -1.
+      * Like `find()` on a pattern without supplementary literals, every
+      * char index is a candidate (a lone surrogate is its own code point). */
+    def next(s: String, from: Int): Int = {
+      var i = from
+      while (i < s.length && !members.get(s.codePointAt(i))) i += 1
+      if (i < s.length) i else -1
+    }
+  }
+
+  private[kg] object CodePointSet {
+    /** The code points the one-code-point regex `atom` matches under
+      * `flags`, found by matching every code point against it, never
+      * listed by hand: under `Py.CASE_I` a letter also matches its Unicode
+      * case folds (`K` matches U+212A KELVIN SIGN, `S` matches U+017F LONG
+      * S), which an ASCII set would drop. */
+    def enumerate(atom: String, flags: Int): CodePointSet =
+      matching(atom, flags, 0 to Character.MAX_CODE_POINT)
+
+    private def matching(atom: String, flags: Int, candidates: IndexedSeq[Int]): CodePointSet = {
+      val m = Py.pat(atom, flags).matcher("")
+      new CodePointSet(candidates.filter(cp => m.reset(Character.toString(cp)).matches()).toArray)
+    }
   }
 }

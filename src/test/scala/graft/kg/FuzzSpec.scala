@@ -6,7 +6,7 @@ import org.json4s.jackson.JsonMethods
 
 /** 250 random adversarial documents with reference-computed outputs
   * (tools/gen_goldens.py `fuzz` section) — guards the optimized kernel
-  * paths (dead-pattern skipping, guarded equation scans) against any
+  * paths (dead-pattern skipping, literal-anchored equation scans) against any
   * semantic drift. */
 class FuzzSpec extends AnyFunSuite {
 
@@ -38,6 +38,12 @@ class FuzzSpec extends AnyFunSuite {
       }
       assert(got == want, s"$name input=${str(c \ "input").take(120)}")
     }
+  }
+
+  test("fuzz docs: every anchored equation scan emits on some doc") {
+    val emitting = fuzz.flatMap { case (_, c) => SeedKernels.equationsByScan(str(c \ "input")).map(_._1) }.toSet
+    for (scan <- Seq("eqNumbered", "eqCall", "eqNamed", "mathCall", "mathArith"))
+      assert(emitting.contains(scan), s"no golden fuzz doc makes $scan emit")
   }
 
   test("fuzz docs: technical terms identical (term, freq)") {
