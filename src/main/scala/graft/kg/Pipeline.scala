@@ -291,7 +291,7 @@ object Pipeline {
   }
 
   // ---------------------------------------------------------- orchestration
-  private def stageDone(spark: SparkSession, path: String): Boolean = {
+  private[kg] def stageDone(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }

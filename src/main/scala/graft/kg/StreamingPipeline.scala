@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.kg.Schema._
+import org.apache.hadoop.fs.{FileSystem, Path}
+import java.nio.charset.StandardCharsets.UTF_8
 
 /** Streaming ingest path: the KG extract→clean→triples stages are narrow
   * per-row transforms, so they apply unchanged to a streaming
@@ -103,6 +105,9 @@ object StreamingPipeline {
     import org.apache.spark.sql.streaming.Trigger
     val triplesPath = s"$workDir/triples_stream"
     val lineagePath = s"$workDir/stream_lineage"
+    // all fold bookkeeping goes through the work dir's Hadoop FileSystem,
+    // so a `file:` URI or a remote store behaves like a local path
+    val fs = new Path(workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // a micro-batch is as parallel as its FILE COUNT (one scan split per
     // small file), so a 1-file trigger runs the regex-heavy extraction
     // nearly single-core. extractParallelism > 0 repartitions the pages
@@ -133,7 +138,7 @@ object StreamingPipeline {
           .write.mode(SaveMode.Overwrite).parquet(s"$lineagePath/batch_id=$batchId")
         batch.unpersist(false)
         if (recanonEvery > 0 && (batchId + 1) % recanonEvery == 0)
-          recanonicalize(spark, workDir)
+          recanonicalize(spark, fs, workDir)
         ()
       }
       .start()
@@ -151,36 +156,30 @@ object StreamingPipeline {
     // while the mid-stream cadence keeps the cheap seeded freshness
     // path. This is the streaming-systems compaction idiom: incremental
     // folds for latency, periodic exact folds to heal drift.
-    val landed = landedTriples(spark, workDir)
-    val (covered, exact) = coverage(workDir)
+    val landed =
+      if (fs.exists(new Path(triplesPath))) spark.read.parquet(triplesPath).count() else 0L
+    val (covered, exact) = coverage(fs, workDir)
     if (landed > 0 && !(exact && covered == landed))
-      recanonicalize(spark, workDir, seeded = false)
-  }
-
-  private def landedTriples(spark: SparkSession, workDir: String): Long = {
-    val p = new java.io.File(s"$workDir/triples_stream")
-    if (!p.isDirectory) 0L
-    else spark.read.parquet(p.toString).count()
+      recanonicalize(spark, fs, workDir, seeded = false)
   }
 
   /** (covered triples rows, was-exact) of the LATEST labels version —
     * a fold is exact when it ran a full CC (no seed), which the shipped
     * tables must always come from. */
-  private def coverage(workDir: String): (Long, Boolean) =
-    latestVersion(workDir)
-      .map(v => new java.io.File(s"$workDir/cc_labels/v$v/_covered_rows.txt"))
-      .filter(_.isFile)
+  private def coverage(fs: FileSystem, workDir: String): (Long, Boolean) =
+    latestVersion(fs, workDir)
+      .map(v => new Path(s"$workDir/cc_labels/v$v/_covered_rows.txt"))
+      .filter(fs.exists)
       .map { f =>
-        val parts = new String(java.nio.file.Files.readAllBytes(f.toPath)).trim.split(" ")
+        val in = fs.open(f)
+        val parts = try new String(in.readAllBytes(), UTF_8).trim.split(" ") finally in.close()
         (parts(0).toLong, parts.length > 1 && parts(1) == "exact")
       }
       .getOrElse((0L, false))
 
-  private def latestVersion(workDir: String): Option[Int] =
-    Option(new java.io.File(s"$workDir/cc_labels").listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("v") &&
-        new java.io.File(f, "_SUCCESS").exists())
-      .map(_.getName.drop(1).toInt)
+  private def latestVersion(fs: FileSystem, workDir: String): Option[Int] =
+    Option(fs.globStatus(new Path(s"$workDir/cc_labels/v*/_SUCCESS"))).toSeq.flatten
+      .map(_.getPath.getParent.getName.drop(1).toInt)
       .sorted.lastOption
 
   /** One re-canonicalization pass over the accumulated streamed triples:
@@ -190,7 +189,7 @@ object StreamingPipeline {
     * because overwriting the parquet a lazy plan is still reading is the
     * classic self-overwrite corruption; versioning also gives the resume
     * story — a crashed pass leaves the previous version intact. */
-  private def recanonicalize(spark: SparkSession, workDir: String,
+  private def recanonicalize(spark: SparkSession, fs: FileSystem, workDir: String,
       seeded: Boolean = true): Unit = {
     import spark.implicits._
     val raw = spark.read.parquet(s"$workDir/triples_stream")
@@ -212,38 +211,35 @@ object StreamingPipeline {
     val linkedPath = s"$workDir/link_stage/linked_$nCovered"
     val aliasPath = s"$workDir/link_stage/alias_$nCovered"
     val graphPath = s"$workDir/link_stage/graph_$nCovered"
-    def stDone(p: String) = new java.io.File(p, "_SUCCESS").isFile
-    if (!(stDone(linkedPath) && stDone(aliasPath) && stDone(graphPath))) {
+    if (!Seq(linkedPath, aliasPath, graphPath).forall(Pipeline.stageDone(spark, _))) {
       val triples = raw.drop("batch").as[Triple]
       val resolved = EntityLinking.resolve(spark, triples)
-      // materialize linking ONCE for the three stage writes (the two
-      // below run as concurrent jobs; block-level cache dedup scans the
-      // linking DAG once)
-      val linkedP = resolved.linked.toDF()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val aliasP = resolved.aliasEdges
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // two independent outputs sharing resolve's persisted ambiguity
+      // split, overlapped as concurrent jobs like the batch pipeline's
       Pipeline.inParallel(Seq(
-        () => linkedP.write.mode(SaveMode.Overwrite).parquet(linkedPath),
-        () => aliasP.write.mode(SaveMode.Overwrite).parquet(aliasPath)))
+        () => resolved.linked.toDF().write.mode(SaveMode.Overwrite).parquet(linkedPath),
+        () => resolved.aliasEdges.write.mode(SaveMode.Overwrite).parquet(aliasPath)))
+      resolved.unpersistCached()
       // the CC input graph (alias ∪ name-similarity edges) is
       // vocabulary-sized; checkpointing it means no CC action ever
-      // replays the name-blocking pipeline
-      Pipeline.ccEdges(linkedP, aliasP)
+      // replays the name-blocking pipeline. Rule (as in Pipeline.run): a
+      // stage's consumers read its checkpoint, never a persisted
+      // DataFrame whose plan is the stage's DAG. Over a cache of resolve
+      // this write ran 18-19 jobs / 2.2-2.3 s (400 pages, 4-core VM), the
+      // cached DAG repeated under every blocking branch; over the parquet
+      // 9-11 jobs / 0.9-1.6 s, same edges.
+      Pipeline.ccEdges(spark.read.parquet(linkedPath), spark.read.parquet(aliasPath))
         .write.mode(SaveMode.Overwrite).parquet(graphPath)
-      linkedP.unpersist(false)
-      aliasP.unpersist(false)
-      resolved.unpersistCached()
     }
     val linkedCk = spark.read.parquet(linkedPath)
     val prev =
       if (!seeded) None
-      else latestVersion(workDir).map(v => spark.read.parquet(s"$workDir/cc_labels/v$v"))
+      else latestVersion(fs, workDir).map(v => spark.read.parquet(s"$workDir/cc_labels/v$v"))
     val canonical = Pipeline.canonicalize(
       spark, linkedCk.as[Schema.LinkedMention],
       spark.read.parquet(aliasPath), prev,
       preGraph = Some(spark.read.parquet(graphPath)))
-    val next = latestVersion(workDir).getOrElse(0) + 1
+    val next = latestVersion(fs, workDir).getOrElse(0) + 1
     // labels first (nodes/edges derive from the same plan; any failure
     // here leaves the previous version live), then the two outputs
     canonical.labels.write.mode(SaveMode.Overwrite)
@@ -257,9 +253,8 @@ object StreamingPipeline {
     // require. (A production table format records this as snapshot
     // metadata.)
     val mode = if (prev.isEmpty) "exact" else "seeded"
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$workDir/cc_labels/v$next/_covered_rows.txt"),
-      s"$nCovered $mode".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val marker = fs.create(new Path(s"$workDir/cc_labels/v$next/_covered_rows.txt"), true)
+    try marker.write(s"$nCovered $mode".getBytes(UTF_8)) finally marker.close()
     // both outputs read the same persisted label table — overlap the two
     // writes as concurrent jobs exactly like the batch pipeline does
     Pipeline.inParallel(Seq(
@@ -270,9 +265,9 @@ object StreamingPipeline {
     // coverage's linking stage is dead — later folds cover more rows,
     // and the drain fold can only reuse this one. Without the prune
     // link_stage grows as O(folds × corpus) on tmpfs.
-    Option(new java.io.File(s"$workDir/link_stage").listFiles()).toSeq.flatten
+    fs.listStatus(new Path(s"$workDir/link_stage")).map(_.getPath)
       .filterNot(_.getName.endsWith(s"_$nCovered"))
-      .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+      .foreach(fs.delete(_, true))
   }
 
   /** Per-entity running state over the stream. */

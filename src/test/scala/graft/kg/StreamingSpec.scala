@@ -133,7 +133,27 @@ class StreamingSpec extends AnyFunSuite {
     val pages = spark.readStream.schema(StreamingPipeline.pageSchema)
       .option("maxFilesPerTrigger", 1).parquet(dir).as[Schema.Page]
     val work = Files.createTempDirectory("kginc").toString
-    StreamingPipeline.runIncremental(spark, pages, work, recanonEvery = 2)
+    // plan gate: every CC-graph checkpoint write reads the linking
+    // checkpoints from parquet, never a cached linking DAG
+    val graphWrites = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]()
+    val gate = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit = {
+        val plan = qe.optimizedPlan
+        plan.collectFirst {
+          case w: org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+              if w.outputPath.toString.contains("/link_stage/graph_") => w.outputPath.toString
+        }.foreach { out =>
+          graphWrites.add((out, plan.exists(
+            _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation])))
+        }
+      }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(gate)
+    try StreamingPipeline.runIncremental(spark, pages, work, recanonEvery = 2)
+    finally spark.listenerManager.unregister(gate)
 
     val batchDir = Files.createTempDirectory("kgincb").toString
     val batchRes = Pipeline.run(spark, PagesGen.pages(spark, nDocs),
@@ -165,5 +185,39 @@ class StreamingSpec extends AnyFunSuite {
     val stages = new java.io.File(s"$work/link_stage").listFiles().map(_.getName)
     val coverages = stages.map(n => n.substring(n.lastIndexOf('_') + 1).toLong).toSet
     assert(coverages == Set(landed), stages.sorted.mkString(","))
+    // listener delivery is asynchronous: wait for the first graph write
+    val deadline = System.currentTimeMillis + 20000L
+    while (graphWrites.isEmpty && System.currentTimeMillis < deadline) Thread.sleep(50)
+    assert(!graphWrites.isEmpty, "no write under link_stage/graph_ was observed")
+    graphWrites.forEach { case (out, cached) =>
+      assert(!cached, s"$out: the CC graph write plans over an InMemoryRelation")
+    }
+  }
+
+  test("incremental streaming KG build on a file: URI work dir: stream == batch") {
+    val nDocs = 90L
+    val dir = Files.createTempDirectory("pages_uri").toString
+    // 3 micro-batches, folding every 2nd: the drain fold runs only if the
+    // landed count read through the URI has moved past the fold's marker
+    PagesGen.pages(spark, nDocs).repartition(3).write.mode("overwrite").parquet(dir)
+    val pages = spark.readStream.schema(StreamingPipeline.pageSchema)
+      .option("maxFilesPerTrigger", 1).parquet(dir).as[Schema.Page]
+    // a URI, not a bare path: every fold bookkeeping site (landed count,
+    // coverage marker, label versions, stage markers, link_stage prune)
+    // must resolve it through the Hadoop FileSystem
+    val work = new java.io.File(Files.createTempDirectory("kgincuri").toString).toURI.toString
+    assert(work.startsWith("file:"))
+    StreamingPipeline.runIncremental(spark, pages, work, recanonEvery = 2)
+
+    val batchRes = Pipeline.run(spark, PagesGen.pages(spark, nDocs),
+      Pipeline.Config(Files.createTempDirectory("kgincurib").toString, nPartitions = 2))
+    def proj(df: org.apache.spark.sql.DataFrame, cols: String*) =
+      df.select(cols.map(org.apache.spark.sql.functions.col): _*)
+        .collect().map(_.mkString("|")).toSet
+    assert(proj(spark.read.parquet(s"$work/nodes_stream"),
+      "canonical_name", "kind", "n_mentions", "n_urls")
+      == proj(batchRes.nodes, "canonical_name", "kind", "n_mentions", "n_urls"))
+    assert(proj(spark.read.parquet(s"$work/edges_stream"), "src_url", "dst_name", "weight")
+      == proj(batchRes.edges, "src_url", "dst_name", "weight"))
   }
 }
