@@ -3,6 +3,7 @@ package graft.kg
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.kg.Schema._
+import graft.kg.io.Ledger
 
 /** The KG-construction pipeline (north_star): extract → clean → triple
   * extraction → entity linking → canonicalization (CC) → nodes/edges.
@@ -291,11 +292,6 @@ object Pipeline {
   }
 
   // ---------------------------------------------------------- orchestration
-  private[kg] def stageDone(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   private def writeStage(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(path)
 
@@ -344,10 +340,9 @@ object Pipeline {
         // previous JVM's write; with a persistent metastore, tableExists
         // is true and resume skips this whole write instead).
         if (!spark.catalog.tableExists(tbl(stage))) {
-          val wh = spark.conf.get("spark.sql.warehouse.dir")
-            .stripPrefix("file:")
-          org.apache.commons.io.FileUtils.deleteQuietly(
-            new java.io.File(wh, tbl(stage).toLowerCase))
+          val loc = new org.apache.hadoop.fs.Path(
+            spark.conf.get("spark.sql.warehouse.dir"), tbl(stage).toLowerCase)
+          loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
         }
         df.write.mode(SaveMode.Overwrite)
           .bucketBy(cfg.buckets, bucketCols(stage)).sortBy(bucketCols(stage))
@@ -355,7 +350,7 @@ object Pipeline {
       } else writeStage(df, path)
     def ckDone(stage: String, path: String): Boolean =
       if (useBuckets(stage)) spark.catalog.tableExists(tbl(stage))
-      else stageDone(spark, path)
+      else Ledger.complete(spark, path)
     def ckRead(stage: String, path: String): DataFrame =
       if (useBuckets(stage)) spark.table(tbl(stage)) else spark.read.parquet(path)
 
@@ -416,7 +411,7 @@ object Pipeline {
     // similarity resolution (EntityLinking); both outputs checkpointed
     val linkedPath = s"${cfg.workDir}/linked_mentions"
     val (aliasDf, linkedDf) =
-      if (cfg.resume && stageDone(spark, aliasPath) && ckDone("linked_mentions", linkedPath)) {
+      if (cfg.resume && Ledger.complete(spark, aliasPath) && ckDone("linked_mentions", linkedPath)) {
         (spark.read.parquet(aliasPath), ckRead("linked_mentions", linkedPath))
       } else {
         val t0 = System.nanoTime()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.kg.Schema._
+import graft.kg.io.Ledger
 import org.apache.hadoop.fs.{FileSystem, Path}
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -108,6 +109,7 @@ object StreamingPipeline {
     // all fold bookkeeping goes through the work dir's Hadoop FileSystem,
     // so a `file:` URI or a remote store behaves like a local path
     val fs = new Path(workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val labels = new Ledger(spark, s"$workDir/cc_labels", "v")
     // a micro-batch is as parallel as its FILE COUNT (one scan split per
     // small file), so a 1-file trigger runs the regex-heavy extraction
     // nearly single-core. extractParallelism > 0 repartitions the pages
@@ -138,7 +140,7 @@ object StreamingPipeline {
           .write.mode(SaveMode.Overwrite).parquet(s"$lineagePath/batch_id=$batchId")
         batch.unpersist(false)
         if (recanonEvery > 0 && (batchId + 1) % recanonEvery == 0)
-          recanonicalize(spark, fs, workDir)
+          recanonicalize(spark, fs, workDir, labels)
         ()
       }
       .start()
@@ -158,17 +160,17 @@ object StreamingPipeline {
     // folds for latency, periodic exact folds to heal drift.
     val landed =
       if (fs.exists(new Path(triplesPath))) spark.read.parquet(triplesPath).count() else 0L
-    val (covered, exact) = coverage(fs, workDir)
+    val (covered, exact) = coverage(fs, labels)
     if (landed > 0 && !(exact && covered == landed))
-      recanonicalize(spark, fs, workDir, seeded = false)
+      recanonicalize(spark, fs, workDir, labels, seeded = false)
   }
 
   /** (covered triples rows, was-exact) of the LATEST labels version —
     * a fold is exact when it ran a full CC (no seed), which the shipped
     * tables must always come from. */
-  private def coverage(fs: FileSystem, workDir: String): (Long, Boolean) =
-    latestVersion(fs, workDir)
-      .map(v => new Path(s"$workDir/cc_labels/v$v/_covered_rows.txt"))
+  private def coverage(fs: FileSystem, labels: Ledger): (Long, Boolean) =
+    labels.latest()
+      .map(v => new Path(labels.path(v), "_covered_rows.txt"))
       .filter(fs.exists)
       .map { f =>
         val in = fs.open(f)
@@ -176,11 +178,6 @@ object StreamingPipeline {
         (parts(0).toLong, parts.length > 1 && parts(1) == "exact")
       }
       .getOrElse((0L, false))
-
-  private def latestVersion(fs: FileSystem, workDir: String): Option[Int] =
-    Option(fs.globStatus(new Path(s"$workDir/cc_labels/v*/_SUCCESS"))).toSeq.flatten
-      .map(_.getPath.getParent.getName.drop(1).toInt)
-      .sorted.lastOption
 
   /** One re-canonicalization pass over the accumulated streamed triples:
     * link → canonicalize (CC seeded by the previous labeling when one
@@ -190,7 +187,7 @@ object StreamingPipeline {
     * classic self-overwrite corruption; versioning also gives the resume
     * story — a crashed pass leaves the previous version intact. */
   private def recanonicalize(spark: SparkSession, fs: FileSystem, workDir: String,
-      seeded: Boolean = true): Unit = {
+      labels: Ledger, seeded: Boolean = true): Unit = {
     import spark.implicits._
     val raw = spark.read.parquet(s"$workDir/triples_stream")
     // count the covered rows for the on-disk staleness ledger — and as
@@ -208,10 +205,9 @@ object StreamingPipeline {
     // MinHash name-blocking end to end (the dominant fold cost). Also
     // the crash-restart story: a fold interrupted after this stage
     // resumes from parquet.
-    val linkedPath = s"$workDir/link_stage/linked_$nCovered"
-    val aliasPath = s"$workDir/link_stage/alias_$nCovered"
-    val graphPath = s"$workDir/link_stage/graph_$nCovered"
-    if (!Seq(linkedPath, aliasPath, graphPath).forall(Pipeline.stageDone(spark, _))) {
+    val stages = Seq("linked_", "alias_", "graph_").map(new Ledger(spark, s"$workDir/link_stage", _))
+    val Seq(linkedPath, aliasPath, graphPath) = stages.map(_.path(nCovered))
+    if (!Seq(linkedPath, aliasPath, graphPath).forall(Ledger.complete(spark, _))) {
       val triples = raw.drop("batch").as[Triple]
       val resolved = EntityLinking.resolve(spark, triples)
       // two independent outputs sharing resolve's persisted ambiguity
@@ -232,18 +228,16 @@ object StreamingPipeline {
         .write.mode(SaveMode.Overwrite).parquet(graphPath)
     }
     val linkedCk = spark.read.parquet(linkedPath)
-    val prev =
-      if (!seeded) None
-      else latestVersion(fs, workDir).map(v => spark.read.parquet(s"$workDir/cc_labels/v$v"))
+    val base = labels.latest()
+    val prev = if (seeded) base.map(v => spark.read.parquet(labels.path(v))) else None
     val canonical = Pipeline.canonicalize(
       spark, linkedCk.as[Schema.LinkedMention],
       spark.read.parquet(aliasPath), prev,
       preGraph = Some(spark.read.parquet(graphPath)))
-    val next = latestVersion(fs, workDir).getOrElse(0) + 1
+    val next = base.getOrElse(0L) + 1
     // labels first (nodes/edges derive from the same plan; any failure
     // here leaves the previous version live), then the two outputs
-    canonical.labels.write.mode(SaveMode.Overwrite)
-      .parquet(s"$workDir/cc_labels/v$next")
+    canonical.labels.write.mode(SaveMode.Overwrite).parquet(labels.path(next))
     // coverage marker: how many triples rows this version folded and
     // whether the fold was EXACT (a full CC — prev empty — vs a seeded
     // incremental). runIncremental's staleness check compares it
@@ -253,7 +247,7 @@ object StreamingPipeline {
     // require. (A production table format records this as snapshot
     // metadata.)
     val mode = if (prev.isEmpty) "exact" else "seeded"
-    val marker = fs.create(new Path(s"$workDir/cc_labels/v$next/_covered_rows.txt"), true)
+    val marker = fs.create(new Path(labels.path(next), "_covered_rows.txt"), true)
     try marker.write(s"$nCovered $mode".getBytes(UTF_8)) finally marker.close()
     // both outputs read the same persisted label table — overlap the two
     // writes as concurrent jobs exactly like the batch pipeline does
@@ -261,13 +255,13 @@ object StreamingPipeline {
       () => canonical.nodes.write.mode(SaveMode.Overwrite).parquet(s"$workDir/nodes_stream"),
       () => canonical.edges.write.mode(SaveMode.Overwrite).parquet(s"$workDir/edges_stream")))
     canonical.unpersistCached()
-    // this fold has landed (labels version + both outputs): every OTHER
-    // coverage's linking stage is dead — later folds cover more rows,
-    // and the drain fold can only reuse this one. Without the prune
-    // link_stage grows as O(folds × corpus) on tmpfs.
-    fs.listStatus(new Path(s"$workDir/link_stage")).map(_.getPath)
-      .filterNot(_.getName.endsWith(s"_$nCovered"))
-      .foreach(fs.delete(_, true))
+    // this fold has landed (labels version + both outputs): labels older
+    // than its base and every smaller coverage's linking stage are dead
+    // (coverages only grow within a run, and the drain fold can only
+    // reuse this one). Without the prune link_stage grows as
+    // O(folds × corpus) and cc_labels as O(folds × vocabulary) on tmpfs.
+    labels.prune(base.getOrElse(next))
+    stages.foreach(_.prune(nCovered))
   }
 
   /** Per-entity running state over the stream. */

@@ -39,10 +39,7 @@ final class ParquetTableIO(root: String, buckets: Int = 0, bucketCol: String = "
     }
   }
 
-  def exists(spark: SparkSession, table: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path(table), "_SUCCESS")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  def exists(spark: SparkSession, table: String): Boolean = Ledger.complete(spark, path(table))
 }
 
 /** Spark-native BUCKETED managed tables — the executable local analog

@@ -291,10 +291,13 @@ object StreamingQueries {
     // facts), and the converged view must equal a single-pass GROUP BY
     // over ALL the facts. The fold itself is plain batch code inside
     // foreachBatch; each fold lands in a batchId-NAMED versioned dir
-    // (read latest < b, write b, _SUCCESS-gated) — so an at-least-once
-    // REPLAY of batch b overwrites version b with the identical fold of
-    // the identical input instead of double-counting it, and a restart
-    // resumes from the last durable version. State here is the
+    // of a kg.io.Ledger (read latest < b, write b, _SUCCESS-gated) — so
+    // an at-least-once REPLAY of batch b overwrites version b with the
+    // identical fold of the identical input instead of double-counting
+    // it, and a restart resumes from the last durable version. After the
+    // write every version older than its base is pruned: {base, b} stay,
+    // so a replay of b still finds its base, and the summaries on tmpfs
+    // do not grow with the batch count. State here is the
     // key-sized summary ON DISK, not in the streaming store — which is
     // why MIN/MAX survive (complete/update-mode aggs could maintain
     // COUNT/SUM, but a streaming MIN over retractions cannot exist;
@@ -302,33 +305,24 @@ object StreamingQueries {
     "st_mv_refresh" -> ((s, dir) => {
       val work = TmpDirs.fresh("st_mv")
       val keys = Seq("event_type", "hour"); val ms = Seq("m1", "m2")
-      def versions(): Seq[Long] = {
-        val d = new java.io.File(work)
-        if (!d.isDirectory) Nil
-        else d.listFiles.toSeq
-          .filter(f => f.getName.startsWith("summary_v") &&
-            new java.io.File(f, "_SUCCESS").isFile)
-          .map(_.getName.stripPrefix("summary_v").toLong)
-      }
+      val summaries = new graft.kg.io.Ledger(s, work, "summary_v")
       val q = streamTbl(s, dir, "events")
         .select(col("event_type"), date_trunc("hour", col("ts")).as("hour"),
           (col("event_id") % 97).as("m1"), expr("nullif(user_id % 5, 0)").as("m2"))
         .writeStream
         .outputMode("append")
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val prev = versions().filter(_ < batchId)
-          val folded =
-            if (prev.isEmpty) graft.ops.Cdc.aggregateSummary(batch, keys, ms)
-            else graft.ops.Cdc.refreshSummary(
-              s.read.parquet(s"$work/summary_v${prev.max}"), batch, keys, ms)
-          folded.write.mode("overwrite").parquet(s"$work/summary_v$batchId")
-          ()
+          val base = summaries.latest(below = batchId)
+          val folded = base.fold(graft.ops.Cdc.aggregateSummary(batch, keys, ms))(v =>
+            graft.ops.Cdc.refreshSummary(s.read.parquet(summaries.path(v)), batch, keys, ms))
+          folded.write.mode("overwrite").parquet(summaries.path(batchId))
+          summaries.prune(base.getOrElse(batchId))
         }
         .option("checkpointLocation", s"$work/ckpt") // tmpfs (see runToSink)
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      s.read.parquet(s"$work/summary_v${versions().max}")
+      s.read.parquet(summaries.path(summaries.latest().get))
     }),
 
     // streaming EXACT DEDUP — the training-pipeline staple, stateful
@@ -375,14 +369,9 @@ object StreamingQueries {
     // over the final index or accept prefix-cap semantics.
     "st_delta_pairs" -> ((s, dir) => {
       val work = TmpDirs.fresh("st_dd")
-      def versions(prefix: String): Seq[Long] = {
-        val d = new java.io.File(work)
-        if (!d.isDirectory) Nil
-        else d.listFiles.toSeq
-          .filter(f => f.getName.startsWith(prefix + "_v") &&
-            new java.io.File(f, "_SUCCESS").isFile)
-          .map(_.getName.stripPrefix(prefix + "_v").toLong)
-      }
+      // the accumulated index IS the state: these versions are never pruned
+      val Seq(bands, shingles, pairs) =
+        Seq("bands_v", "sh_v", "pairs_v").map(new graft.kg.io.Ledger(s, work, _))
       val q = streamTbl(s, dir, "documents")
         .select(col("doc_id"), col("text"))
         .writeStream
@@ -401,27 +390,25 @@ object StreamingQueries {
                 graft.ops.Dedup.minhashShingles(shard, "doc_id", "text", 8, 8),
                 "doc_id", 4)
               .withColumn("ver", lit(batchId))
-              .write.mode("overwrite").parquet(s"$work/bands_v$batchId"),
+              .write.mode("overwrite").parquet(bands.path(batchId)),
             () => graft.ops.Dedup.charShingles(shard, "doc_id", "text", 8)
               .withColumnRenamed("shingle", "token")
-              .write.mode("overwrite").parquet(s"$work/sh_v$batchId")))
+              .write.mode("overwrite").parquet(shingles.path(batchId))))
           finally shard.unpersist(false)
-          val allBands = s.read.parquet(
-            versions("bands").filter(_ <= batchId).map(v => s"$work/bands_v$v"): _*)
-          val allSh = s.read.parquet(
-            versions("sh").filter(_ <= batchId).map(v => s"$work/sh_v$v"): _*)
-          val pairs = graft.ops.Dedup.deltaCandidatePairs(
+          val allBands = s.read.parquet(bands.upTo(batchId): _*)
+          val allSh = s.read.parquet(shingles.upTo(batchId): _*)
+          val candidates = graft.ops.Dedup.deltaCandidatePairs(
             allBands, col("ver") === batchId, "doc_id")
-          graft.ops.Dedup.jaccardVerify(pairs, allSh, "doc_id")
+          graft.ops.Dedup.jaccardVerify(candidates, allSh, "doc_id")
             .where(col("jaccard") >= 0.5)
-            .write.mode("overwrite").parquet(s"$work/pairs_v$batchId")
+            .write.mode("overwrite").parquet(pairs.path(batchId))
           ()
         }
         .option("checkpointLocation", s"$work/ckpt") // tmpfs (see runToSink)
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      s.read.parquet(versions("pairs").map(v => s"$work/pairs_v$v"): _*)
+      s.read.parquet(pairs.list.map(pairs.path): _*)
     }),
 
     // STREAM-STATIC enrichment join — the standard lambda shape for

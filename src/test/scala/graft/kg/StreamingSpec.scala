@@ -174,6 +174,9 @@ class StreamingSpec extends AnyFunSuite {
     val versions = new java.io.File(s"$work/cc_labels").listFiles()
       .filter(_.getName.startsWith("v")).map(_.getName).sorted
     assert(versions.length >= 2, versions.mkString(","))
+    // 3 folds (after batches 1 and 3, then the exact drain fold): each
+    // prunes cc_labels to its own version and that version's base
+    assert(versions.toSeq == Seq("v2", "v3"), versions.mkString(","))
     // per-batch lineage conserves rows: Σ lineage == triples landed
     val lineage = spark.read.parquet(s"$work/stream_lineage")
     assert(lineage.select("batch_id").distinct().count() == 4L)
@@ -219,5 +222,10 @@ class StreamingSpec extends AnyFunSuite {
       == proj(batchRes.nodes, "canonical_name", "kind", "n_mentions", "n_urls"))
     assert(proj(spark.read.parquet(s"$work/edges_stream"), "src_url", "dst_name", "weight")
       == proj(batchRes.edges, "src_url", "dst_name", "weight"))
+    // 2 folds (after batch 1, then the drain fold): the drain fold's
+    // version and its base survive the prune on a URI root too
+    val versions = new java.io.File(new java.net.URI(s"$work/cc_labels")).listFiles()
+      .map(_.getName).filter(_.startsWith("v")).sorted
+    assert(versions.toSeq == Seq("v1", "v2"), versions.mkString(","))
   }
 }
