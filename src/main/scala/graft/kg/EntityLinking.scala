@@ -3,6 +3,8 @@ package graft.kg
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.commons.codec.digest.DigestUtils
 import graft.kg.Schema.{LinkedMention, Triple}
 
 /** Entity linking (north_star: "alias-table + context-similarity entity
@@ -75,33 +77,87 @@ object EntityLinking {
     * components"): near-identical concept surface forms (plural/singular,
     * trailing punctuation, small typos) become alias edges for the CC.
     *
-    * Shape is the scale path, never all-pairs: char-4 shingle MinHash
-    * (narrow single-pass kernel, zero shuffle) → banded buckets →
-    * candidate pairs → exact-Jaccard verification ≥ `minJaccard`. The
-    * threshold is deliberately high (0.7): on the planted vocabularies the
-    * closest DISTINCT pair ("convolutional..." vs "recurrent neural
-    * network") sits at 0.375 while a plural variant sits at 0.958 — and
-    * crucially the two CNN expansions ("cable news network", 0.24) can
-    * never merge through it. Acronyms are excluded (too short for shingle
-    * similarity; their linking is the initials+context machinery above).
+    * Shape is the scale path, never all-pairs, and it is ONE bucket pass
+    * (SparkER's block-by-block candidate generation and verification): a
+    * narrow UDF computes each distinct key's band buckets, one
+    * `groupBy(band, bucket)` gathers the blocks, and each block emits and
+    * verifies its own pairs; a final `distinct` drops pairs several
+    * blocks share. No join: the pairwise self-join and the two verify
+    * joins of a generic candidate/verify composition cost 9 jobs per
+    * streaming fold for ~30 keys.
+    *
+    * Definitions are those of `Dedup.minhashShingles` + `minhashBands` +
+    * `candidatePairs` + `jaccardVerify`, so the edge set is theirs:
+    *  - signature: `Dedup.minhashKernel` (MinhashP/A/B over distinct
+    *    UTF-16 char-`shingleN` shingles, null read as "");
+    *  - bucket of band b: md5 hex of the `:`-joined minhashes of seeds
+    *    `[b·rowsPerBand, (b+1)·rowsPerBand)` in seed order;
+    *  - a block larger than 100,000 keys (candidatePairs' cap) is
+    *    dropped, and the `namesim_buckets` observe reports
+    *    `capped_buckets` and `max_bucket` so the cap is never silent (a
+    *    null key counts in its block but pairs with nothing, as before);
+    *  - verification is exact char-`shingleN` shingle Jaccard in code
+    *    points (`Dedup.charShingles`: a key of at most `shingleN` code
+    *    points is one shingle), `round(inter / union, 4)` HALF_UP
+    *    ≥ `minJaccard`. The composition carried xxhash64 proxies of the
+    *    shingles, so the two differ only on a 64-bit hash collision.
+    *
+    * Each block's keys are collected into one row, an over-cap block's
+    * too before the filter drops it: the keys are distinct concept names
+    * (vocabulary-sized), so the largest row is one list of names.
+    *
+    * The threshold is deliberately high (0.7): on the planted
+    * vocabularies the closest DISTINCT pair ("convolutional..." vs
+    * "recurrent neural network") sits at 0.375 while a plural variant
+    * sits at 0.958 — and crucially the two CNN expansions ("cable news
+    * network", 0.24) can never merge through it. Acronyms are excluded
+    * (too short for shingle similarity; their linking is the
+    * initials+context machinery above).
     *
     * Input: any DataFrame with an `entity_key` column (concept keys).
-    * Output: (key_a, key_b) with key_a < key_b. */
+    * Output: distinct (key_a, key_b) with key_a < key_b in Spark's binary
+    * string order. */
   def nameSimilarityEdges(keys: DataFrame, shingleN: Int = 4,
       nHashes: Int = 8, rowsPerBand: Int = 2, minJaccard: Double = 0.7): DataFrame = {
-    import graft.ops.Dedup
-    val named = keys.select(col("entity_key")).distinct()
-    val sigs = Dedup.minhashShingles(named, "entity_key", "entity_key", nHashes, shingleN)
-    // distinct metric name: this candidate pass may share a plan with a
-    // dedup-side candidatePairs, and observed-metric names must be
-    // unique per query
-    val pairs = Dedup.candidatePairs(Dedup.minhashBands(sigs, "entity_key", rowsPerBand),
-      "entity_key", metricName = "namesim_buckets")
-    val sh = Dedup.charShingles(named, "entity_key", "entity_key", shingleN)
-      .withColumnRenamed("shingle", "token")
-    Dedup.jaccardVerify(pairs, sh, "entity_key")
-      .where(col("jaccard") >= minJaccard)
-      .select(col("id1").as("key_a"), col("id2").as("key_b"))
+    val maxBucketSize = 100000L
+    val sig = graft.ops.Dedup.minhashKernel(nHashes, shingleN)
+    val bandsOf = udf((key: String) =>
+      sig(key).grouped(rowsPerBand).zipWithIndex
+        .map { case (band, b) => (b, DigestUtils.md5Hex(band.mkString(":"))) }.toSeq)
+    val verified = udf { (members: Seq[String]) =>
+      val ks = members.toArray
+      val sh = ks.map(codePointShingles(_, shingleN))
+      val out = Seq.newBuilder[(String, String)]
+      for (i <- ks.indices; j <- i + 1 until ks.length) {
+        val inter = sh(i).count(sh(j).contains)
+        val jaccard = java.math.BigDecimal.valueOf(inter.toDouble / (sh(i).size + sh(j).size - inter))
+          .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue
+        if (jaccard >= minJaccard)
+          out += (if (UTF8String.fromString(ks(i)).compareTo(UTF8String.fromString(ks(j))) < 0)
+            (ks(i), ks(j)) else (ks(j), ks(i)))
+      }
+      out.result()
+    }
+    keys.select(col("entity_key")).distinct()
+      .select(col("entity_key"), explode(bandsOf(col("entity_key"))).as("b"))
+      .groupBy(col("b._1").as("band"), col("b._2").as("bucket"))
+      .agg(count(lit(1)).as("bucket_n"), collect_list(col("entity_key")).as("members"))
+      .observe("namesim_buckets",
+        sum(when(col("bucket_n") > maxBucketSize, 1L).otherwise(0L)).as("capped_buckets"),
+        max(col("bucket_n")).as("max_bucket"))
+      .where(col("bucket_n") > 1 && col("bucket_n") <= maxBucketSize)
+      .select(explode(verified(col("members"))).as("p"))
+      .select(col("p._1").as("key_a"), col("p._2").as("key_b"))
+      .distinct()
+  }
+
+  /** Distinct char n-gram shingles in CODE POINTS, as `Dedup.charShingles`
+    * computes them with Spark's `length`/`substring`: one per start
+    * offset, and the whole key when it is at most n code points. */
+  private def codePointShingles(key: String, n: Int): Set[String] = {
+    val cps = key.codePoints().toArray
+    if (cps.length <= n) Set(key)
+    else (0 to cps.length - n).iterator.map(i => new String(cps, i, n)).toSet
   }
 
   /** The global ambiguity split: every distinct (acr_key, exp_key) pair

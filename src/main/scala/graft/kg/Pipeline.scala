@@ -2,6 +2,7 @@ package graft.kg
 
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.kg.Schema._
 import graft.kg.io.Ledger
 
@@ -164,6 +165,14 @@ object Pipeline {
 
   private val keyId = (c: org.apache.spark.sql.Column) => xxhash64(c)
 
+  /** Column layouts of the alias-edge and CC-graph checkpoints, as
+    * `EntityLinking.resolve` and [[ccEdges]] write them: a read with the
+    * known schema skips the footer-merge job of schema inference. */
+  private[kg] val aliasSchema: StructType =
+    StructType(Seq(StructField("key_a", StringType), StructField("key_b", StringType)))
+  private[kg] val graphSchema: StructType =
+    StructType(Seq(StructField("src", LongType), StructField("dst", LongType)))
+
   /** The CC input graph: acronym-alias edges ∪ MinHash-LSH name-blocking
     * edges over concept surface forms, keys hashed to longs. Factored
     * out so tools/CcBench can run the REAL alias graph through the
@@ -185,23 +194,14 @@ object Pipeline {
       spark: SparkSession,
       linked: Dataset[LinkedMention],
       aliases: DataFrame,
-      seedLabels: Option[DataFrame] = None,
       preGraph: Option[DataFrame] = None): Canonical = {
     import spark.implicits._
 
-    // seedLabels (incremental re-canonicalization over a stream): the
-    // previous run's CC labels enter as star edges, so the loop pays
-    // for the new edges' structure, not for merges already resolved
-    // (ConnectedComponents.incremental)
-    //
-    // PERSISTED: the CC entry runs 2 actions on this plan (count +
-    // collect/loop-seed; the incremental path a 3rd via its
-    // touched-component probe), and the plan embeds the full
-    // MinHash-LSH name-blocking pipeline (~10 shuffle stages) — without
-    // the persist every action replays it end to end (measured 5.6 s
-    // per replay at sf0.1, the dominant cost of a streaming
-    // re-canonicalization fold). The edge table itself is
-    // vocabulary-sized, so the cache never grows with the corpus.
+    // PERSISTED: the CC's distributed fallback runs several actions on
+    // this plan (its edge probe, then the loop's seed), and the plan
+    // embeds the name-blocking pass — without the persist every action
+    // replays it end to end. The edge table itself is vocabulary-sized,
+    // so the cache never grows with the corpus.
     // preGraph: a caller-materialized CC edge table (e.g. the streaming
     // fold's coverage-keyed parquet checkpoint) — already durable, so no
     // persist needed; the actions replay a tiny parquet read, not the
@@ -209,15 +209,10 @@ object Pipeline {
     val graph = preGraph.getOrElse(
       ccEdges(linked.toDF(), aliases)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val ccLabels = seedLabels match {
-      case Some(prev) => ConnectedComponents.incremental(
-        spark, prev, graph,
-        driverSolveThreshold = ConnectedComponents.driverEdgeBudget())
-      case None => ConnectedComponents.run(
-        spark, graph,
-        // fast-path budget from the driver's real heap, not a constant
-        driverSolveThreshold = ConnectedComponents.driverEdgeBudget())
-    }
+    val ccLabels = ConnectedComponents.run(
+      spark, graph,
+      // fast-path budget from the driver's real heap, not a constant
+      driverSolveThreshold = ConnectedComponents.driverEdgeBudget())
     // CC has fully materialized its labels (driver collect, or the
     // loop's eager localCheckpoints) — the graph cache is done
     if (preGraph.isEmpty) graph.unpersist(false)
@@ -331,7 +326,10 @@ object Pipeline {
     def tbl(stage: String): String = stageTable(cfg.workDir, stage)
     def useBuckets(stage: String): Boolean =
       cfg.buckets > 0 && bucketCols.contains(stage)
-    def ckWrite(df: DataFrame, stage: String, path: String): Unit =
+    // the schema of every stage table this run wrote: reading it back with
+    // the known schema skips the footer-merge job of schema inference
+    val written = scala.collection.concurrent.TrieMap.empty[String, StructType]
+    def ckWrite(df: DataFrame, stage: String, path: String): Unit = {
       if (useBuckets(stage)) {
         // cross-JVM restart: the default in-memory catalog forgets
         // managed tables, but their warehouse directories survive — a
@@ -348,11 +346,14 @@ object Pipeline {
           .bucketBy(cfg.buckets, bucketCols(stage)).sortBy(bucketCols(stage))
           .format("parquet").saveAsTable(tbl(stage))
       } else writeStage(df, path)
+      written(stage) = df.schema
+    }
     def ckDone(stage: String, path: String): Boolean =
       if (useBuckets(stage)) spark.catalog.tableExists(tbl(stage))
       else Ledger.complete(spark, path)
     def ckRead(stage: String, path: String): DataFrame =
-      if (useBuckets(stage)) spark.table(tbl(stage)) else spark.read.parquet(path)
+      if (useBuckets(stage)) spark.table(tbl(stage))
+      else written.get(stage).fold(spark.read)(spark.read.schema).parquet(path)
 
     def writeCounted(df: DataFrame, path: String, name: String): Unit =
       if (!cfg.writeMetrics) ckWrite(df, name, path)
@@ -411,19 +412,19 @@ object Pipeline {
     // similarity resolution (EntityLinking); both outputs checkpointed
     val linkedPath = s"${cfg.workDir}/linked_mentions"
     val (aliasDf, linkedDf) =
-      if (cfg.resume && Ledger.complete(spark, aliasPath) && ckDone("linked_mentions", linkedPath)) {
-        (spark.read.parquet(aliasPath), ckRead("linked_mentions", linkedPath))
+      if (cfg.resume && ckDone("alias_edges", aliasPath) && ckDone("linked_mentions", linkedPath)) {
+        (ckRead("alias_edges", aliasPath), ckRead("linked_mentions", linkedPath))
       } else {
         val t0 = System.nanoTime()
         val resolved = EntityLinking.resolve(spark, triples)
         // independent outputs sharing resolve's persisted ambiguity split —
         // overlapped like the stage-1/2 and nodes/edges write pairs
         inParallel(Seq(
-          () => writeStage(resolved.aliasEdges, aliasPath),
+          () => ckWrite(resolved.aliasEdges, "alias_edges", aliasPath),
           () => ckWrite(resolved.linked.toDF(), "linked_mentions", linkedPath)))
         resolved.unpersistCached() // exactly resolve's split + pairs persists
         metrics += (("entity_linking", -1L, (System.nanoTime() - t0) / 1000000L))
-        (spark.read.parquet(aliasPath), ckRead("linked_mentions", linkedPath))
+        (ckRead("alias_edges", aliasPath), ckRead("linked_mentions", linkedPath))
       }
 
     if (!(cfg.resume && ckDone("nodes", nodesPath) && ckDone("edges", edgesPath))) {

@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.kg.Schema._
@@ -12,10 +12,10 @@ import java.nio.charset.StandardCharsets.UTF_8
   * per-row transforms, so they apply unchanged to a streaming
   * Dataset[Page] (Structured Streaming micro-batches). The STATEFUL half
   * — linking + canonicalization — runs on a periodic cadence inside the
-  * same stream via [[runIncremental]]: accumulated triples re-link, and
-  * connected components fold the delta into the previous labeling
-  * (ConnectedComponents.incremental) instead of re-walking history —
-  * the lambda shape for a continuous 100-TB/day KG build.
+  * same stream via [[runIncremental]]: accumulated triples re-link and
+  * re-canonicalize with an exact connected components over slim
+  * accumulated state, never re-extracting — the lambda shape for a
+  * continuous 100-TB/day KG build.
   */
 object StreamingPipeline {
 
@@ -81,16 +81,20 @@ object StreamingPipeline {
     * micro-batch (stateless, batch code verbatim) and lands in an
     * accumulated triples table via IDEMPOTENT batchId-keyed overwrites;
     * every `recanonEvery` batches the accumulated triples re-link and
-    * re-canonicalize with connected components SEEDED by the previous
-    * labeling ([[ConnectedComponents.incremental]]) so the CC loop pays
-    * for the delta's structure, never the resolved past — and after the
-    * stream drains, one UNSEEDED (exact) fold ships tables from a full
-    * CC of the complete graph, healing any drift the monotone seeded
-    * folds could carry (the streaming compaction idiom). This is the
-    * lambda shape a 100-TB/day feed needs: the expensive per-row
-    * extraction is never redone (streams once), linking re-derives from
-    * slim accumulated triples, canonicalization folds incrementally for
-    * freshness and exactly for shipment. `foreachBatch` is the
+    * re-canonicalize with an EXACT connected components over the whole
+    * coverage's CC graph, so every fold ships the tables the batch
+    * pipeline would build from the same triples. After the stream
+    * drains, a last fold runs only if landed rows moved past the latest
+    * fold (an off-cadence end, or a crash between landing and folding);
+    * a stream whose last batch lands on the cadence ships from that
+    * fold. Seeding the CC with the previous labeling
+    * ([[ConnectedComponents.incremental]]) returns only with a true
+    * delta edge set: fed the whole re-derived graph it does strictly
+    * more work than the exact CC and can keep merges the full corpus no
+    * longer justifies. This is the lambda shape a 100-TB/day feed needs:
+    * the expensive per-row extraction is never redone (streams once),
+    * linking and canonicalization re-derive from slim accumulated
+    * triples. `foreachBatch` is the
     * sanctioned sink for batch-side effects; the stream checkpoint +
     * idempotent per-batch dirs + on-disk coverage markers make the
     * whole lane restartable and self-healing. The reference analog is
@@ -150,24 +154,26 @@ object StreamingPipeline {
     // stream commit and fold would lose, leaving nodes_stream
     // permanently behind triples_stream): each labels version records
     // the triples row count it covered, and a final fold runs whenever
-    // the landed count has moved past it. The final fold is UNSEEDED
-    // (exact mode): seeded folds are monotone — a merge a prefix of the
-    // stream justified is never undone even if the full corpus would
-    // not re-derive it — so the shipped tables come from a full CC over
-    // the complete accumulated graph (bit-equal to the batch pipeline),
-    // while the mid-stream cadence keeps the cheap seeded freshness
-    // path. This is the streaming-systems compaction idiom: incremental
-    // folds for latency, periodic exact folds to heal drift.
+    // the landed count has moved past it. Every fold is exact, so a
+    // stream whose last batch landed on the cadence is already covered
+    // and runs none; a latest version marked other than `exact` (a work
+    // dir written when cadence folds were seeded) still gets one.
     val landed =
-      if (fs.exists(new Path(triplesPath))) spark.read.parquet(triplesPath).count() else 0L
+      if (fs.exists(new Path(triplesPath))) landedTriples(spark, triplesPath).count() else 0L
     val (covered, exact) = coverage(fs, labels)
     if (landed > 0 && !(exact && covered == landed))
-      recanonicalize(spark, fs, workDir, labels, seeded = false)
+      recanonicalize(spark, fs, workDir, labels)
   }
 
+  /** The accumulated triples table with the schema its batch writes
+    * used, plus the discovered `batch` partition column: a read with a
+    * known schema skips the parquet footer-merge job that schema
+    * inference launches. */
+  private def landedTriples(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(Encoders.product[Triple].schema.add("batch", IntegerType)).parquet(path)
+
   /** (covered triples rows, was-exact) of the LATEST labels version —
-    * a fold is exact when it ran a full CC (no seed), which the shipped
-    * tables must always come from. */
+    * the shipped tables must come from an exact fold (a full CC). */
   private def coverage(fs: FileSystem, labels: Ledger): (Long, Boolean) =
     labels.latest()
       .map(v => new Path(labels.path(v), "_covered_rows.txt"))
@@ -180,16 +186,16 @@ object StreamingPipeline {
       .getOrElse((0L, false))
 
   /** One re-canonicalization pass over the accumulated streamed triples:
-    * link → canonicalize (CC seeded by the previous labeling when one
-    * exists) → overwrite `nodes_stream`/`edges_stream`, append a new
-    * labels version. Labels are VERSIONED directories (`cc_labels/v<n>`)
+    * link → canonicalize (an exact CC over the coverage's graph) →
+    * overwrite `nodes_stream`/`edges_stream`, append a new labels
+    * version. Labels are VERSIONED directories (`cc_labels/v<n>`)
     * because overwriting the parquet a lazy plan is still reading is the
     * classic self-overwrite corruption; versioning also gives the resume
     * story — a crashed pass leaves the previous version intact. */
   private def recanonicalize(spark: SparkSession, fs: FileSystem, workDir: String,
-      labels: Ledger, seeded: Boolean = true): Unit = {
+      labels: Ledger): Unit = {
     import spark.implicits._
-    val raw = spark.read.parquet(s"$workDir/triples_stream")
+    val raw = landedTriples(spark, s"$workDir/triples_stream")
     // count the covered rows for the on-disk staleness ledger — and as
     // the linking-stage checkpoint key below
     val nCovered = raw.count()
@@ -199,14 +205,15 @@ object StreamingPipeline {
     // the CC edge graph are pure functions of the accumulated triples
     // multiset, and within a run the landed set only grows — so the
     // covered row count identifies it exactly. The payoff is the
-    // drain-time EXACT fold: it re-canonicalizes the SAME coverage the
-    // last cadence fold just linked, and reads these tables back
-    // instead of re-running alias discovery + ambiguity resolution +
-    // MinHash name-blocking end to end (the dominant fold cost). Also
-    // the crash-restart story: a fold interrupted after this stage
-    // resumes from parquet.
+    // crash-restart story: a fold interrupted after this stage resumes
+    // from parquet instead of re-running alias discovery + ambiguity
+    // resolution + name blocking end to end (the dominant fold cost).
+    // Every read below carries the schema its write used (no
+    // footer-merge job per read).
     val stages = Seq("linked_", "alias_", "graph_").map(new Ledger(spark, s"$workDir/link_stage", _))
     val Seq(linkedPath, aliasPath, graphPath) = stages.map(_.path(nCovered))
+    def readLinked() = spark.read.schema(Encoders.product[LinkedMention].schema).parquet(linkedPath)
+    def readAlias() = spark.read.schema(Pipeline.aliasSchema).parquet(aliasPath)
     if (!Seq(linkedPath, aliasPath, graphPath).forall(Ledger.complete(spark, _))) {
       val triples = raw.drop("batch").as[Triple]
       val resolved = EntityLinking.resolve(spark, triples)
@@ -224,31 +231,24 @@ object StreamingPipeline {
       // this write ran 18-19 jobs / 2.2-2.3 s (400 pages, 4-core VM), the
       // cached DAG repeated under every blocking branch; over the parquet
       // 9-11 jobs / 0.9-1.6 s, same edges.
-      Pipeline.ccEdges(spark.read.parquet(linkedPath), spark.read.parquet(aliasPath))
+      Pipeline.ccEdges(readLinked(), readAlias())
         .write.mode(SaveMode.Overwrite).parquet(graphPath)
     }
-    val linkedCk = spark.read.parquet(linkedPath)
-    val base = labels.latest()
-    val prev = if (seeded) base.map(v => spark.read.parquet(labels.path(v))) else None
     val canonical = Pipeline.canonicalize(
-      spark, linkedCk.as[Schema.LinkedMention],
-      spark.read.parquet(aliasPath), prev,
-      preGraph = Some(spark.read.parquet(graphPath)))
+      spark, readLinked().as[Schema.LinkedMention], readAlias(),
+      preGraph = Some(spark.read.schema(Pipeline.graphSchema).parquet(graphPath)))
+    val base = labels.latest()
     val next = base.getOrElse(0L) + 1
     // labels first (nodes/edges derive from the same plan; any failure
     // here leaves the previous version live), then the two outputs
     canonical.labels.write.mode(SaveMode.Overwrite).parquet(labels.path(next))
-    // coverage marker: how many triples rows this version folded and
-    // whether the fold was EXACT (a full CC — prev empty — vs a seeded
-    // incremental). runIncremental's staleness check compares it
-    // against the landed count on disk, so a crash before the final
-    // fold self-heals on restart, and a merely-seeded latest version
-    // still triggers the exact compaction fold the shipped tables
-    // require. (A production table format records this as snapshot
-    // metadata.)
-    val mode = if (prev.isEmpty) "exact" else "seeded"
+    // coverage marker: how many triples rows this version folded, and
+    // that the fold was EXACT (a full CC). runIncremental's staleness
+    // check compares it against the landed count on disk, so a crash
+    // before the final fold self-heals on restart. (A production table
+    // format records this as snapshot metadata.)
     val marker = fs.create(new Path(labels.path(next), "_covered_rows.txt"), true)
-    try marker.write(s"$nCovered $mode".getBytes(UTF_8)) finally marker.close()
+    try marker.write(s"$nCovered exact".getBytes(UTF_8)) finally marker.close()
     // both outputs read the same persisted label table — overlap the two
     // writes as concurrent jobs exactly like the batch pipeline does
     Pipeline.inParallel(Seq(
@@ -257,7 +257,7 @@ object StreamingPipeline {
     canonical.unpersistCached()
     // this fold has landed (labels version + both outputs): labels older
     // than its base and every smaller coverage's linking stage are dead
-    // (coverages only grow within a run, and the drain fold can only
+    // (coverages only grow within a run, and a restarted fold can only
     // reuse this one). Without the prune link_stage grows as
     // O(folds × corpus) and cc_labels as O(folds × vocabulary) on tmpfs.
     labels.prune(base.getOrElse(next))

@@ -117,8 +117,7 @@ object Dedup {
     * `inBuckets` plan (identical subtrees — the exchange is reusable).
     * `metricName` must be unique per query plan (Spark rejects same-name
     * observed metrics over different subplans); callers composing
-    * several candidate passes pass distinct names, as
-    * `EntityLinking.nameSimilarityEdges` does. */
+    * several candidate passes pass distinct names. */
   def candidatePairs(bands: DataFrame, id: String,
       maxBucketSize: Long = 100000L,
       metricName: String = "minhash_buckets"): DataFrame = {
@@ -350,9 +349,20 @@ object Dedup {
     * Output: (id, seed, minhash), like `minhashOver`. */
   def minhashShingles(df: DataFrame, id: String, text: String,
       nHashes: Int = 16, n: Int = 8): DataFrame = {
+    val sig = minhashKernel(nHashes, n)
+    val f = udf((s: String) => sig(s).toSeq)
+    df.select(col(id), posexplode(f(col(text))).as(Seq("seed", "minhash")))
+  }
+
+  /** The per-text loop of [[minhashShingles]]: the `nHashes` minhashes,
+    * in seed order, of the text's distinct char n-gram shingles (UTF-16
+    * substrings; the whole text when it is at most n chars; null reads
+    * as ""). Shared so a caller that needs the signature inside its own
+    * narrow pass hashes exactly as `minhashShingles` does. */
+  private[graft] def minhashKernel(nHashes: Int, n: Int): String => Array[Long] = {
     val as = Array.tabulate(nHashes)(minhashA)
     val bs = Array.tabulate(nHashes)(minhashB)
-    val f = udf { (s: String) =>
+    (s: String) => {
       val md = java.security.MessageDigest.getInstance("MD5")
       val mins = Array.fill(nHashes)(Long.MaxValue)
       val it = distinctShingles(s, n).iterator()
@@ -369,9 +379,8 @@ object Dedup {
           seed += 1
         }
       }
-      mins.toSeq
+      mins
     }
-    df.select(col(id), posexplode(f(col(text))).as(Seq("seed", "minhash")))
   }
 
   /** SimHash near-dup pairs with hamming ≤ maxHamming, using 4-chunk

@@ -207,9 +207,9 @@ object StreamingQueries {
 
     // the STATEFUL half of the north-star lane under streaming: the
     // full incremental KG build — micro-batched extraction appending to
-    // an accumulated triples table, linking + CC canonicalization
-    // re-folding on a 2-batch cadence with the previous labeling as the
-    // CC seed (ConnectedComponents.incremental) — must land EXACTLY the
+    // an accumulated triples table, linking + an exact CC
+    // canonicalization re-folding on a 2-batch cadence (plus one drain
+    // fold when the stream ends off the cadence) — must land EXACTLY the
     // batch pipeline's nodes table; the oracle is the same kg_nodes SQL
     // re-derivation. A fresh work dir per call: resuming a previous
     // run's checkpoint would skip the stream and misprice the evidence

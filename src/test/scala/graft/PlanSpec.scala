@@ -238,6 +238,14 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("BroadcastNestedLoopJoin"), s"blocking degenerated to NL join:\n$p")
   }
 
+  test("name-similarity blocking is one bucket pass: no join in its plan") {
+    val keys = Seq("convolutional neural network", "convolutional neural networks",
+      "stochastic gradient descent", "graph attention network").toDF("entity_key")
+    val p = plan(graft.kg.EntityLinking.nameSimilarityEdges(keys))
+    assert(!p.contains("Join") && !p.contains("CartesianProduct"),
+      s"blocking must generate and verify pairs per bucket, not through joins:\n$p")
+  }
+
   test("sequence packing shuffles once (the shard exchange) and never globally sorts") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val p = plan(graft.ops.Packing.packSequences(docs, "doc_id", "text", 1024L, 8))

@@ -128,7 +128,7 @@ class StreamingSpec extends AnyFunSuite {
     val nDocs = 120L
     val dir = Files.createTempDirectory("pages_inc").toString
     // 4 files + maxFilesPerTrigger=1 → 4 real micro-batches, so the
-    // re-canonicalize cadence (every 2) fires mid-stream with a seed
+    // re-canonicalize cadence (every 2) fires mid-stream and at the end
     PagesGen.pages(spark, nDocs).repartition(4).write.mode("overwrite").parquet(dir)
     val pages = spark.readStream.schema(StreamingPipeline.pageSchema)
       .option("maxFilesPerTrigger", 1).parquet(dir).as[Schema.Page]
@@ -170,19 +170,25 @@ class StreamingSpec extends AnyFunSuite {
       == proj(batchRes.nodes, "canonical_name", "kind", "n_mentions", "n_urls"))
     assert(proj(streamEdges, "src_url", "dst_name", "weight")
       == proj(batchRes.edges, "src_url", "dst_name", "weight"))
-    // mid-stream cadence + seeded final pass → ≥ 2 label versions
+    // two cadence folds → ≥ 2 label versions
     val versions = new java.io.File(s"$work/cc_labels").listFiles()
       .filter(_.getName.startsWith("v")).map(_.getName).sorted
     assert(versions.length >= 2, versions.mkString(","))
-    // 3 folds (after batches 1 and 3, then the exact drain fold): each
-    // prunes cc_labels to its own version and that version's base
-    assert(versions.toSeq == Seq("v2", "v3"), versions.mkString(","))
+    // 2 folds (after batches 1 and 3; the last batch lands on the
+    // cadence, so no drain fold runs): the second prunes cc_labels to
+    // its own version and that version's base
+    assert(versions.toSeq == Seq("v1", "v2"), versions.mkString(","))
     // per-batch lineage conserves rows: Σ lineage == triples landed
     val lineage = spark.read.parquet(s"$work/stream_lineage")
     assert(lineage.select("batch_id").distinct().count() == 4L)
     val lSum = lineage.agg(org.apache.spark.sql.functions.sum("rows")).head.getLong(0)
     val landed = spark.read.parquet(s"$work/triples_stream").count()
     assert(lSum == landed)
+    // every fold is exact, and the last one covers every landed row
+    val markers = versions.map(v => new String(Files.readAllBytes(
+      new java.io.File(s"$work/cc_labels/$v/_covered_rows.txt").toPath), "UTF-8").trim)
+    assert(markers.forall(_.endsWith(" exact")), markers.mkString(","))
+    assert(markers.last == s"$landed exact", markers.mkString(","))
     // link_stage keeps one coverage, the landed one: each fold prunes the
     // linking tables of every other coverage once its outputs land
     val stages = new java.io.File(s"$work/link_stage").listFiles().map(_.getName)
