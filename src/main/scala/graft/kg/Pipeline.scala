@@ -1,10 +1,9 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.kg.Schema._
-import graft.kg.io.Ledger
+import graft.kg.io.{BucketedTableIO, ParquetTableIO, TableIO}
 
 /** The KG-construction pipeline (north_star): extract → clean → triple
   * extraction → entity linking → canonicalization (CC) → nodes/edges.
@@ -20,8 +19,13 @@ import graft.kg.io.Ledger
   *    (entity,url) then final) so hot entities ("CNN" in ~20% of docs)
   *    never hit a single reducer.
   *  - Canonicalization = DataFrame connected components over alias edges.
-  *  - Each stage checkpoints to parquet under `workDir`; `_SUCCESS` is the
-  *    resume ledger — a rerun skips completed stages (idempotent).
+  *  - Each stage checkpoints through `kg.io` (parquet under `workDir`, or
+  *    bucketed tables); `_SUCCESS` is the resume ledger — a rerun skips
+  *    completed stages (idempotent).
+  *  - Link → canonicalize is one path: [[link]] then [[canonicalize]],
+  *    run as they stand by this build and by the streaming fold
+  *    (`StreamingPipeline.runIncremental`), so stream ≡ batch by
+  *    construction.
   *  - Per-partition lineage/metrics rows are written alongside each stage
   *    (north_rule: per-partition lineage + metrics).
   */
@@ -131,11 +135,6 @@ object Pipeline {
     out.result()
   }
 
-  def extractTriples(spark: SparkSession, docs: Dataset[CleanDoc]): Dataset[Triple] = {
-    import spark.implicits._
-    docs.flatMap(d => triplesForDoc(d.url, d.raw_text))
-  }
-
   /** Triples straight from the source table — a purely narrow pass (NO
     * repartition: triple emission is per-row; plain parquet carries no
     * bucketing metadata, so a shuffle here buys nothing downstream —
@@ -147,13 +146,40 @@ object Pipeline {
   }
 
   // ------------------------------------------------------------ stage 3
-  // entity linking: EntityLinking.resolve
+  /** The link stage's two checkpoints, read back, and its wall when it
+    * ran (`None` when complete checkpoints were reused). */
+  private[kg] final case class Linked(
+      mentions: Dataset[LinkedMention], aliases: DataFrame, wallMs: Option[Long])
+
+  /** Entity linking, the one link stage the batch build and the
+    * streaming fold both run: `EntityLinking.resolve` over `triples`, its
+    * two outputs written to `linkedAt` and `aliasAt` as concurrent jobs,
+    * resolve's caches dropped, and both tables read back. [[canonicalize]]
+    * therefore always plans over the checkpoints, never over a cached
+    * linking DAG. With `reuse`, complete checkpoints are read back as they
+    * stand and `triples` (by name) is never scanned. */
+  private[kg] def link(spark: SparkSession, triples: => Dataset[Triple],
+      linkedAt: (TableIO, String), aliasAt: (TableIO, String), reuse: Boolean): Linked = {
+    import spark.implicits._
+    val outs = Seq(linkedAt, aliasAt)
+    val wallMs =
+      if (reuse && outs.forall { case (io, t) => io.exists(spark, t) }) None
+      else {
+        val t0 = System.nanoTime()
+        val resolved = EntityLinking.resolve(spark, triples)
+        // independent outputs sharing resolve's persisted ambiguity split —
+        // overlapped like the stage-1/2 and nodes/edges write pairs
+        inParallel(outs.zip(Seq(resolved.linked.toDF(), resolved.aliasEdges)).map {
+          case ((io, t), df) => () => io.write(df, t)
+        })
+        resolved.unpersistCached() // exactly resolve's split + pairs persists
+        Some((System.nanoTime() - t0) / 1000000L)
+      }
+    val Seq(linked, aliases) = outs.map { case (io, t) => io.read(spark, t) }
+    Linked(linked.as[LinkedMention], aliases, wallMs)
+  }
 
   // ------------------------------------------------------------ stage 4
-  /** Canonicalize entity keys: CC over alias edges; canonical name = the
-    * member with the highest total mention weight (ties → lexicographic).
-    * All aggregations two-phase over (entity, url) to defuse hot-key skew
-    * before the final per-component reduction. */
   /** canonicalize's outputs plus the exact DataFrame it persisted (the
     * CC-labeled mention table both outputs read) — callers unpersist
     * precisely that after checkpointing, never a session-wide
@@ -164,14 +190,6 @@ object Pipeline {
   }
 
   private val keyId = (c: org.apache.spark.sql.Column) => xxhash64(c)
-
-  /** Column layouts of the alias-edge and CC-graph checkpoints, as
-    * `EntityLinking.resolve` and [[ccEdges]] write them: a read with the
-    * known schema skips the footer-merge job of schema inference. */
-  private[kg] val aliasSchema: StructType =
-    StructType(Seq(StructField("key_a", StringType), StructField("key_b", StringType)))
-  private[kg] val graphSchema: StructType =
-    StructType(Seq(StructField("src", LongType), StructField("dst", LongType)))
 
   /** The CC input graph: acronym-alias edges ∪ MinHash-LSH name-blocking
     * edges over concept surface forms, keys hashed to longs. Factored
@@ -190,32 +208,35 @@ object Pipeline {
       .select(keyId(col("key_a")).as("src"), keyId(col("key_b")).as("dst"))
   }
 
+  /** Canonicalize entity keys: CC over alias edges; canonical name = the
+    * member with the highest total mention weight (ties → lexicographic).
+    * All aggregations two-phase over (entity, url) to defuse hot-key skew
+    * before the final per-component reduction. The only place the CC
+    * graph is materialized: `linked` and `aliases` are the link stage's
+    * checkpoint reads, so the cached graph's plan holds parquet scans,
+    * not a cached linking DAG. */
   def canonicalize(
       spark: SparkSession,
       linked: Dataset[LinkedMention],
-      aliases: DataFrame,
-      preGraph: Option[DataFrame] = None): Canonical = {
+      aliases: DataFrame): Canonical = {
     import spark.implicits._
 
     // PERSISTED: the CC's distributed fallback runs several actions on
     // this plan (its edge probe, then the loop's seed), and the plan
     // embeds the name-blocking pass — without the persist every action
     // replays it end to end. The edge table itself is vocabulary-sized,
-    // so the cache never grows with the corpus.
-    // preGraph: a caller-materialized CC edge table (e.g. the streaming
-    // fold's coverage-keyed parquet checkpoint) — already durable, so no
-    // persist needed; the actions replay a tiny parquet read, not the
-    // name-blocking pipeline
-    val graph = preGraph.getOrElse(
-      ccEdges(linked.toDF(), aliases)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // so the cache never grows with the corpus. (Writing it to parquet
+    // and reading it back instead ran 25 jobs to this cache's 24 over
+    // the same linking checkpoints, 400 and 2,000 pages, local[4].)
+    val graph = ccEdges(linked.toDF(), aliases)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ccLabels = ConnectedComponents.run(
       spark, graph,
       // fast-path budget from the driver's real heap, not a constant
       driverSolveThreshold = ConnectedComponents.driverEdgeBudget())
     // CC has fully materialized its labels (driver collect, or the
     // loop's eager localCheckpoints) — the graph cache is done
-    if (preGraph.isEmpty) graph.unpersist(false)
+    graph.unpersist(false)
 
     // entity_key -> component (keys not in any alias edge are their own
     // component). Persisted: nodes AND edges both derive from it, and the
@@ -287,9 +308,6 @@ object Pipeline {
   }
 
   // ---------------------------------------------------------- orchestration
-  private def writeStage(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
-
   /** Run independent stage writes as concurrent Spark jobs (one thread
     * each): overlaps the serial tails (last straggler task, parquet
     * commit, driver bookkeeping) that otherwise stack up per stage. */
@@ -315,61 +333,37 @@ object Pipeline {
     // run) the reader falls back to counting the checkpoint
     val observed = scala.collection.concurrent.TrieMap.empty[String, Long]
 
-    // ---- checkpoint surface: plain parquet dirs (default), or bucketed
-    // managed tables when cfg.buckets > 0 (see Config scaladoc). Table
-    // names carry a workDir hash so concurrent runs don't collide; the
-    // bucket column is the stage's join/aggregation key. alias_edges and
-    // metrics stay parquet — key-pair/diagnostic rows with no url.
+    // ---- checkpoint surface: plain parquet dirs under workDir (default),
+    // or bucketed managed tables when cfg.buckets > 0 (see Config
+    // scaladoc), named by stageTable; the bucket column is the stage's
+    // join/aggregation key. alias_edges and metrics stay parquet —
+    // key-pair/diagnostic rows with no url.
+    val parquet = new ParquetTableIO(cfg.workDir)
     val bucketCols = Map(
       "extract_clean" -> "url", "triples" -> "url", "linked_mentions" -> "url",
       "edges" -> "src_url", "nodes" -> "entity_id")
-    def tbl(stage: String): String = stageTable(cfg.workDir, stage)
-    def useBuckets(stage: String): Boolean =
-      cfg.buckets > 0 && bucketCols.contains(stage)
-    // the schema of every stage table this run wrote: reading it back with
-    // the known schema skips the footer-merge job of schema inference
-    val written = scala.collection.concurrent.TrieMap.empty[String, StructType]
-    def ckWrite(df: DataFrame, stage: String, path: String): Unit = {
-      if (useBuckets(stage)) {
-        // cross-JVM restart: the default in-memory catalog forgets
-        // managed tables, but their warehouse directories survive — a
-        // fresh saveAsTable into an existing location throws. Clear the
-        // orphaned location first (tableExists=false ∧ dir present ⇒ a
-        // previous JVM's write; with a persistent metastore, tableExists
-        // is true and resume skips this whole write instead).
-        if (!spark.catalog.tableExists(tbl(stage))) {
-          val loc = new org.apache.hadoop.fs.Path(
-            spark.conf.get("spark.sql.warehouse.dir"), tbl(stage).toLowerCase)
-          loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
-        }
-        df.write.mode(SaveMode.Overwrite)
-          .bucketBy(cfg.buckets, bucketCols(stage)).sortBy(bucketCols(stage))
-          .format("parquet").saveAsTable(tbl(stage))
-      } else writeStage(df, path)
-      written(stage) = df.schema
+    /** Where `stage` checkpoints: its bucketed table, or the dir `dir`. */
+    def at(stage: String, dir: String): (TableIO, String) = bucketCols.get(stage) match {
+      case Some(c) if cfg.buckets > 0 =>
+        (new BucketedTableIO(cfg.buckets, c), stageTable(cfg.workDir, stage))
+      case _ => (parquet, dir)
     }
-    def ckDone(stage: String, path: String): Boolean =
-      if (useBuckets(stage)) spark.catalog.tableExists(tbl(stage))
-      else Ledger.complete(spark, path)
-    def ckRead(stage: String, path: String): DataFrame =
-      if (useBuckets(stage)) spark.table(tbl(stage))
-      else written.get(stage).fold(spark.read)(spark.read.schema).parquet(path)
-
-    def writeCounted(df: DataFrame, path: String, name: String): Unit =
-      if (!cfg.writeMetrics) ckWrite(df, name, path)
+    def reusable(ck: (TableIO, String)): Boolean = cfg.resume && ck._1.exists(spark, ck._2)
+    def read(ck: (TableIO, String)): DataFrame = ck._1.read(spark, ck._2)
+    def writeCounted(df: DataFrame, ck: (TableIO, String), name: String): Unit =
+      if (!cfg.writeMetrics) ck._1.write(df, ck._2)
       else {
         val obs = org.apache.spark.sql.Observation()
-        ckWrite(df.observe(obs, count(lit(1)).as("n")), name, path)
+        ck._1.write(df.observe(obs, count(lit(1)).as("n")), ck._2)
         observed(name) = obs.get("n").asInstanceOf[Long]
       }
     def rowsOf(name: String, reader: => DataFrame): Long =
       observed.getOrElse(name, reader.count())
 
-    val docsPath = s"${cfg.workDir}/clean_docs"
-    val triplesPath = s"${cfg.workDir}/triples"
-    val aliasPath = s"${cfg.workDir}/alias_edges"
-    val nodesPath = s"${cfg.workDir}/nodes"
-    val edgesPath = s"${cfg.workDir}/edges"
+    val docsAt = at("extract_clean", "clean_docs")
+    val triplesAt = at("triples", "triples")
+    val nodesAt = at("nodes", "nodes")
+    val edgesAt = at("edges", "edges")
 
     // ------- stages 1+2: ONE scan of the source, two concurrent writes.
     // clean_docs and triples both derive from the same narrow raw-text
@@ -379,8 +373,8 @@ object Pipeline {
     // persisted (memory, spill to disk) only when both writes actually
     // run; concurrent Spark jobs dedupe cached partition computation at
     // the block level, so the corpus is scanned once.
-    val needDocs = !(cfg.resume && ckDone("extract_clean", docsPath))
-    val needTriples = !(cfg.resume && ckDone("triples", triplesPath))
+    val needDocs = !reusable(docsAt)
+    val needTriples = !reusable(triplesAt)
     if (needDocs || needTriples) {
       val t0 = System.nanoTime()
       val raw = pages.map(p => Schema.RawDoc(p.url, p.warc_ts, p.lang, rawText(p)))
@@ -391,55 +385,40 @@ object Pipeline {
       val work = Seq(
         (needDocs, "extract_clean", () => writeCounted(
           src.map(d => CleanDoc(d.url, d.warc_ts, d.lang, null, RefText.cleanText(d.raw_text)))
-            .toDF().drop("raw_text"), docsPath, "extract_clean")),
+            .toDF().drop("raw_text"), docsAt, "extract_clean")),
         (needTriples, "triples", () => writeCounted(
-          src.flatMap(d => triplesForDoc(d.url, d.raw_text)).toDF(), triplesPath, "triples")))
+          src.flatMap(d => triplesForDoc(d.url, d.raw_text)).toDF(), triplesAt, "triples")))
         .collect { case (true, name, job) => (name, job) }
       inParallel(work.map(_._2))
       if (needDocs && needTriples) src.unpersist(false)
       for ((name, _) <- work)
         metrics += ((name, -1L, (System.nanoTime() - t0) / 1000000L))
     }
-    val docsDf = ckRead("extract_clean", docsPath)
-    val triplesDf = ckRead("triples", triplesPath)
+    val docsDf = read(docsAt)
+    val triplesDf = read(triplesAt)
     if (cfg.writeMetrics) {
       metrics += (("extract_clean_rows", rowsOf("extract_clean", docsDf), 0L))
       metrics += (("triples_rows", rowsOf("triples", triplesDf), 0L))
     }
-    val triples = triplesDf.as[Triple]
 
     // entity linking: alias discovery + ambiguity split + context-
     // similarity resolution (EntityLinking); both outputs checkpointed
-    val linkedPath = s"${cfg.workDir}/linked_mentions"
-    val (aliasDf, linkedDf) =
-      if (cfg.resume && ckDone("alias_edges", aliasPath) && ckDone("linked_mentions", linkedPath)) {
-        (ckRead("alias_edges", aliasPath), ckRead("linked_mentions", linkedPath))
-      } else {
-        val t0 = System.nanoTime()
-        val resolved = EntityLinking.resolve(spark, triples)
-        // independent outputs sharing resolve's persisted ambiguity split —
-        // overlapped like the stage-1/2 and nodes/edges write pairs
-        inParallel(Seq(
-          () => ckWrite(resolved.aliasEdges, "alias_edges", aliasPath),
-          () => ckWrite(resolved.linked.toDF(), "linked_mentions", linkedPath)))
-        resolved.unpersistCached() // exactly resolve's split + pairs persists
-        metrics += (("entity_linking", -1L, (System.nanoTime() - t0) / 1000000L))
-        (ckRead("alias_edges", aliasPath), ckRead("linked_mentions", linkedPath))
-      }
+    val linked = link(spark, triplesDf.as[Triple],
+      at("linked_mentions", "linked_mentions"), at("alias_edges", "alias_edges"), cfg.resume)
+    linked.wallMs.foreach(ms => metrics += (("entity_linking", -1L, ms)))
 
-    if (!(cfg.resume && ckDone("nodes", nodesPath) && ckDone("edges", edgesPath))) {
-      val linked = linkedDf.as[Schema.LinkedMention]
+    if (!(reusable(nodesAt) && reusable(edgesAt))) {
       val t0 = System.nanoTime()
-      val canonical = canonicalize(spark, linked, aliasDf)
+      val canonical = canonicalize(spark, linked.mentions, linked.aliases)
       // nodes and edges both read canonicalize's persisted label table —
       // two independent writes, overlapped
-      inParallel(Seq(() => writeCounted(canonical.nodes, nodesPath, "nodes"),
-        () => writeCounted(canonical.edges, edgesPath, "edges")))
+      inParallel(Seq(() => writeCounted(canonical.nodes, nodesAt, "nodes"),
+        () => writeCounted(canonical.edges, edgesAt, "edges")))
       canonical.unpersistCached() // exactly canonicalize's label persist
       metrics += (("canonicalize", -1L, (System.nanoTime() - t0) / 1000000L))
     }
-    val nodesDf = ckRead("nodes", nodesPath)
-    val edgesDf = ckRead("edges", edgesPath)
+    val nodesDf = read(nodesAt)
+    val edgesDf = read(edgesAt)
     if (cfg.writeMetrics) {
       metrics += (("nodes", rowsOf("nodes", nodesDf), 0L))
       metrics += (("edges", rowsOf("edges", edgesDf), 0L))
@@ -459,8 +438,8 @@ object Pipeline {
             .withColumn("stage", lit(st))
         }
         .reduce(_ unionByName _)
-      writeStage(stageMetrics, s"${cfg.workDir}/metrics_stage")
-      writeStage(partMetrics, s"${cfg.workDir}/metrics_partition")
+      parquet.write(stageMetrics, "metrics_stage")
+      parquet.write(partMetrics, "metrics_partition")
     }
 
     Result(nodesDf, edgesDf, stageMetrics)

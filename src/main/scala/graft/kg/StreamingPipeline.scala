@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSessio
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.kg.Schema._
-import graft.kg.io.Ledger
+import graft.kg.io.{Ledger, ParquetTableIO}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -39,55 +39,22 @@ object StreamingPipeline {
     pages.flatMap(p => Pipeline.triplesForDoc(p.url, Pipeline.rawText(p)))
   }
 
-  /** Watermarked sliding-window mention counts per entity — the
-    * streaming-native aggregation shape (event time = warc_ts). */
-  def entityMentionsWindowed(spark: SparkSession, pages: Dataset[Page]): DataFrame = {
-    import spark.implicits._
-    val triples = pages
-      .flatMap(p => Pipeline.triplesForDoc(p.url, Option(p.text).getOrElse(""))
-        .filter(_.pred == "mentionsEntity")
-        .map(t => (p.warc_ts, Py.lower(t.obj), t.weight)))
-      .toDF("warc_ts", "entity", "weight")
-    triples
-      .withWatermark("warc_ts", "10 minutes")
-      .groupBy(window(col("warc_ts"), "5 minutes"), col("entity"))
-      .agg(sum(col("weight")).as("mentions"))
-      .select(col("window.start").as("w_start"), col("entity"), col("mentions"))
-  }
-
-  /** Streaming exact dedup on content hash with BOUNDED state:
-    * `dropDuplicatesWithinWatermark` evicts per-key state once the
-    * watermark passes, so the dedup map never grows with the corpus —
-    * the only shape that survives an unbounded 100-TB/day feed (a plain
-    * `dropDuplicates` on a stream accumulates state forever).
-    * Output: first-seen pages, duplicate texts within the horizon
-    * dropped. */
-  def streamDedup(spark: SparkSession, pages: Dataset[Page],
-      watermark: String = "1 hour"): DataFrame = {
-    import spark.implicits._
-    // hash the EXTRACTED text (html fallback included) — keying on the
-    // raw text column alone would collapse every html-only page
-    // (text = null) onto md5('') and silently drop them as duplicates
-    pages.map(p => (p.url, p.warc_ts, p.lang, Pipeline.rawText(p)))
-      .toDF("url", "warc_ts", "lang", "raw_text")
-      .withColumn("text_md5", md5(col("raw_text")))
-      .withWatermark("warc_ts", watermark)
-      .dropDuplicatesWithinWatermark("text_md5")
-  }
-
   // ------------------------------------------------- incremental KG build
   /** The STATEFUL half of the KG build on a stream — linking +
     * canonicalization, not just extraction. Extraction runs inside each
     * micro-batch (stateless, batch code verbatim) and lands in an
     * accumulated triples table via IDEMPOTENT batchId-keyed overwrites;
     * every `recanonEvery` batches the accumulated triples re-link and
-    * re-canonicalize with an EXACT connected components over the whole
-    * coverage's CC graph, so every fold ships the tables the batch
-    * pipeline would build from the same triples. After the stream
+    * re-canonicalize through the batch build's own link → canonicalize
+    * path ([[Pipeline.link]], then [[Pipeline.canonicalize]] with its
+    * EXACT connected components over the whole coverage's CC graph), so
+    * every fold ships the tables the batch pipeline would build from the
+    * same triples. After the stream
     * drains, a last fold runs only if landed rows moved past the latest
     * fold (an off-cadence end, or a crash between landing and folding);
     * a stream whose last batch lands on the cadence ships from that
-    * fold. Seeding the CC with the previous labeling
+    * fold; a crash after a fold's link stage reuses its checkpoints.
+    * Seeding the CC with the previous labeling
     * ([[ConnectedComponents.incremental]]) returns only with a true
     * delta edge set: fed the whole re-derived graph it does strictly
     * more work than the exact CC and can keep merges the full corpus no
@@ -186,7 +153,9 @@ object StreamingPipeline {
       .getOrElse((0L, false))
 
   /** One re-canonicalization pass over the accumulated streamed triples:
-    * link → canonicalize (an exact CC over the coverage's graph) →
+    * the batch build's link stage (checkpoints `link_stage/linked_<n>`
+    * and `alias_<n>`, n = covered rows, reused when complete) →
+    * `Pipeline.canonicalize` (an exact CC over the coverage's graph) →
     * overwrite `nodes_stream`/`edges_stream`, append a new labels
     * version. Labels are VERSIONED directories (`cc_labels/v<n>`)
     * because overwriting the parquet a lazy plan is still reading is the
@@ -200,43 +169,16 @@ object StreamingPipeline {
     // the linking-stage checkpoint key below
     val nCovered = raw.count()
 
-    // ---- linking stage, CHECKPOINTED per coverage (the batch
-    // pipeline's parquet-stage idiom applied to the fold): linking and
-    // the CC edge graph are pure functions of the accumulated triples
-    // multiset, and within a run the landed set only grows — so the
-    // covered row count identifies it exactly. The payoff is the
-    // crash-restart story: a fold interrupted after this stage resumes
-    // from parquet instead of re-running alias discovery + ambiguity
-    // resolution + name blocking end to end (the dominant fold cost).
-    // Every read below carries the schema its write used (no
-    // footer-merge job per read).
-    val stages = Seq("linked_", "alias_", "graph_").map(new Ledger(spark, s"$workDir/link_stage", _))
-    val Seq(linkedPath, aliasPath, graphPath) = stages.map(_.path(nCovered))
-    def readLinked() = spark.read.schema(Encoders.product[LinkedMention].schema).parquet(linkedPath)
-    def readAlias() = spark.read.schema(Pipeline.aliasSchema).parquet(aliasPath)
-    if (!Seq(linkedPath, aliasPath, graphPath).forall(Ledger.complete(spark, _))) {
-      val triples = raw.drop("batch").as[Triple]
-      val resolved = EntityLinking.resolve(spark, triples)
-      // two independent outputs sharing resolve's persisted ambiguity
-      // split, overlapped as concurrent jobs like the batch pipeline's
-      Pipeline.inParallel(Seq(
-        () => resolved.linked.toDF().write.mode(SaveMode.Overwrite).parquet(linkedPath),
-        () => resolved.aliasEdges.write.mode(SaveMode.Overwrite).parquet(aliasPath)))
-      resolved.unpersistCached()
-      // the CC input graph (alias ∪ name-similarity edges) is
-      // vocabulary-sized; checkpointing it means no CC action ever
-      // replays the name-blocking pipeline. Rule (as in Pipeline.run): a
-      // stage's consumers read its checkpoint, never a persisted
-      // DataFrame whose plan is the stage's DAG. Over a cache of resolve
-      // this write ran 18-19 jobs / 2.2-2.3 s (400 pages, 4-core VM), the
-      // cached DAG repeated under every blocking branch; over the parquet
-      // 9-11 jobs / 0.9-1.6 s, same edges.
-      Pipeline.ccEdges(readLinked(), readAlias())
-        .write.mode(SaveMode.Overwrite).parquet(graphPath)
-    }
-    val canonical = Pipeline.canonicalize(
-      spark, readLinked().as[Schema.LinkedMention], readAlias(),
-      preGraph = Some(spark.read.schema(Pipeline.graphSchema).parquet(graphPath)))
+    // ---- the batch build's link stage, its checkpoints keyed by
+    // coverage: linking is a pure function of the accumulated triples
+    // multiset, and within a run the landed set only grows, so the
+    // covered row count identifies it exactly. A fold interrupted after
+    // this stage resumes from its parquet instead of re-running alias
+    // discovery + ambiguity resolution (the dominant fold cost).
+    val linkStage = new ParquetTableIO(s"$workDir/link_stage")
+    val linked = Pipeline.link(spark, raw.drop("batch").as[Triple],
+      (linkStage, s"linked_$nCovered"), (linkStage, s"alias_$nCovered"), reuse = true)
+    val canonical = Pipeline.canonicalize(spark, linked.mentions, linked.aliases)
     val base = labels.latest()
     val next = base.getOrElse(0L) + 1
     // labels first (nodes/edges derive from the same plan; any failure
@@ -261,49 +203,6 @@ object StreamingPipeline {
     // reuse this one). Without the prune link_stage grows as
     // O(folds × corpus) and cc_labels as O(folds × vocabulary) on tmpfs.
     labels.prune(base.getOrElse(next))
-    stages.foreach(_.prune(nCovered))
-  }
-
-  /** Per-entity running state over the stream. */
-  final case class EntityState(total: Long, firstSeenMs: Long)
-  /** One update row per entity per micro-batch; `crossed_hot` fires
-    * exactly once, on the batch where the cumulative mention weight
-    * first reaches `hotThreshold` (a streaming skew/hot-key detector —
-    * the feed that would size salting upstream). */
-  final case class EntityUpdate(
-      entity: String, total: Long, first_seen_ms: Long, crossed_hot: Boolean)
-
-  /** Custom cross-batch state via `flatMapGroupsWithState`: cumulative
-    * mention weight per entity, carried in `GroupState` across
-    * micro-batches (the arbitrary-state API — aggregations can't express
-    * "emit once on threshold crossing"). State is per-entity
-    * (vocabulary-sized), not per-document — bounded by construction. */
-  def entityRunningTotals(spark: SparkSession, pages: Dataset[Page],
-      hotThreshold: Long = 50L): Dataset[EntityUpdate] = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val mentions = pages.flatMap { p =>
-      // rawText, not p.text: html-only pages must count like in batch
-      Pipeline.triplesForDoc(p.url, Pipeline.rawText(p))
-        .filter(_.pred == "mentionsEntity")
-        .map(t => (Py.lower(t.obj), t.weight.toLong, p.warc_ts.getTime))
-    }
-    mentions
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (entity: String, rows: Iterator[(String, Long, Long)],
-            state: GroupState[EntityState]) => {
-          val batch = rows.toVector
-          if (batch.isEmpty) Iterator.empty
-          else {
-            val add = batch.map(_._2).sum
-            val firstTs = batch.map(_._3).min
-            val prev = state.getOption.getOrElse(EntityState(0L, firstTs))
-            val next = EntityState(prev.total + add, math.min(prev.firstSeenMs, firstTs))
-            state.update(next)
-            val crossed = prev.total < hotThreshold && next.total >= hotThreshold
-            Iterator.single(EntityUpdate(entity, next.total, next.firstSeenMs, crossed))
-          }
-        })
+    Seq("linked_", "alias_").foreach(new Ledger(spark, s"$workDir/link_stage", _).prune(nCovered))
   }
 }

@@ -1,7 +1,9 @@
 package graft.kg.io
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Pluggable table I/O (SURVEY §7.0): the north rule targets Iceberg
   * tables, but no Iceberg runtime jar ships in this sandbox (offline
@@ -25,8 +27,13 @@ final class ParquetTableIO(root: String, buckets: Int = 0, bucketCol: String = "
 
   private def path(table: String) = s"$root/$table"
 
+  // the schema of each table this instance last wrote: a read with the
+  // known schema skips the footer-merge job of schema inference. A
+  // concurrent map, since stage writes run in parallel.
+  private val written = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
   def read(spark: SparkSession, table: String): DataFrame = {
-    val df = spark.read.parquet(path(table))
+    val df = Option(written.get(table)).fold(spark.read)(spark.read.schema).parquet(path(table))
     if (buckets > 0 && df.columns.contains("bucket")) df.drop("bucket") else df
   }
 
@@ -37,6 +44,7 @@ final class ParquetTableIO(root: String, buckets: Int = 0, bucketCol: String = "
     } else {
       df.write.mode(mode).parquet(path(table))
     }
+    written.put(table, df.schema)
   }
 
   def exists(spark: SparkSession, table: String): Boolean = Ledger.complete(spark, path(table))
@@ -54,12 +62,24 @@ final class ParquetTableIO(root: String, buckets: Int = 0, bucketCol: String = "
   * layout to the table format. */
 final class BucketedTableIO(buckets: Int, bucketCol: String) extends TableIO {
   def read(spark: SparkSession, table: String): DataFrame = spark.table(table)
-  def write(df: DataFrame, table: String, mode: SaveMode = SaveMode.Overwrite): Unit =
+  def write(df: DataFrame, table: String, mode: SaveMode = SaveMode.Overwrite): Unit = {
+    val spark = df.sparkSession
+    // cross-JVM restart: the default in-memory catalog forgets managed
+    // tables, but their warehouse directories survive — a fresh
+    // saveAsTable into an existing location throws. Clear the orphaned
+    // location first (table not in the catalog ∧ dir present ⇒ a
+    // previous JVM's write; with a persistent metastore the table exists
+    // and resume skips the write instead).
+    if (!spark.catalog.tableExists(table)) {
+      val loc = new Path(spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
+      loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
+    }
     df.write.mode(mode)
       .bucketBy(buckets, bucketCol)
       .sortBy(bucketCol)
       .format("parquet")
       .saveAsTable(table)
+  }
   def exists(spark: SparkSession, table: String): Boolean =
     spark.catalog.tableExists(table)
 }

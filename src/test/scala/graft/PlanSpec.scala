@@ -170,8 +170,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("per-url triple extraction is a purely narrow pass (zero shuffles)") {
     val pages = graft.kg.PagesGen.pages(spark, 10L)
-    val triples = graft.kg.Pipeline.extractTriples(spark,
-      graft.kg.Pipeline.extractClean(spark, pages, 4))
+    val triples = graft.kg.Pipeline.triplesFromPages(spark, pages)
     val exchanges = "Exchange".r.findAllIn(plan(triples.toDF())).size
     assert(exchanges == 0, s"extraction must not shuffle:\n${plan(triples.toDF())}")
   }

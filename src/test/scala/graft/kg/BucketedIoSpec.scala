@@ -53,4 +53,19 @@ class BucketedIoSpec extends AnyFunSuite {
       spark.sql("DROP TABLE IF EXISTS bkt_right")
     }
   }
+
+  test("write clears an orphaned warehouse location a previous JVM left behind") {
+    val io = new BucketedTableIO(4, "doc_id")
+    val table = "bkt_orphan"
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    // the table's default location holds files, but the catalog (a fresh
+    // in-memory one after a restart) does not know the table
+    val loc = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"), table)
+    spark.range(3).toDF("doc_id").write.mode("overwrite").parquet(loc.toString)
+    assert(!spark.catalog.tableExists(table))
+    try {
+      io.write(spark.range(10, 15).toDF("doc_id"), table)
+      assert(io.read(spark, table).collect().map(_.getLong(0)).sorted.toSeq == (10L until 15L))
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
 }

@@ -57,7 +57,7 @@ class JobBudgetSpec extends AnyFunSuite {
       StreamingPipeline.runIncremental(spark, pages, work, recanonEvery = 2)
     }
     info(s"runIncremental jobs: $jobs")
-    assert(jobs <= 112, s"runIncremental ran $jobs jobs")
+    assert(jobs <= 110, s"runIncremental ran $jobs jobs")
   }
 
   test("Pipeline.run over a fixed PagesGen window stays within its job budget") {

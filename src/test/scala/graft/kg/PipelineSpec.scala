@@ -148,9 +148,32 @@ class PipelineSpec extends AnyFunSuite {
     }
     rmrf(new java.io.File(dir + "/nodes"))
     rmrf(new java.io.File(dir + "/edges"))
-    val nodes2 = Pipeline.run(spark, PagesGen.pages(spark, 60L), cfg)
-      .nodes.orderBy("entity_id").collect().toSeq.map(_.toString)
+    // the rerun's writes, as a listener sees them: delivery is in order,
+    // so once metrics_partition (the run's last write) arrives, all have
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        qe.optimizedPlan.collectFirst {
+          case w: org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand =>
+            w.outputPath.toString
+        }.foreach(writes.add)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    def wrote(stage: String) = writes.toArray.exists(_.toString.endsWith(s"/$stage"))
+    spark.listenerManager.register(listener)
+    val nodes2 = try {
+      val r = Pipeline.run(spark, PagesGen.pages(spark, 60L), cfg)
+        .nodes.orderBy("entity_id").collect().toSeq.map(_.toString)
+      val deadline = System.currentTimeMillis + 30000L
+      while (!wrote("metrics_partition") && System.currentTimeMillis < deadline) Thread.sleep(50)
+      r
+    } finally spark.listenerManager.unregister(listener)
     assert(nodes1 == nodes2)
+    assert(wrote("metrics_partition") && wrote("nodes") && wrote("edges"), writes.toString)
+    // the link stage reused its complete checkpoints
+    assert(!wrote("linked_mentions") && !wrote("alias_edges"), writes.toString)
   }
 
   test("bucketed-layout build: identical results, exchange-free per-url consumption") {

@@ -5,11 +5,50 @@ import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.Files
 
 /** Structured Streaming: the streaming triple path must produce exactly
-  * the batch pipeline's triples; windowed aggregation with watermark
-  * completes on a bounded source. */
+  * the batch pipeline's triples, and the incremental KG fold exactly the
+  * batch pipeline's nodes and edges. */
 class StreamingSpec extends AnyFunSuite {
+  import StreamingSpec.Observed
   private lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  /** Observe the queries `body` runs. Listener delivery is asynchronous
+    * but in order: once `outputs` writes to `nodes_stream`/`edges_stream`
+    * (a fold's last writes) have arrived, every earlier query has too. */
+  private def observed(body: => Unit, outputs: Int): Observed = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    // the columns of each cached relation a physical plan scans
+    def scans(p: SparkPlan): Seq[Seq[String]] = p.flatMap {
+      case s: InMemoryTableScanExec => Seq(s.relation.output.map(_.name))
+      case a: AdaptiveSparkPlanExec => scans(a.inputPlan)
+      case _ => Nil
+    }
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val caches = new java.util.concurrent.ConcurrentLinkedQueue[(Seq[String], Seq[Seq[String]])]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.optimizedPlan.foreach {
+          case w: InsertIntoHadoopFsRelationCommand => writes.add(w.outputPath.toString)
+          case r: InMemoryRelation =>
+            caches.add((r.output.map(_.name), scans(r.cacheBuilder.cachedPlan)))
+          case _ =>
+        }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    def folded = writes.toArray.count(w => w.toString.matches(".*/(nodes|edges)_stream/?"))
+    spark.listenerManager.register(listener)
+    try {
+      body
+      val deadline = System.currentTimeMillis + 30000L
+      while (folded < outputs && System.currentTimeMillis < deadline) Thread.sleep(50)
+      assert(folded == outputs, s"$folded of $outputs fold outputs observed")
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    Observed(writes.asScala.toSeq, caches.asScala.toSeq)
+  }
 
   test("streaming triples == batch triples on the same pages") {
     val dir = Files.createTempDirectory("pages").toString
@@ -24,43 +63,10 @@ class StreamingSpec extends AnyFunSuite {
 
     val got = spark.table("stream_triples")
       .select("url", "pred", "obj").as[(String, String, String)].collect().toSet
-    val batch = Pipeline.extractTriples(spark,
-      Pipeline.extractClean(spark, PagesGen.pages(spark, 80L), 4))
+    val batch = Pipeline.triplesFromPages(spark, PagesGen.pages(spark, 80L))
       .map(t => (t.url, t.pred, t.obj)).collect().toSet
     assert(got == batch)
     assert(got.nonEmpty)
-  }
-
-  test("watermarked windowed aggregation produces entity counts") {
-    val dir = Files.createTempDirectory("pages2").toString
-    PagesGen.pages(spark, 50L).write.mode("overwrite").parquet(dir)
-    val agg = StreamingPipeline.entityMentionsWindowed(
-      spark, StreamingPipeline.readPages(spark, dir))
-    val q = agg.writeStream
-      .format("memory").queryName("stream_agg").outputMode("complete")
-      .trigger(Trigger.AvailableNow()).start()
-    q.processAllAvailable(); q.stop()
-    val rows = spark.table("stream_agg").collect()
-    assert(rows.nonEmpty)
-    assert(rows.exists(_.getAs[String]("entity") == "cnn"), "hot entity must appear")
-  }
-
-  test("streaming dedup drops duplicate texts with bounded state") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ts = new java.sql.Timestamp(1767225600000L)
-    def page(url: String, text: String) = Schema.Page(url, ts, null, text, "en")
-    val in = MemoryStream[Schema.Page]
-    val q = StreamingPipeline.streamDedup(spark, in.toDS(), "1 hour")
-      .writeStream.format("memory").queryName("stream_dedup").outputMode("append").start()
-    in.addData(page("u1", "same text"), page("u2", "same text"), page("u3", "other text"))
-    q.processAllAvailable()
-    // a later micro-batch duplicate within the watermark is also dropped
-    in.addData(page("u4", "same text"))
-    q.processAllAvailable(); q.stop()
-    val urls = spark.table("stream_dedup").select("url").as[String].collect().sorted
-    assert(urls.length == 2, urls.mkString(","))
-    assert(urls.contains("u3"))
   }
 
   test("deterministic hash sampling composes with streams: stream == batch") {
@@ -100,30 +106,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(got.count() > 0)
   }
 
-  test("flatMapGroupsWithState carries entity totals across micro-batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ts = new java.sql.Timestamp(1767225600000L)
-    // two SGD mentions per page (count >= 2 gate) -> weight 2 per page
-    val text = "the Stochastic Gradient Descent (SGD) step and the SGD baseline."
-    def page(url: String) = Schema.Page(url, ts, null, text, "en")
-    val in = MemoryStream[Schema.Page]
-    val updates = StreamingPipeline.entityRunningTotals(spark, in.toDS(), hotThreshold = 3L)
-    val q = updates.writeStream
-      .format("memory").queryName("stream_totals").outputMode("append").start()
-    in.addData(page("u1")); q.processAllAvailable()
-    in.addData(page("u2")); q.processAllAvailable()
-    q.stop()
-    val sgd = spark.table("stream_totals")
-      .where($"entity" === "sgd").orderBy($"total")
-      .as[StreamingPipeline.EntityUpdate].collect()
-    assert(sgd.length == 2, sgd.mkString(";"))
-    assert(sgd(0).total == 2 && !sgd(0).crossed_hot, sgd.mkString(";"))
-    assert(sgd(1).total == 4 && sgd(1).crossed_hot,
-      "threshold crossing must fire exactly on the second batch: " + sgd.mkString(";"))
-    assert(sgd(1).first_seen_ms == ts.getTime)
-  }
-
   test("incremental streaming KG build: linking + canonicalization stream == batch") {
     val nDocs = 120L
     val dir = Files.createTempDirectory("pages_inc").toString
@@ -133,27 +115,20 @@ class StreamingSpec extends AnyFunSuite {
     val pages = spark.readStream.schema(StreamingPipeline.pageSchema)
       .option("maxFilesPerTrigger", 1).parquet(dir).as[Schema.Page]
     val work = Files.createTempDirectory("kginc").toString
-    // plan gate: every CC-graph checkpoint write reads the linking
-    // checkpoints from parquet, never a cached linking DAG
-    val graphWrites = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]()
-    val gate = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit = {
-        val plan = qe.optimizedPlan
-        plan.collectFirst {
-          case w: org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
-              if w.outputPath.toString.contains("/link_stage/graph_") => w.outputPath.toString
-        }.foreach { out =>
-          graphWrites.add((out, plan.exists(
-            _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation])))
-        }
-      }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    val run = observed(StreamingPipeline.runIncremental(spark, pages, work, recanonEvery = 2),
+      outputs = 4)
+    // plan gate: the CC graph (src, dst) and the labeled mentions are
+    // cached over the linking checkpoints' parquet reads, never over a
+    // cached linking DAG. No cached plan the fold builds holds another
+    // cached relation, except inside resolve: its ambiguity split is
+    // built over its own url-alias pairs cache.
+    val split = Seq("acr_key", "exp_key", "n_exp")
+    val pairs = Seq("url", "acr_key", "exp_key")
+    assert(run.caches.exists(_._1 == Seq("src", "dst")), "no cached CC graph was observed")
+    run.caches.foreach { case (cols, nested) =>
+      assert(nested.isEmpty || (cols == split && nested.forall(_ == pairs)),
+        s"the cache of (${cols.mkString(", ")}) plans over cached ${nested.mkString("; ")}")
     }
-    spark.listenerManager.register(gate)
-    try StreamingPipeline.runIncremental(spark, pages, work, recanonEvery = 2)
-    finally spark.listenerManager.unregister(gate)
 
     val batchDir = Files.createTempDirectory("kgincb").toString
     val batchRes = Pipeline.run(spark, PagesGen.pages(spark, nDocs),
@@ -194,13 +169,23 @@ class StreamingSpec extends AnyFunSuite {
     val stages = new java.io.File(s"$work/link_stage").listFiles().map(_.getName)
     val coverages = stages.map(n => n.substring(n.lastIndexOf('_') + 1).toLong).toSet
     assert(coverages == Set(landed), stages.sorted.mkString(","))
-    // listener delivery is asynchronous: wait for the first graph write
-    val deadline = System.currentTimeMillis + 20000L
-    while (graphWrites.isEmpty && System.currentTimeMillis < deadline) Thread.sleep(50)
-    assert(!graphWrites.isEmpty, "no write under link_stage/graph_ was observed")
-    graphWrites.forEach { case (out, cached) =>
-      assert(!cached, s"$out: the CC graph write plans over an InMemoryRelation")
+    // a crash after the last fold's link stage: its labels version and
+    // outputs are lost, its linking checkpoints complete. The restart
+    // folds once, from those checkpoints, and ships the batch tables.
+    def rmrf(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(rmrf)
+      f.delete()
     }
+    Seq(s"cc_labels/${versions.last}", "nodes_stream", "edges_stream")
+      .foreach(d => rmrf(new java.io.File(s"$work/$d")))
+    val rerun = observed(StreamingPipeline.runIncremental(spark, pages, work, recanonEvery = 2),
+      outputs = 2)
+    assert(rerun.writes.count(_.contains("/cc_labels/")) == 1, rerun.writes.mkString(","))
+    assert(!rerun.writes.exists(_.contains("/link_stage/")), rerun.writes.mkString(","))
+    assert(proj(spark.read.parquet(s"$work/nodes_stream"), "canonical_name", "kind", "n_mentions", "n_urls")
+      == proj(batchRes.nodes, "canonical_name", "kind", "n_mentions", "n_urls"))
+    assert(proj(spark.read.parquet(s"$work/edges_stream"), "src_url", "dst_name", "weight")
+      == proj(batchRes.edges, "src_url", "dst_name", "weight"))
   }
 
   test("incremental streaming KG build on a file: URI work dir: stream == batch") {
@@ -234,4 +219,11 @@ class StreamingSpec extends AnyFunSuite {
       .map(_.getName).filter(_.startsWith("v")).sorted
     assert(versions.toSeq == Seq("v1", "v2"), versions.mkString(","))
   }
+}
+
+object StreamingSpec {
+  /** What the queries of one run did: each write's output path, and
+    * each cached relation's columns with the columns of every cached
+    * relation its cached plan scans. */
+  final case class Observed(writes: Seq[String], caches: Seq[(Seq[String], Seq[Seq[String]])])
 }
