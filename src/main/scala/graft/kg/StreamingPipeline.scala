@@ -140,15 +140,17 @@ object StreamingPipeline {
     spark.read.schema(Encoders.product[Triple].schema.add("batch", IntegerType)).parquet(path)
 
   /** (covered triples rows, was-exact) of the LATEST labels version —
-    * the shipped tables must come from an exact fold (a full CC). */
+    * the shipped tables must come from an exact fold (a full CC). An
+    * unparsable marker (a crash between its create and close leaves 0
+    * bytes) reads as nothing covered, so the drain fold reruns. */
   private def coverage(fs: FileSystem, labels: Ledger): (Long, Boolean) =
     labels.latest()
       .map(v => new Path(labels.path(v), "_covered_rows.txt"))
       .filter(fs.exists)
-      .map { f =>
+      .flatMap { f =>
         val in = fs.open(f)
         val parts = try new String(in.readAllBytes(), UTF_8).trim.split(" ") finally in.close()
-        (parts(0).toLong, parts.length > 1 && parts(1) == "exact")
+        parts(0).toLongOption.map((_, parts.length > 1 && parts(1) == "exact"))
       }
       .getOrElse((0L, false))
 

@@ -1,14 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Data-layout operators: Morton (Z-order) clustering for multi-column
-  * scan pruning. At 100 TB the dominant cost of a selective 2-D query
-  * (`x BETWEEN … AND y BETWEEN …`) is the files it CANNOT skip: a
-  * layout sorted by x alone gives tight per-file min/max envelopes on x
-  * but every file spans the full y range, so a y-predicate prunes
-  * nothing. Interleaving the bits of (x, y) into one z-value and
+/** Data-layout operators: input spreading, and Morton (Z-order)
+  * clustering for multi-column scan pruning. At 100 TB the dominant
+  * cost of a selective 2-D query (`x BETWEEN … AND y BETWEEN …`) is
+  * the files it CANNOT skip: a layout sorted by x alone gives tight
+  * per-file min/max envelopes on x but every file spans the full y
+  * range, so a y-predicate prunes nothing. Interleaving the bits of (x, y) into one z-value and
   * range-partitioning + sorting by it bounds every file to a small
   * rectangle of the (x, y) plane — parquet footer min/max stats (or
   * Iceberg manifest ranges) then skip files on EITHER predicate. The
@@ -17,6 +17,17 @@ import org.apache.spark.sql.functions._
   * mapping is reproducible in any engine and sits under the DuckDB
   * oracle gate. */
 object Layout {
+
+  /** Spread `ds` round-robin over the session parallelism before a
+    * CPU-fat per-row stage (regex extraction, chunking, synthetic media
+    * encode/decode). Such a stage runs one task per input split, and an
+    * sf0.x `documents.parquet` (or a one-file micro-batch) is one split,
+    * so unspread it runs single-core (the sf0.1 media lanes: 11 s on one
+    * task vs ~1.5 s spread). The one place every query spreads its
+    * input: an input that already reads as enough splits still pays the
+    * exchange here. */
+  def spread[T](ds: Dataset[T]): Dataset[T] =
+    ds.repartition(ds.sparkSession.sparkContext.defaultParallelism)
 
   /** Append a Morton z-value column interleaving `bits` bits of the
     * min-max-scaled `x` and `y` columns (x owns even bit positions, y

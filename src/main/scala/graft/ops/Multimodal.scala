@@ -55,16 +55,6 @@ object Multimodal {
     else "bin"
   }
 
-  /** REAL raster decode: pixel dimensions via `javax.imageio.ImageIO`
-    * (in the JDK). Returns None when the bytes aren't a decodable image
-    * — caller falls back to the stub. */
-  def imageDims(bytes: Array[Byte]): Option[(Int, Int)] =
-    if (bytes == null || bytes.length == 0) None
-    else try {
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-      if (img == null) None else Some((img.getWidth, img.getHeight))
-    } catch { case scala.util.control.NonFatal(_) => None }
-
   /** ==== STUB ==== deterministic fake decoder for NON-raster payloads:
     * the `format` column comes from REAL magic-byte sniffing
     * (sniffFormat); width/height/frames/embedding are pseudo-values

@@ -1,8 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.{Cdc, Curation, Dedup, Multimodal, Packing, Retrieval, Similarity, TextAnalysis}
+import graft.ops.{Cdc, Curation, Dedup, Layout, Multimodal, Packing, Retrieval, Similarity, TextAnalysis}
 
 /** Training-data pipeline operators as driver-contract queries with
   * DuckDB oracles: deduplication (exact / MinHash-LSH / SimHash /
@@ -20,6 +20,15 @@ object DataOps {
     s.read.parquet(s"$dir/documents.parquet")
   private def emb(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/embeddings.parquet")
+
+  /** The doc ids the synthetic media lanes encode and decode from,
+    * spread over the session: the per-row encode+decode is CPU-fat,
+    * and over a one-split input the whole lane runs on a single task
+    * (measured: 11 s single-task vs ~1.5 s spread). */
+  private def docIds(s: SparkSession, dir: String): Dataset[Long] = {
+    import s.implicits._
+    Layout.spread(docs(s, dir).select(col("doc_id").cast("long")).as[Long])
+  }
 
   /** The canonical WARC page derivation shared by the batch round-trip
     * (`src_warc_roundtrip`), the CDX index (`src_cdx_index`) and the
@@ -1317,12 +1326,7 @@ object DataOps {
     // channels/rate/bits/frames to the oracle's arithmetic
     "mm_wav_meta" -> ((s, dir) => {
       import s.implicits._
-      val wavs = docs(s, dir).select(col("doc_id").cast("long")).as[Long]
-        // spread the id list across the session parallelism: the synthetic
-        // media encode+decode below is CPU-fat per row while the input is
-        // ONE small scan split — unspread, the whole pipeline runs on a
-        // single task (measured: 11 s single-task vs ~1.5 s spread)
-        .repartition(s.sparkContext.defaultParallelism)
+      val wavs = docIds(s, dir)
         .mapPartitions(_.map { id =>
           val rate = (8000 + (id % 5) * 4000).toInt
           val channels = (1 + id % 2).toInt
@@ -1342,12 +1346,7 @@ object DataOps {
     // round-trip the oracle's arithmetic
     "mm_media_meta" -> ((s, dir) => {
       import s.implicits._
-      val media = docs(s, dir).select(col("doc_id").cast("long")).as[Long]
-        // spread the id list across the session parallelism: the synthetic
-        // media encode+decode below is CPU-fat per row while the input is
-        // ONE small scan split — unspread, the whole pipeline runs on a
-        // single task (measured: 11 s single-task vs ~1.5 s spread)
-        .repartition(s.sparkContext.defaultParallelism)
+      val media = docIds(s, dir)
         .mapPartitions(_.map { id =>
           val w = (16 + id % 16).toInt
           val h = (16 + id % 8).toInt
@@ -1364,12 +1363,7 @@ object DataOps {
 
     "mm_decode_real" -> ((s, dir) => {
       import s.implicits._
-      val pngs = docs(s, dir).select(col("doc_id").cast("long")).as[Long]
-        // spread the id list across the session parallelism: the synthetic
-        // media encode+decode below is CPU-fat per row while the input is
-        // ONE small scan split — unspread, the whole pipeline runs on a
-        // single task (measured: 11 s single-task vs ~1.5 s spread)
-        .repartition(s.sparkContext.defaultParallelism)
+      val pngs = docIds(s, dir)
         .mapPartitions(_.map { id =>
           val w = (16 + id % 32).toInt
           val h = (16 + (id + 7) % 32).toInt
@@ -1390,12 +1384,7 @@ object DataOps {
     // pixels, not of the PNG byte stream.
     "mm_embed" -> ((s, dir) => {
       import s.implicits._
-      val pngs = docs(s, dir).select(col("doc_id").cast("long")).as[Long]
-        // spread the id list across the session parallelism: the synthetic
-        // media encode+decode below is CPU-fat per row while the input is
-        // ONE small scan split — unspread, the whole pipeline runs on a
-        // single task (measured: 11 s single-task vs ~1.5 s spread)
-        .repartition(s.sparkContext.defaultParallelism)
+      val pngs = docIds(s, dir)
         .mapPartitions(_.map { id =>
           val w = (16 + (id % 4) * 8).toInt
           val h = (8 + (id % 3) * 8).toInt
@@ -1415,12 +1404,7 @@ object DataOps {
     // disagreeing cells (≡ bit_count(xor), no packed-sign hazard).
     "dd_image_neardups" -> ((s, dir) => {
       import s.implicits._
-      val hashed = docs(s, dir).select(col("doc_id").cast("long")).as[Long]
-        // spread the id list across the session parallelism: the synthetic
-        // media encode+decode below is CPU-fat per row while the input is
-        // ONE small scan split — unspread, the whole pipeline runs on a
-        // single task (measured: 11 s single-task vs ~1.5 s spread)
-        .repartition(s.sparkContext.defaultParallelism)
+      val hashed = docIds(s, dir)
         .mapPartitions(_.flatMap { id =>
           val pert = if (id % 3 == 0) 2L else 77777L
           for {

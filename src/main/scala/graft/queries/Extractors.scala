@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.kg.{RefAnalyzers, Udfs}
+import graft.ops.Layout
 
 /** Oracle-checked coverage of the reference extractor families (SURVEY
   * §2.9 E1-E11, §2.5 A1-A4) — driven through the REAL Scala extractors
@@ -69,17 +70,10 @@ object Extractors {
   private def enrDf(s: SparkSession, dir: String): DataFrame =
     docs(s, dir).select(col("doc_id"), enriched.as("t"))
 
-  /** The documents table is ONE small parquet file = one scan split, so
-    * a regex-UDF extractor over it runs single-core; the UDF-heavy
-    * queries spread the slim (doc_id, text) rows across the session
-    * parallelism first (same rationale as the media/streaming lanes —
-    * measured: en_equations 2.0 s single-task at sf0.1). Trivial column
-    * queries keep the narrow single-split scan. */
-  private def spread(s: SparkSession, df: DataFrame): DataFrame =
-    df.repartition(s.sparkContext.defaultParallelism)
-
+  /** [[enrDf]] for the regex-UDF extractors; trivial column queries
+    * keep the narrow scan. */
   private def enrDfSpread(s: SparkSession, dir: String): DataFrame =
-    spread(s, docs(s, dir)).select(col("doc_id"), enriched.as("t"))
+    Layout.spread(docs(s, dir)).select(col("doc_id"), enriched.as("t"))
 
   private val stopwordList: String =
     RefAnalyzers.Stopwords.toSeq.sorted.map(w => s"'$w'").mkString(",")
@@ -228,14 +222,14 @@ object Extractors {
 
     // A2 unigram term frequency (shared tokenizer, stopword-filtered)
     "a2_unigram_tf" -> ((s, dir) =>
-      spread(s, docs(s, dir))
+      Layout.spread(docs(s, dir))
         .select(col("doc_id"), explode(Udfs.keywordTokens(col("text"))).as("token"))
         .groupBy(col("doc_id"), col("token"))
         .agg(count(lit(1)).as("cnt"))),
 
     // A3 bigram term frequency over adjacent filtered tokens
     "a3_bigram_tf" -> ((s, dir) => {
-      val toks = spread(s, docs(s, dir))
+      val toks = Layout.spread(docs(s, dir))
         .select(col("doc_id"), posexplode(Udfs.keywordTokens(col("text"))).as(Seq("i", "token")))
       val next = toks.select(col("doc_id"), (col("i") - 1).as("i"), col("token").as("token2"))
       toks.join(next, Seq("doc_id", "i"))
@@ -247,7 +241,7 @@ object Extractors {
 
     // A4 full keyword merge (ordered output through the real extractor)
     "a4_keywords" -> ((s, dir) =>
-      spread(s, docs(s, dir))
+      Layout.spread(docs(s, dir))
         .select(col("doc_id"), posexplode(Udfs.keywords(col("text"))).as(Seq("pos", "keyword")))
         .select(col("doc_id"), (col("pos") + 1).as("position"), col("keyword"))),
 

@@ -186,15 +186,9 @@ object KgQueries {
       // run would leak a full pipeline output into RAM-backed /dev/shm
       sys.addShutdownHook(
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work)))
-      // the documents table is ONE small parquet file = one scan split,
-      // so the regex-heavy extraction stage would run single-core
-      // (measured ~10 s of a ~13 s build). Pipeline.run itself stays
-      // narrow by design (shuffling an html-fat source is the 100-TB
-      // bill); THIS projection is slim (html is null), so the spread
-      // belongs at the call site — same rationale as the streaming
-      // lane's extractParallelism.
-      Pipeline.run(s,
-        kgPages(s, dir).repartition(s.sparkContext.defaultParallelism),
+      // Pipeline.run stays narrow (an html-fat source must not
+      // shuffle); this projection is slim (html is null), so it spreads
+      Pipeline.run(s, graft.ops.Layout.spread(kgPages(s, dir)),
         Pipeline.Config(work, nPartitions = 16))
       work
     })
@@ -315,9 +309,7 @@ object KgQueries {
     "kg_chunks" -> ((s, dir) =>
       s.read.parquet(s"$dir/documents.parquet")
         .where(col("doc_id") % 2 === 0)
-        // single-file scan = one split; spread before the chunker UDF
-        // (same rationale as the extractor/media lanes)
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(graft.ops.Layout.spread)
         .select(col("doc_id"), posexplode(graft.kg.Udfs.chunkText(
           graft.kg.Udfs.cleanText(repeat(concat(col("text"), lit(" ")), 3)))).as(Seq("chunk_id", "c")))
         .select(col("doc_id"), col("chunk_id"), col("c.content").as("content"),

@@ -191,13 +191,8 @@ object StreamingQueries {
     // Pipeline.triplesForDoc)
     "st_kg_triples" -> ((s, dir) => {
       import s.implicits._
-      // a micro-batch is ONE small file = one scan split, so the
-      // regex-heavy extraction would run single-core per batch;
-      // repartition the slim projected pages across the session
-      // parallelism first (the same spread runIncremental applies via
-      // extractParallelism)
-      val pages = graft.queries.KgQueries.pageProjection(streamTbl(s, dir, "documents"))
-        .repartition(s.sparkContext.defaultParallelism)
+      val pages = graft.ops.Layout.spread(
+        graft.queries.KgQueries.pageProjection(streamTbl(s, dir, "documents")))
         .as[graft.kg.Schema.Page]
       runToSink(s,
         graft.kg.StreamingPipeline.streamTriples(s, pages).toDF()
@@ -377,13 +372,11 @@ object StreamingQueries {
         .writeStream
         .outputMode("append")
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // one micro-batch = one scan split: spread the slim
-          // (doc_id, text) shard across the session parallelism before
-          // the CPU-fat fingerprint kernels, and overlap the two
-          // independent index writes as concurrent jobs (they share the
-          // persisted shard; block-level dedup scans it once)
-          val shard = DataOps.ddExpand(
-              batch.repartition(s.sparkContext.defaultParallelism))
+          // spread the slim (doc_id, text) shard before the CPU-fat
+          // fingerprint kernels, and overlap the two independent index
+          // writes as concurrent jobs (they share the persisted shard;
+          // block-level dedup scans it once)
+          val shard = DataOps.ddExpand(graft.ops.Layout.spread(batch))
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           try graft.kg.Pipeline.inParallel(Seq(
             () => graft.ops.Dedup.minhashBands(

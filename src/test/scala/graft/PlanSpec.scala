@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SparkPlan
 import graft.kg.TestSpark
+import scala.jdk.CollectionConverters._
 
 /** Physical-plan quality gates (the 100-TB checklist): filters and
   * projections must reach the parquet scan, small dims must broadcast,
@@ -85,6 +86,26 @@ class PlanSpec extends AnyFunSuite {
     // formatted mode marks whole-stage-codegen stages with `[codegen id : n]`
     assert(p.contains("[codegen id :"), p)
     assert(p.contains("* HashAggregate"), p)
+  }
+
+  test("input spreading: every spreading leaf holds exactly one round-robin exchange") {
+    // one leaf per query family that spreads its (one-split) input
+    for (q <- Seq("mm_embed", "a4_keywords", "kg_chunks")) {
+      val p = plan(SparkEntry.queries(q)(spark, dir))
+      assert("RoundRobinPartitioning".r.findAllIn(p).size == 1,
+        s"$q: expected one round-robin exchange:\n$p")
+    }
+  }
+
+  test("input spreading has one home: no repartition(defaultParallelism) outside Layout.spread") {
+    val copy = """repartition\((?:[^()]|\([^()]*\))*defaultParallelism""".r
+    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val found = try sources.iterator().asScala.toSeq finally sources.close()
+    val offenders = found.filter(f => f.toString.endsWith(".scala") &&
+        !f.endsWith(java.nio.file.Paths.get("graft/ops/Layout.scala")))
+      .filter(f => copy.findFirstIn(java.nio.file.Files.readString(f)).isDefined)
+    assert(found.exists(_.toString.endsWith("Layout.scala")), "src/main/scala not found")
+    assert(offenders.isEmpty, s"spread the input with Layout.spread in: ${offenders.mkString(", ")}")
   }
 
   test("dedup exact-groups plan has a single shuffle") {
