@@ -2,6 +2,7 @@ package graft.kg
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.Layout.materialize
 
 /** DataFrame connected components — the canonicalization clustering step
   * (north_rule). GraphX is RDD-based; the north rule mandates typed
@@ -11,8 +12,9 @@ import org.apache.spark.sql.functions._
   * SoCC'14): each round (a) every vertex adopts the min label in its
   * direct neighborhood (one shuffle agg + join), then (b) labels chase
   * their own label (pointer jump — halves chain depth, giving O(log d)
-  * rounds on diameter-d components). `localCheckpoint` per round cuts
-  * lineage blowup; convergence is an `isEmpty` probe on changed labels.
+  * rounds on diameter-d components). Materializing each round
+  * ([[graft.ops.Layout.materialize]]) cuts lineage blowup; convergence
+  * is an observed changed-label count.
   *
   * Input: edges (src: Long, dst: Long), undirected.
   * Output: (id: Long, component: Long) — component = min id reachable.
@@ -47,9 +49,26 @@ object ConnectedComponents {
   /** Like `run`, but also returns the number of distributed rounds
     * executed (0 = the driver fast path solved it) — the at-scale
     * evidence hook: tools/CcBench forces the distributed loop and
-    * records rounds + wall for BENCH/BASELINE.md. */
+    * records rounds + wall for BENCH/BASELINE.md.
+    *
+    * The `(src, dst)` projection of `edges` is persisted for the call
+    * and released before it returns: the distributed branch reads it a
+    * second time (the `sym` materialization, after the path-picking
+    * collect), and callers' edge plans embed whole upstream passes
+    * (name blocking, LSH pairs) that would otherwise replay. On the
+    * driver path the cache is one in-memory write of a graph that is
+    * under the driver budget by definition. Every returned table is
+    * materialized, so none reads the released cache. */
   def runWithStats(spark: SparkSession, edges: DataFrame, maxIterations: Int = 25,
       driverSolveThreshold: Long = DriverSolveMaxEdges): (DataFrame, Int) = {
+    val es = edges.select(col("src"), col("dst"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try solve(spark, es, maxIterations, driverSolveThreshold)
+    finally es.unpersist(false)
+  }
+
+  private def solve(spark: SparkSession, edges: DataFrame, maxIterations: Int,
+      driverSolveThreshold: Long): (DataFrame, Int) = {
     import spark.implicits._
 
     // ONE collect both picks the path and feeds the driver solve: at most
@@ -57,7 +76,7 @@ object ConnectedComponents {
     // over it (a budget past Int range is capped there: 2^31 edges are
     // ~600 GB of driver heap at the measured 283.7 B/edge)
     val budget = math.max(-1L, math.min(driverSolveThreshold, Int.MaxValue - 1L)).toInt
-    val es = edges.select($"src", $"dst").as[(Long, Long)].limit(budget + 1).collect()
+    val es = edges.as[(Long, Long)].limit(budget + 1).collect()
     if (es.length <= budget) {
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {
@@ -85,16 +104,14 @@ object ConnectedComponents {
         .toDF("id", "component"), 0)
     }
 
-    val sym = edges.select($"src", $"dst")
+    val sym = materialize(edges
       .union(edges.select($"dst".as("src"), $"src".as("dst")))
       .where($"src" =!= $"dst")
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
 
-    var labels = sym.select($"src".as("id")).union(sym.select($"dst".as("id")))
+    var labels = materialize(sym.select($"src".as("id")).union(sym.select($"dst".as("id")))
       .distinct()
-      .withColumn("component", $"id")
-      .localCheckpoint(true)
+      .withColumn("component", $"id"))
 
     var converged = labels.isEmpty
     var iter = 0
@@ -115,12 +132,11 @@ object ConnectedComponents {
       // (b) pointer jump: component := label(component)
       val parents = adopted.select($"id".as("component"), $"component".as("parent"))
       val obs = org.apache.spark.sql.Observation()
-      val jumped = adopted.join(parents, Seq("component"), "left")
+      val jumped = materialize(adopted.join(parents, Seq("component"), "left")
         .select($"id", $"prev",
           least($"component", coalesce($"parent", $"component")).as("component"))
         .observe(obs, sum(when($"component" =!= $"prev", 1L).otherwise(0L)).as("changed"))
-        .select($"id", $"component")
-        .localCheckpoint(true)
+        .select($"id", $"component"))
 
       converged = obs.get("changed").asInstanceOf[Long] == 0L
       labels = jumped
@@ -164,14 +180,13 @@ object ConnectedComponents {
       .union(delta.select(col("dst").as("id"))).distinct()
     // components holding a delta endpoint — the only ones that can merge.
     // Both derived tables are delta-sized but cost one full label-table
-    // scan each to compute — eagerly materialized (localCheckpoint) so
-    // the loop's count/sym passes and the caller's actions replay the
-    // TINY tables, not repeated scans of a 10^12-row label history.
-    val touchedComps = prevLabels.join(ends, Seq("id"))
-      .select(col("component")).distinct().localCheckpoint(true)
-    val stars = prevLabels.join(touchedComps, Seq("component"))
-      .select(col("id").as("src"), col("component").as("dst"))
-      .localCheckpoint(true)
+    // scan each to compute — eagerly materialized so the loop's passes
+    // and the caller's actions replay the TINY tables, not repeated
+    // scans of a 10^12-row label history.
+    val touchedComps = materialize(prevLabels.join(ends, Seq("id"))
+      .select(col("component")).distinct())
+    val stars = materialize(prevLabels.join(touchedComps, Seq("component"))
+      .select(col("id").as("src"), col("component").as("dst")))
     val (relabeled, rounds) =
       runWithStats(spark, delta.union(stars), maxIterations, driverSolveThreshold)
     val untouched = prevLabels.join(touchedComps, Seq("component"), "left_anti")

@@ -139,7 +139,9 @@ object Pipeline {
     * repartition: triple emission is per-row; plain parquet carries no
     * bucketing metadata, so a shuffle here buys nothing downstream —
     * every per-url aggregation shuffles on its own key anyway, and on
-    * far lighter projected rows). */
+    * far lighter projected rows). Per-row, so it runs unchanged on a
+    * streaming `pages` too: the streaming lane's triples come from this
+    * same code. */
   def triplesFromPages(spark: SparkSession, pages: Dataset[Page]): Dataset[Triple] = {
     import spark.implicits._
     pages.flatMap(p => triplesForDoc(p.url, rawText(p)))
@@ -211,32 +213,20 @@ object Pipeline {
   /** Canonicalize entity keys: CC over alias edges; canonical name = the
     * member with the highest total mention weight (ties → lexicographic).
     * All aggregations two-phase over (entity, url) to defuse hot-key skew
-    * before the final per-component reduction. The only place the CC
-    * graph is materialized: `linked` and `aliases` are the link stage's
-    * checkpoint reads, so the cached graph's plan holds parquet scans,
-    * not a cached linking DAG. */
+    * before the final per-component reduction. `linked` and `aliases`
+    * are the link stage's checkpoint reads, so the CC graph that
+    * [[ConnectedComponents.run]] caches for its call plans over parquet
+    * scans, not a cached linking DAG. */
   def canonicalize(
       spark: SparkSession,
       linked: Dataset[LinkedMention],
       aliases: DataFrame): Canonical = {
     import spark.implicits._
 
-    // PERSISTED: the CC's distributed fallback runs several actions on
-    // this plan (its edge probe, then the loop's seed), and the plan
-    // embeds the name-blocking pass — without the persist every action
-    // replays it end to end. The edge table itself is vocabulary-sized,
-    // so the cache never grows with the corpus. (Writing it to parquet
-    // and reading it back instead ran 25 jobs to this cache's 24 over
-    // the same linking checkpoints, 400 and 2,000 pages, local[4].)
-    val graph = ccEdges(linked.toDF(), aliases)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ccLabels = ConnectedComponents.run(
-      spark, graph,
+      spark, ccEdges(linked.toDF(), aliases),
       // fast-path budget from the driver's real heap, not a constant
       driverSolveThreshold = ConnectedComponents.driverEdgeBudget())
-    // CC has fully materialized its labels (driver collect, or the
-    // loop's eager localCheckpoints) — the graph cache is done
-    graph.unpersist(false)
 
     // entity_key -> component (keys not in any alias edge are their own
     // component). Persisted: nodes AND edges both derive from it, and the

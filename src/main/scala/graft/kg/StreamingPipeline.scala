@@ -32,13 +32,6 @@ object StreamingPipeline {
     spark.readStream.schema(pageSchema).parquet(dir).as[Page]
   }
 
-  /** Same per-row extraction as the batch pipeline — reused verbatim so
-    * streaming and batch results are identical by construction. */
-  def streamTriples(spark: SparkSession, pages: Dataset[Page]): Dataset[Triple] = {
-    import spark.implicits._
-    pages.flatMap(p => Pipeline.triplesForDoc(p.url, Pipeline.rawText(p)))
-  }
-
   // ------------------------------------------------- incremental KG build
   /** The STATEFUL half of the KG build on a stream — linking +
     * canonicalization, not just extraction. Extraction runs inside each
@@ -88,7 +81,7 @@ object StreamingPipeline {
     // projection is slim (html already dropped/null); for a fat-row
     // corpus prefer more files per trigger over this shuffle.
     val src = if (extractParallelism > 0) pages.repartition(extractParallelism) else pages
-    val q = streamTriples(spark, src).toDF()
+    val q = Pipeline.triplesFromPages(spark, src).toDF()
       .writeStream
       .option("checkpointLocation", s"$workDir/ckpt")
       .outputMode("append")

@@ -2,7 +2,6 @@ package graft.kg.io
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /** Pluggable table I/O (SURVEY §7.0): the north rule targets Iceberg
@@ -19,11 +18,9 @@ trait TableIO {
   def exists(spark: SparkSession, table: String): Boolean
 }
 
-/** Parquet-directory tables under a root path. Layout implements the
-  * north rule's explicit url-hash partitioning as a `bucket=` directory
-  * column when `bucketExpr` is provided — the same spec an Iceberg table
-  * would carry as `bucket(N, url)` partition transform metadata. */
-final class ParquetTableIO(root: String, buckets: Int = 0, bucketCol: String = "url") extends TableIO {
+/** Parquet-directory tables under a root path: the stage checkpoints.
+  * The url-hash layout is [[BucketedTableIO]]'s. */
+final class ParquetTableIO(root: String) extends TableIO {
 
   private def path(table: String) = s"$root/$table"
 
@@ -32,18 +29,11 @@ final class ParquetTableIO(root: String, buckets: Int = 0, bucketCol: String = "
   // concurrent map, since stage writes run in parallel.
   private val written = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
-  def read(spark: SparkSession, table: String): DataFrame = {
-    val df = Option(written.get(table)).fold(spark.read)(spark.read.schema).parquet(path(table))
-    if (buckets > 0 && df.columns.contains("bucket")) df.drop("bucket") else df
-  }
+  def read(spark: SparkSession, table: String): DataFrame =
+    Option(written.get(table)).fold(spark.read)(spark.read.schema).parquet(path(table))
 
   def write(df: DataFrame, table: String, mode: SaveMode = SaveMode.Overwrite): Unit = {
-    if (buckets > 0 && df.columns.contains(bucketCol)) {
-      df.withColumn("bucket", pmod(xxhash64(col(bucketCol)), lit(buckets)))
-        .write.mode(mode).partitionBy("bucket").parquet(path(table))
-    } else {
-      df.write.mode(mode).parquet(path(table))
-    }
+    df.write.mode(mode).parquet(path(table))
     written.put(table, df.schema)
   }
 

@@ -512,17 +512,9 @@ object Dedup {
     * (CC labels are longs). Output: (id, cluster, is_canonical) for
     * every input doc; training keeps `is_canonical`. */
   def dedupClusters(df: DataFrame, id: String, pairs: DataFrame): DataFrame = {
-    // CC runs two actions on the edge plan (count, then collect or the
-    // loop's seed); without a persist the whole LSH pair pipeline
-    // upstream would execute twice. CC materializes everything it needs
-    // (driver collect / eager localCheckpoint), so the persist is
-    // released before returning.
-    val p = pairs.select(col("id1").as("src"), col("id2").as("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val labels = graft.kg.ConnectedComponents.run(
-      df.sparkSession, p,
+      df.sparkSession, pairs.select(col("id1").as("src"), col("id2").as("dst")),
       driverSolveThreshold = graft.kg.ConnectedComponents.driverEdgeBudget())
-    p.unpersist(false)
     // canonical = the min id PRESENT IN df within the cluster — NOT
     // simply id == cluster label: when pairs were computed on a wider
     // corpus than df (pairs ids ⊄ df ids, a normal composition), the CC

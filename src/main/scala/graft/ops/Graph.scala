@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import Layout.materialize
 
 /** Graph analytics over the materialized KG tables
   * (/root/reference has no graph consumer for its store — this is the
@@ -13,19 +14,36 @@ import org.apache.spark.sql.functions._
   * never be hash-compared cross-engine. */
 object Graph {
 
-  /** Shared ledger step for the iterative ops: with a `ledgerDir`,
-    * write `df` to `dir/name` and read it back (lineage depth 1,
-    * restartable per step); without one, apply `fallback` (identity for
-    * pageRank's single-reference loop, localCheckpoint for kCore's
-    * twice-referenced survivor set). */
-  private def ledgered(ledgerDir: Option[String], df: DataFrame, name: String)(
-      fallback: DataFrame => DataFrame): DataFrame = ledgerDir match {
-    case None => fallback(df)
-    case Some(dir) =>
-      val path = s"$dir/$name"
-      df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
-      df.sparkSession.read.parquet(path)
+  /** An edge list as undirected (a, b) pairs, a < b: self-loops and
+    * duplicate or mirrored edges collapse. */
+  private def undirected(edges: DataFrame, src: String, dst: String): DataFrame =
+    edges
+      .select(least(col(src), col(dst)).as("a"), greatest(col(src), col(dst)).as("b"))
+      .where(col("a") =!= col("b"))
+      .distinct()
+
+  /** Both directions of every [[undirected]] pair. */
+  private def mirrored(und: DataFrame): DataFrame =
+    und.unionAll(und.select(col("b").as("a"), col("a").as("b")))
+
+  /** The weight column as a long, for the integer-exact operators: a
+    * non-integral type fails `require` (a float weight would make `div`
+    * coerce), and a value outside [lo, hi] raises in-plan via
+    * `raise_error` — the check rides the first pass over the edges, so
+    * a bad weight fails the job instead of wrapping silently. */
+  private def guardedWeight(edges: DataFrame, weight: String, opName: String,
+      typeNote: String, lo: Long, hi: Long, why: String): Column = {
+    val wType = edges.schema(weight).dataType.typeName
+    require(Seq("byte", "short", "integer", "long").contains(wType),
+      s"$opName: weight column '$weight' must be integral, got $wType" + typeNote)
+    val w = col(weight).cast("long")
+    when(w > hi || w < lo,
+      raise_error(concat(lit(s"$opName: weight must be in [$lo, $hi] $why: "),
+        col(weight).cast("string"))))
+      .otherwise(w)
   }
+
+  private val exactNote = " — integer arithmetic is the operator's bit-exactness contract"
 
   /** Deterministic weighted PageRank over an edge list, with every edge
     * mirrored (src↔dst) so the bipartite url→entity KG keeps rank
@@ -37,13 +55,11 @@ object Graph {
     * (damping 0.85 as the 85/100 integer pair). Per iteration: one join
     * of the static weighted-degree edge table with the current ranks and
     * one partial-aggregated shuffle on dst — the standard iterative
-    * DataFrame PageRank shape. The unrolled lineage is fine for fixed
-    * small `iters` (the default); pass `ledgerDir` to checkpoint ranks
-    * to parquet each iteration (the kg.Pipeline / ivfTopK ledger
-    * pattern) — lineage stays one-iteration deep no matter how many
-    * sweeps run, each iteration restarts from the last `ranks_<k>` dir,
-    * and the integer arithmetic makes the ledgered run BIT-identical to
-    * the unrolled one. Output: (vertex, pr) for every vertex.
+    * DataFrame PageRank shape. Each sweep's ranks go through
+    * [[Layout.materialize]], so lineage stays one sweep deep no matter
+    * how many sweeps run, and the integer arithmetic makes the result
+    * BIT-identical whichever materialization the session picks.
+    * Output: (vertex, pr) for every vertex.
     *
     * Preconditions (enforced): the weight column must be an integral
     * type — a float weight would make `div` coerce and break the
@@ -58,16 +74,15 @@ object Graph {
     * aggregation), so a bad weight fails the job loudly instead of
     * wrapping silently. */
   def pageRank(edges: DataFrame, src: String, dst: String, weight: String,
-      iters: Int = 5, scale: Long = 1000000000L,
-      ledgerDir: Option[String] = None): DataFrame =
-    prCore(edges, src, dst, weight, None, None, iters, scale, ledgerDir, "pageRank")
+      iters: Int = 5, scale: Long = 1000000000L): DataFrame =
+    prCore(edges, src, dst, weight, None, None, iters, scale, "pageRank")
       .withColumnRenamed("rank", "pr")
 
   /** WARM-START PageRank — incremental maintenance under crawl refresh:
     * resume the Jacobi sweeps from a prior run's ranks (`priorRanks`:
-    * first column = vertex, second = rank — e.g. the `ranks_k` parquet a
-    * `ledgerDir` run left behind) instead of the uniform init. The
-    * recurrence is MEMORYLESS, so on an unchanged graph j warm sweeps
+    * first column = vertex, second = rank — e.g. a previous run's
+    * [[pageRank]] output, stored by the caller) instead of the uniform
+    * init. The recurrence is MEMORYLESS, so on an unchanged graph j warm sweeps
     * from the k-sweep state are BIT-IDENTICAL to k+j cold sweeps (the
     * kg_pagerank_warm oracle is literally the cold (k+j)-sweep program —
     * the equality is under the hash gate, not a unit-test approximation);
@@ -77,13 +92,12 @@ object Graph {
     * `priorRanks` (new pages in the refreshed crawl) start at 0 and pick
     * up teleport + contribution mass from sweep 1. */
   def pageRankWarmStart(edges: DataFrame, src: String, dst: String, weight: String,
-      priorRanks: DataFrame, iters: Int, scale: Long = 1000000000L,
-      ledgerDir: Option[String] = None): DataFrame = {
+      priorRanks: DataFrame, iters: Int, scale: Long = 1000000000L): DataFrame = {
     val init = priorRanks.select(
       col(priorRanks.columns(0)).as("v"),
       col(priorRanks.columns(1)).cast("long").as("r0"))
-    prCore(edges, src, dst, weight, None, Some(init), iters, scale, ledgerDir,
-      "pageRankWarmStart").withColumnRenamed("rank", "pr")
+    prCore(edges, src, dst, weight, None, Some(init), iters, scale, "pageRankWarmStart")
+      .withColumnRenamed("rank", "pr")
   }
 
   /** Personalized PageRank — [[pageRank]]'s integer-exact recurrence
@@ -103,17 +117,15 @@ object Graph {
     * IGNORED: the teleport denominator counts only seeds present in the
     * graph (an absent seed has no vertex row to receive restart mass —
     * counting it would silently deflate every rank), and if NO seed is
-    * present the job fails loudly in-plan. Supports the same
-    * `ledgerDir` checkpointing as [[pageRank]]. Output: (vertex, ppr)
-    * for every vertex. */
+    * present the job fails loudly in-plan. Output: (vertex, ppr) for
+    * every vertex. */
   def personalizedPageRank(edges: DataFrame, src: String, dst: String,
       weight: String, seeds: DataFrame, iters: Int = 5,
-      scale: Long = 1000000000L,
-      ledgerDir: Option[String] = None): DataFrame = {
+      scale: Long = 1000000000L): DataFrame = {
     val sd = seeds.select(col(seeds.columns.head).as("v")).distinct()
     require(!sd.isEmpty, "personalizedPageRank: empty seed set")
-    prCore(edges, src, dst, weight, Some(sd), None, iters, scale, ledgerDir,
-      "personalizedPageRank").withColumnRenamed("rank", "ppr")
+    prCore(edges, src, dst, weight, Some(sd), None, iters, scale, "personalizedPageRank")
+      .withColumnRenamed("rank", "ppr")
   }
 
   /** The ONE copy of the bit-exactness-critical integer recurrence both
@@ -125,41 +137,27 @@ object Graph {
     * the uniform case). */
   private def prCore(edges: DataFrame, src: String, dst: String,
       weight: String, seeds: Option[DataFrame], init: Option[DataFrame],
-      iters: Int, scale: Long,
-      ledgerDir: Option[String], opName: String): DataFrame = {
-    val wType = edges.schema(weight).dataType
-    require(Seq("byte", "short", "integer", "long").contains(wType.typeName),
-      s"$opName: weight column '$weight' must be integral, got ${wType.typeName} — " +
-        "integer arithmetic is the operator's bit-exactness contract")
-    val maxW = Long.MaxValue / scale
-    val wGuarded = when(col(weight).cast("long") > maxW || col(weight).cast("long") < 1L,
-      raise_error(concat(
-        lit(s"$opName: weight must be in [1, ${maxW}] " +
-          "(non-positive corrupts weighted degrees; larger overflows scale*w): "),
-        col(weight).cast("string"))))
-      .otherwise(col(weight).cast("long"))
-    // with a ledger, each iteration's ranks land in parquet and the next
-    // reads them back — lineage never grows past one join+agg; without
-    // one, materialize per sweep (localCheckpoint, the kCore/LPA/BFS
-    // pattern) — the unrolled multi-sweep plan is correct but its
-    // planning cost grows with iters (measured ~100 KB explain at 5
-    // sweeps) while each sweep's tables are vertex-sized
-    def checkpoint(df: DataFrame, name: String): DataFrame =
-      ledgered(ledgerDir, df, name)(_.localCheckpoint())
+      iters: Int, scale: Long, opName: String): DataFrame = {
+    val wGuarded = guardedWeight(edges, weight, opName, exactNote,
+      1L, Long.MaxValue / scale, "(non-positive corrupts weighted degrees; larger overflows scale*w)")
+    // materialize per sweep (the kCore/LPA/BFS pattern): the unrolled
+    // multi-sweep plan is correct but its planning cost grows with iters
+    // (measured ~100 KB explain at 5 sweeps) while each sweep's tables
+    // are vertex-sized
     val ed = edges.select(col(src).as("src"), col(dst).as("dst"), wGuarded.as("w"))
       .unionAll(edges.select(col(dst).as("src"), col(src).as("dst"), wGuarded.as("w")))
     val deg = ed.groupBy(col("src")).agg(sum(col("w")).as("wdeg"))
     // the static loop-invariant sides (weighted-degree edges, flagged
-    // vertex list) are ledgered ONCE so iterations re-read parquet
-    // instead of re-running the degree aggregation every sweep
-    val edeg = checkpoint(ed.join(deg, "src"), "edges_deg")
+    // vertex list) are materialized ONCE so sweeps re-read them instead
+    // of re-running the degree aggregation every sweep
+    val edeg = materialize(ed.join(deg, "src"))
     val verts0 = ed.select(col("src").as("v")).distinct()
-    val verts = checkpoint(seeds match {
+    val verts = materialize(seeds match {
       case None => verts0.select(col("v"), lit(1).as("s"))
       case Some(sd) => verts0
         .join(broadcast(sd.withColumn("__seed", lit(1))), Seq("v"), "left")
         .select(col("v"), coalesce(col("__seed"), lit(0)).as("s"))
-    }, "vertices")
+    })
     // seeded case: n counts seeds ∩ vertex set (rides the already-flagged
     // vertex list — no extra pass), not the raw seed input: an
     // out-of-graph seed has no vertex row, so counting it would leak its
@@ -173,7 +171,7 @@ object Graph {
           lit(s"$opName: no seed vertex is present in the edge set")))
           .otherwise(col("n0")).as("n"))
     }
-    var ranks = checkpoint(init match {
+    var ranks = materialize(init match {
       // warm start: prior ranks replace the uniform init (vertices the
       // prior run never saw start at 0 and fill from sweep 1)
       case Some(ir) => verts
@@ -182,17 +180,16 @@ object Graph {
       case None => verts.crossJoin(broadcast(nn))
         .select(col("v"), col("s"),
           expr(s"CASE WHEN s = 1 THEN ${scale}L div n ELSE 0L END").as("r"))
-    }, "ranks_0")
+    })
     for (k <- 1 to iters) {
       val contrib = edeg.join(ranks.select(col("v").as("src"), col("r")), "src")
         .select(col("dst").as("v"), expr("(r * w) div wdeg").as("c"))
         .groupBy(col("v")).agg(sum(col("c")).as("cs"))
-      ranks = checkpoint(verts.join(contrib, Seq("v"), "left")
+      ranks = materialize(verts.join(contrib, Seq("v"), "left")
         .crossJoin(broadcast(nn))
         .select(col("v"), col("s"),
           expr(s"CASE WHEN s = 1 THEN (15 * (${scale}L div n)) div 100 ELSE 0L END" +
-            " + (85 * coalesce(cs, 0L)) div 100").as("r")),
-        s"ranks_$k")
+            " + (85 * coalesce(cs, 0L)) div 100").as("r")))
     }
     ranks.select(col("v").as("vertex"), col("r").as("rank"))
   }
@@ -208,25 +205,19 @@ object Graph {
     * an engine with no iteration primitive (the oracle unrolls the same
     * rounds; OpsSpec pins convergence by comparing rounds to rounds+1).
     *
-    * Survivors are MATERIALIZED each round (localCheckpoint, or a
-    * parquet ledger via `ledgerDir` — the pageRank pattern, restartable
-    * per round). This is not an optimization: each round references the
+    * Survivors are MATERIALIZED each round ([[Layout.materialize]]).
+    * This is not an optimization: each round references the
     * survivor set TWICE (both join sides), and Catalyst plans are trees,
     * so an unrolled loop duplicates the previous round's subtree per
     * reference — 2^rounds plan nodes, which stalls the optimizer dead
-    * around 8 rounds. Checkpointing caps the tree at one round.
+    * around 8 rounds. Materializing caps the tree at one round.
     * Input treated as undirected; self-loops and duplicate/mirrored
     * edges collapse first. Output: (vertex, deg) — the core-induced
     * degree. */
   def kCore(edges: DataFrame, src: String, dst: String, k: Int,
-      rounds: Int, ledgerDir: Option[String] = None): DataFrame = {
+      rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, "kCore: need k >= 1 and rounds >= 1")
-    def materialize(df: DataFrame, name: String): DataFrame =
-      ledgered(ledgerDir, df, name)(_.localCheckpoint())
-    val und = materialize(edges
-      .select(least(col(src), col(dst)).as("a"), greatest(col(src), col(dst)).as("b"))
-      .where(col("a") =!= col("b"))
-      .distinct(), "edges_und")
+    val und = materialize(undirected(edges, src, dst))
     var live = und.select(col("a").as("v")).unionAll(und.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("deg"))
     for (r <- 1 to rounds) {
@@ -235,7 +226,7 @@ object Graph {
         .join(live.select(col("v").as("b")), Seq("b"))
       live = materialize(e2.select(col("a").as("v")).unionAll(e2.select(col("b").as("v")))
         .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-        .where(col("deg") >= k), s"survivors_$r")
+        .where(col("deg") >= k))
     }
     live.select(col("v").as("vertex"), col("deg"))
   }
@@ -253,21 +244,13 @@ object Graph {
     * mirrored edge list with the current labels and two
     * partial-aggregated shuffles ((vertex, label) counts, then the
     * per-vertex max) — hot labels combine map-side. Labels materialize
-    * per round (localCheckpoint, or a parquet ledger via `ledgerDir` —
-    * the kCore pattern) so lineage stays one round deep.
+    * per round (the kCore pattern) so lineage stays one round deep.
     * Input treated as undirected; self-loops and duplicate/mirrored
     * edges collapse first. Output: (vertex, community). */
   def labelPropagation(edges: DataFrame, src: String, dst: String,
-      rounds: Int, ledgerDir: Option[String] = None): DataFrame = {
+      rounds: Int): DataFrame = {
     require(rounds >= 1, "labelPropagation: need rounds >= 1")
-    def materialize(df: DataFrame, name: String): DataFrame =
-      ledgered(ledgerDir, df, name)(_.localCheckpoint())
-    val und = edges
-      .select(least(col(src), col(dst)).as("a"), greatest(col(src), col(dst)).as("b"))
-      .where(col("a") =!= col("b"))
-      .distinct()
-    val esym = materialize(
-      und.unionAll(und.select(col("b").as("a"), col("a").as("b"))), "edges_sym")
+    val esym = materialize(mirrored(undirected(edges, src, dst)))
     var labels = esym.select(col("a").as("v")).distinct()
       .withColumn("label", col("v"))
     for (r <- 1 to rounds) {
@@ -277,7 +260,7 @@ object Graph {
       labels = materialize(cnts
         .groupBy(col("a"))
         .agg(max(struct(col("cnt"), col("label"))).as("top"))
-        .select(col("a").as("v"), col("top.label").as("label")), s"labels_$r")
+        .select(col("a").as("v"), col("top.label").as("label")))
     }
     labels.select(col("v").as("vertex"), col("label").as("community"))
   }
@@ -288,31 +271,24 @@ object Graph {
     * anti-join against the visited set — the standard distributed BFS
     * shape (frontier-sized work per round, never the whole graph except
     * the one edge-list join probe). The visited set materializes per
-    * round (localCheckpoint / `ledgerDir` parquet). First discovery =
+    * round. First discovery =
     * minimum hop count, so a bounded-depth transitive-closure re-derivation
     * (recursive CTE + min) oracles it exactly. Output: (vertex, dist)
     * for every vertex within `maxHops` of the source, source included
     * at dist 0. */
   def bfsDistances(edges: DataFrame, src: String, dst: String,
-      source: String, maxHops: Int, ledgerDir: Option[String] = None): DataFrame = {
+      source: String, maxHops: Int): DataFrame = {
     require(maxHops >= 1, "bfsDistances: need maxHops >= 1")
-    def materialize(df: DataFrame, name: String): DataFrame =
-      ledgered(ledgerDir, df, name)(_.localCheckpoint())
-    val und = edges
-      .select(least(col(src), col(dst)).as("a"), greatest(col(src), col(dst)).as("b"))
-      .where(col("a") =!= col("b"))
-      .distinct()
-    val esym = materialize(
-      und.unionAll(und.select(col("b").as("a"), col("a").as("b"))), "edges_sym")
+    val esym = materialize(mirrored(undirected(edges, src, dst)))
     var visited = materialize(esym.sparkSession.range(1)
-      .select(lit(source).as("v"), lit(0L).as("dist")), "visited_0")
+      .select(lit(source).as("v"), lit(0L).as("dist")))
     for (r <- 1 to maxHops) {
       val frontier = visited.where(col("dist") === (r - 1))
       val next = esym.join(frontier.select(col("v").as("a")), Seq("a"))
         .select(col("b").as("v")).distinct()
         .join(visited, Seq("v"), "left_anti")
         .withColumn("dist", lit(r.toLong))
-      visited = materialize(visited.unionAll(next), s"visited_$r")
+      visited = materialize(visited.unionAll(next))
     }
     visited.select(col("v").as("vertex"), col("dist"))
   }
@@ -332,16 +308,14 @@ object Graph {
     * celebrity node visited by many walks replicates its adjacency into
     * the argmin's map-side combine, which crushes it before the
     * shuffle; pre-cap adjacency (`Curation.capPerGroup`) if degrees are
-    * unbounded. `ledgerDir` materializes each frontier (the
-    * bfsDistances pattern) so walkLength doesn't unroll lineage.
+    * unbounded. Each frontier materializes (the bfsDistances pattern)
+    * so walkLength doesn't unroll lineage.
     * Output: (start, wid, step, node) — step 0 is the start itself. */
   def randomWalks(edges: DataFrame, src: String, dst: String,
       starts: DataFrame, startCol: String, walkLength: Int,
-      walksPerNode: Int = 1, ledgerDir: Option[String] = None): DataFrame = {
+      walksPerNode: Int = 1): DataFrame = {
     require(walkLength >= 1 && walksPerNode >= 1,
       "randomWalks: need walkLength, walksPerNode >= 1")
-    def materialize(df: DataFrame, name: String): DataFrame =
-      ledgered(ledgerDir, df, name)(_.localCheckpoint())
     val adj = edges.select(col(src).as("node"), col(dst).as("nxt"))
     var cur = starts.select(col(startCol).as("start")).distinct()
       .select(col("start"),
@@ -360,8 +334,7 @@ object Graph {
         cands.groupBy(col("start"), col("wid"))
           .agg(min(struct(col("h"), col("nxt"))).as("m"))
           .select(col("start"), col("wid"), lit(s).as("step"),
-            col("m.nxt").as("node")),
-        s"walk_$s")
+            col("m.nxt").as("node")))
       all = all.unionAll(cur)
     }
     all
@@ -380,10 +353,7 @@ object Graph {
     * Input treated as undirected; self-loops and duplicate/mirrored
     * edges are collapsed first. Output: one row (n_triangles). */
   def triangleCount(edges: DataFrame, src: String, dst: String): DataFrame = {
-    val und = edges
-      .select(least(col(src), col(dst)).as("a"), greatest(col(src), col(dst)).as("b"))
-      .where(col("a") =!= col("b"))
-      .distinct()
+    val und = undirected(edges, src, dst)
     val deg = und.select(col("a").as("v")).unionAll(und.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("d"))
     val fwd = struct(col("da"), col("a")) < struct(col("db"), col("b"))
@@ -420,53 +390,39 @@ object Graph {
     * one hash join of the static edge list with the current scores, one
     * partial-aggregated shuffle on the receiving endpoint, and one
     * broadcast of the scalar max — the pageRank shape run twice.
-    * Lineage grows linearly in `iters` (each score table is referenced
-    * once); pass `ledgerDir` to checkpoint each half-sweep to parquet
-    * (restartable, bit-identical to the unrolled run). Weight contract =
+    * Each half-sweep's scores materialize (see below); the integer
+    * arithmetic keeps them bit-identical whichever materialization the
+    * session picks. Weight contract =
     * pageRank's: integral type required, positivity and the overflow
     * bound enforced lazily in-plan via `raise_error`. Output:
     * (vertex, hub, auth) for every vertex, zeros where a side never
     * receives mass (no out-edges ⇒ hub 0 after round 1's norm, no
     * in-edges ⇒ auth 0). */
   def hits(edges: DataFrame, src: String, dst: String, weight: String,
-      iters: Int = 3, scale: Long = 1000000L,
-      ledgerDir: Option[String] = None): DataFrame = {
+      iters: Int = 3, scale: Long = 1000000L): DataFrame = {
     require(iters >= 1, "hits: need iters >= 1")
-    val wType = edges.schema(weight).dataType
-    require(Seq("byte", "short", "integer", "long").contains(wType.typeName),
-      s"hits: weight column '$weight' must be integral, got ${wType.typeName} — " +
-        "integer arithmetic is the operator's bit-exactness contract")
-    val maxW = Long.MaxValue / (2 * scale)
-    val wGuarded = when(col(weight).cast("long") > maxW || col(weight).cast("long") < 1L,
-      raise_error(concat(
-        lit(s"hits: weight must be in [1, $maxW] " +
-          "(non-positive corrupts the mutual recursion; larger overflows score*w): "),
-        col(weight).cast("string"))))
-      .otherwise(col(weight).cast("long"))
+    val wGuarded = guardedWeight(edges, weight, "hits", exactNote,
+      1L, Long.MaxValue / (2 * scale), "(non-positive corrupts the mutual recursion; larger overflows score*w)")
     // each iteration references the PREVIOUS scores twice (the max-agg
     // subquery inside normalized() and the main contribution branch), so
     // an un-materialized loop doubles the plan per reference — ~4^iters
     // nodes (measured: 9,000-operator plan, 69 s at 3 iters on a 23-host
     // graph, dominated by Catalyst). Materialize per iteration like
     // kCore/LPA/BFS do; integer arithmetic keeps results bit-identical.
-    def checkpoint(df: DataFrame, name: String): DataFrame =
-      ledgered(ledgerDir, df, name)(_.localCheckpoint())
-    val ed = checkpoint(
-      edges.select(col(src).as("src"), col(dst).as("dst"), wGuarded.as("w")), "edges")
-    val verts = checkpoint(
-      ed.select(col("src").as("v")).unionAll(ed.select(col("dst").as("v"))).distinct(),
-      "vertices")
+    val ed = materialize(
+      edges.select(col(src).as("src"), col(dst).as("dst"), wGuarded.as("w")))
+    val verts = materialize(
+      ed.select(col("src").as("v")).unionAll(ed.select(col("dst").as("v"))).distinct())
     // norm(x): scores land back in [0, ~2*SCALE] without ever multiplying
     // a full-range sum (x*SCALE could overflow; x div (max div SCALE) can't)
-    def normalized(raw: DataFrame, scoreCol: String, name: String): DataFrame = {
+    def normalized(raw: DataFrame, scoreCol: String): DataFrame = {
       val mx = raw.agg(max(col(scoreCol)).as("mx"))
-      checkpoint(
+      materialize(
         raw.crossJoin(broadcast(mx))
           .select(col("v"),
-            expr(s"$scoreCol div greatest(mx div ${scale}L, 1L)").as(scoreCol)),
-        name)
+            expr(s"$scoreCol div greatest(mx div ${scale}L, 1L)").as(scoreCol)))
     }
-    var hubs = checkpoint(verts.select(col("v"), lit(scale).as("h")), "hubs_0")
+    var hubs = materialize(verts.select(col("v"), lit(scale).as("h")))
     var auths: DataFrame = null
     for (k <- 1 to iters) {
       val aRaw = verts.join(
@@ -474,13 +430,13 @@ object Graph {
             .groupBy(col("dst").as("v")).agg(sum(expr("h * w")).as("a")),
           Seq("v"), "left")
         .select(col("v"), coalesce(col("a"), lit(0L)).as("a"))
-      auths = normalized(aRaw, "a", s"auths_$k")
+      auths = normalized(aRaw, "a")
       val hRaw = verts.join(
           ed.join(auths.withColumnRenamed("v", "dst"), "dst")
             .groupBy(col("src").as("v")).agg(sum(expr("a * w")).as("h")),
           Seq("v"), "left")
         .select(col("v"), coalesce(col("h"), lit(0L)).as("h"))
-      hubs = normalized(hRaw, "h", s"hubs_$k")
+      hubs = normalized(hRaw, "h")
     }
     hubs.join(auths, Seq("v"))
       .select(col("v").as("vertex"), col("h").as("hub"), col("a").as("auth"))
@@ -498,36 +454,25 @@ object Graph {
     * beyond the shortest-path tree depth yields exact distances and
     * extra rounds are no-ops (OpsSpec pins convergence rounds vs
     * rounds+1). The distance table is referenced twice per round (join
-    * probe + min-union), so it MATERIALIZES each round (localCheckpoint,
-    * or the parquet ledger via `ledgerDir`) — the kCore 2^rounds-lineage
-    * argument. Weights: integral, ≥ 0 (a 0-cost edge is legal; negative
+    * probe + min-union), so it MATERIALIZES each round — the kCore
+    * 2^rounds-lineage argument. Weights: integral, ≥ 0 (a 0-cost edge is legal; negative
     * would break Bellman-Ford's monotone-min contract), enforced
     * in-plan. Work per round is reached-set-sized, never whole-graph.
     * Output: (vertex, dist) for every vertex reachable within `rounds`
     * hops, source at 0. */
   def ssspDistances(edges: DataFrame, src: String, dst: String, weight: String,
-      source: String, rounds: Int, ledgerDir: Option[String] = None): DataFrame = {
+      source: String, rounds: Int): DataFrame = {
     require(rounds >= 1, "ssspDistances: need rounds >= 1")
-    val wType = edges.schema(weight).dataType
-    require(Seq("byte", "short", "integer", "long").contains(wType.typeName),
-      s"ssspDistances: weight column '$weight' must be integral, got ${wType.typeName}")
-    val maxW = Long.MaxValue / (rounds + 1L)
-    val wGuarded = when(col(weight).cast("long") > maxW || col(weight).cast("long") < 0L,
-      raise_error(concat(
-        lit(s"ssspDistances: weight must be in [0, $maxW] " +
-          "(negative breaks monotone relaxation; larger can overflow a path sum): "),
-        col(weight).cast("string"))))
-      .otherwise(col(weight).cast("long"))
-    def materialize(df: DataFrame, name: String): DataFrame =
-      ledgered(ledgerDir, df, name)(_.localCheckpoint())
+    val wGuarded = guardedWeight(edges, weight, "ssspDistances", "",
+      0L, Long.MaxValue / (rounds + 1L), "(negative breaks monotone relaxation; larger can overflow a path sum)")
     val ed = edges.select(col(src).as("src"), col(dst).as("dst"), wGuarded.as("w"))
     var dist = materialize(edges.sparkSession.range(1)
-      .select(lit(source).as("v"), lit(0L).as("dist")), "dist_0")
+      .select(lit(source).as("v"), lit(0L).as("dist")))
     for (r <- 1 to rounds) {
       val relaxed = ed.join(dist.select(col("v").as("src"), col("dist")), Seq("src"))
         .select(col("dst").as("v"), (col("dist") + col("w")).as("dist"))
       dist = materialize(dist.unionAll(relaxed)
-        .groupBy(col("v")).agg(min(col("dist")).as("dist")), s"dist_$r")
+        .groupBy(col("v")).agg(min(col("dist")).as("dist")))
     }
     dist.select(col("v").as("vertex"), col("dist"))
   }
@@ -556,11 +501,8 @@ object Graph {
       maxDegree: Long = 10000L, scale: Long = 1000000000L,
       metricName: String = "aa_centers"): DataFrame = {
     require(topK >= 1 && maxDegree >= 2, "adamicAdar: need topK >= 1, maxDegree >= 2")
-    val und = edges
-      .select(least(col(src), col(dst)).as("a"), greatest(col(src), col(dst)).as("b"))
-      .where(col("a") =!= col("b"))
-      .distinct()
-    val esym = und.unionAll(und.select(col("b").as("a"), col("a").as("b")))
+    val und = undirected(edges, src, dst)
+    val esym = mirrored(und)
     val centers = esym.groupBy(col("a")).agg(count(lit(1)).as("deg"))
       .observe(metricName,
         sum(when(col("deg") > maxDegree, 1L).otherwise(0L)).as("capped_centers"),

@@ -276,55 +276,37 @@ object Similarity {
     * `lloydSteps` distributed refinements, final inverted lists.
     * Returns (centroids (cid, cv), assignments (vid, cid)) — the serve
     * surface `ivfTopK` probes against and the clustering
-    * `semanticNearDups` pairs within. The corpus quantization persists
-    * through the EAGER phase (k seeding argmin jobs + the ledger's
-    * checkpoint writes all rescan it); with a ledger the returned
-    * tables read from parquet and the persist is released — without
-    * one they stay lazy over the persisted quantization (small/test
-    * scale; MEMORY_AND_DISK evicts via LRU). Unpersisting BEFORE the
-    * caller's serve plan materializes would silently recompute the
-    * corpus quantization on every serve action. */
+    * `semanticNearDups` pairs within. Every Lloyd step's centroids and
+    * the final assignments go through [[Layout.materialize]]: without
+    * it step s would recompute all steps < s, and every downstream
+    * reference of the assignments would replay the whole seed+Lloyd
+    * chain of crossJoin+window steps. The corpus quantization persists
+    * while the model is built (the seeding sample, every step and the
+    * assignments rescan it) and is released once both returned tables
+    * are materialized, so neither reads it. */
   private def ivfModel(corpus: DataFrame, id: String, vec: String,
-      nClusters: Int, lloydSteps: Int, ledgerDir: Option[String],
+      nClusters: Int, lloydSteps: Int,
       seedSampleBp: Int, maxSeedSampleRows: Long): (DataFrame, DataFrame) = {
     require(lloydSteps >= 1, "ivfModel: need at least one Lloyd step")
     val q = corpus.select(col(id).as("vid"), quant(col(vec)).as("qv"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def checkpoint(df: DataFrame, name: String): DataFrame = ledgerDir match {
-      case None => df
-      case Some(dir) =>
-        val path = s"$dir/$name"
-        df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
-        corpus.sparkSession.read.parquet(path)
-    }
-    var cents = checkpoint(
-      farthestPointSeeds(q, nClusters, seedSampleBp, maxSeedSampleRows), "centroids_seed")
-    for (step <- 1 to lloydSteps) {
-      val a = assignClusters(q, cents, 1)
-      // the "centroid" is the per-cluster elementwise sum (exact longs),
-      // never a float mean
-      cents = checkpoint(
-        q.join(a, "vid")
-          .select(col("cid"), posexplode(col("qv")).as(Seq("pos", "x")))
-          .groupBy(col("cid"), col("pos")).agg(sum(col("x")).as("sx"))
-          .groupBy(col("cid"))
-          .agg(transform(array_sort(collect_list(struct(col("pos"), col("sx")))),
-            s => s.getField("sx")).as("cv")),
-        s"centroids_$step")
-    }
-    // the assignment table is referenced several times downstream
-    // (semanticNearDups joins it three ways; ivfTopK probes it) and its
-    // plan embeds the whole seed+Lloyd chain of crossJoin+window steps —
-    // without a ledger, materialize it once (localCheckpoint) instead of
-    // letting every downstream reference replay the chain. Corpus-row
-    // sized (one (vid, cid) pair per vector), the same footprint the
-    // parquet ledger would hold.
-    val aFinal = ledgerDir match {
-      case Some(_) => checkpoint(assignClusters(q, cents, 1), "assignments")
-      case None => assignClusters(q, cents, 1).localCheckpoint()
-    }
-    if (ledgerDir.isDefined) q.unpersist(false)
-    (cents, aFinal)
+    try {
+      var cents = farthestPointSeeds(q, nClusters, seedSampleBp, maxSeedSampleRows)
+      for (_ <- 1 to lloydSteps) {
+        val a = assignClusters(q, cents, 1)
+        // the "centroid" is the per-cluster elementwise sum (exact longs),
+        // never a float mean
+        cents = Layout.materialize(
+          q.join(a, "vid")
+            .select(col("cid"), posexplode(col("qv")).as(Seq("pos", "x")))
+            .groupBy(col("cid"), col("pos")).agg(sum(col("x")).as("sx"))
+            .groupBy(col("cid"))
+            .agg(transform(array_sort(collect_list(struct(col("pos"), col("sx")))),
+              s => s.getField("sx")).as("cv")))
+      }
+      // corpus-row sized: one (vid, cid) pair per vector
+      (cents, Layout.materialize(assignClusters(q, cents, 1)))
+    } finally q.unpersist(false)
   }
 
   /** SemDeDup-style semantic near-duplicate pairs: cluster the corpus
@@ -350,10 +332,10 @@ object Similarity {
     * Output: (id1, id2, cos_sim, cid), id1 < id2. */
   def semanticNearDups(corpus: DataFrame, id: String, vec: String,
       threshold: Double, nClusters: Int = 8, lloydSteps: Int = 2,
-      maxClusterSize: Long = 100000L, ledgerDir: Option[String] = None,
+      maxClusterSize: Long = 100000L,
       seedSampleBp: Int = 2000, maxSeedSampleRows: Long = 1000000L): DataFrame = {
     val (_, aFinal) = ivfModel(corpus, id, vec, nClusters, lloydSteps,
-      ledgerDir, seedSampleBp, maxSeedSampleRows)
+      seedSampleBp, maxSeedSampleRows)
     val kept = aFinal.groupBy(col("cid")).agg(count(lit(1)).as("cluster_n"))
       .observe("semdedup_clusters",
         sum(when(col("cluster_n") > maxClusterSize, 1L).otherwise(0L)).as("capped_clusters"),
@@ -381,22 +363,16 @@ object Similarity {
     * searches only its nProbe nearest lists with an exact cosine
     * re-rank. At 100 TB the probe side reads ~nProbe / nClusters of the
     * corpus instead of all of it; each Lloyd step is one
-    * partial-aggregated shuffle of nClusters×dim cells.
-    *
-    * `ledgerDir`: when set, every Lloyd step's centroid table is
-    * checkpointed to parquet (`centroids_<step>`) and read back — the
-    * `kg.Pipeline` parquet-ledger pattern (exactly how Spark ML's KMeans
-    * persists between iterations). This truncates the growing seed+Lloyd
-    * lineage, makes each step restartable, and at production scale is
-    * mandatory: without it step s recomputes all steps < s. When None
-    * (small/test scale) the composition stays lazy and pure.
+    * partial-aggregated shuffle of nClusters×dim cells, and every
+    * step's centroid table is materialized ([[Layout.materialize]]), so
+    * the seed+Lloyd lineage never grows with the step count; a session
+    * with a checkpoint dir gets reliable step checkpoints.
     * Output: (probe_id, neighbor_id, cos_sim, rank). */
   def ivfTopK(corpus: DataFrame, probes: DataFrame, id: String, vec: String, k: Int,
       nClusters: Int = 8, nProbe: Int = 2, lloydSteps: Int = 2,
-      ledgerDir: Option[String] = None,
       seedSampleBp: Int = 2000, maxSeedSampleRows: Long = 1000000L): DataFrame = {
     val (cents, aFinal) = ivfModel(corpus, id, vec, nClusters, lloydSteps,
-      ledgerDir, seedSampleBp, maxSeedSampleRows)
+      seedSampleBp, maxSeedSampleRows)
     val pq = probes.select(col(id).as("vid"), quant(col(vec)).as("qv"))
     val plists = assignClusters(pq, cents, nProbe).withColumnRenamed("vid", "probe_id")
     val cands = plists.join(aFinal.withColumnRenamed("vid", "neighbor_id"), "cid")

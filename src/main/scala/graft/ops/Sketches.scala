@@ -85,7 +85,7 @@ object Sketches {
       d: Int = 4, w: Int = 1024): DataFrame = {
     // materialize the ≤ d·w-cell table ONCE — slicing a lazy sketch d
     // ways would re-run its whole build (scan + shuffle) per slice
-    val cells = sketch.localCheckpoint()
+    val cells = Layout.materialize(sketch)
     checkParams(cells, "cmsEstimate", d, w)
     var out = probes
     (0 until d).foreach { j =>
@@ -192,7 +192,7 @@ object Sketches {
   def bloomMightContain(bits: DataFrame, probes: DataFrame, value: String,
       d: Int = 3, w: Int = 4096): DataFrame = {
     // materialize the bit table once (same reason as cmsEstimate)
-    val bitTbl = bits.localCheckpoint()
+    val bitTbl = Layout.materialize(bits)
     checkParams(bitTbl, "bloomMightContain", d, w)
     var out = probes.where(col(value).isNotNull)
     (0 until d).foreach { j =>

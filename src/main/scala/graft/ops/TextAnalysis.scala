@@ -223,10 +223,9 @@ object TextAnalysis {
       .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
       .where(col("cnt") >= minCount)
     // " c  h  a  r " — single-space edges, double-space boundaries
-    var dict = words
+    var dict = Layout.materialize(words // the loop re-reads it every round
       .select(col("cnt"),
-        concat(lit(" "), trim(regexp_replace(col("word"), "(.)", "$1  ")), lit(" ")).as("w"))
-      .localCheckpoint(true) // the loop re-reads it every round
+        concat(lit(" "), trim(regexp_replace(col("word"), "(.)", "$1  ")), lit(" ")).as("w")))
     val merges = scala.collection.mutable.Buffer.empty[(Int, String, String, Long)]
     for (r <- 1 to nMerges if merges.size == r - 1) {
       // adjacent pairs paired WITHIN each word's symbol array (explode
@@ -243,9 +242,8 @@ object TextAnalysis {
       if (top.nonEmpty) {
         val (p1, p2, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += ((r, p1, p2, c))
-        dict = dict.select(col("cnt"),
-          replace(col("w"), lit(s" $p1  $p2 "), lit(s" $p1$p2 ")).as("w"))
-          .localCheckpoint(true)
+        dict = Layout.materialize(dict.select(col("cnt"),
+          replace(col("w"), lit(s" $p1  $p2 "), lit(s" $p1$p2 ")).as("w")))
       }
     }
     merges.toSeq.toDF("round", "p1", "p2", "cnt")

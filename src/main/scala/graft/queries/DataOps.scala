@@ -111,6 +111,20 @@ object DataOps {
   private def ddInput(s: SparkSession, dir: String): DataFrame =
     ddExpand(docs(s, dir).select(col("doc_id"), col("text")))
 
+  /** MinHash-verified near-dup pairs of `input` (the Spark side of
+    * `minhashPairCtesWith`): 8×8 signatures → 4-row bands →
+    * `candidates` → exact Jaccard over char-8 shingles, kept at ≥ 0.5.
+    * Signatures come from the narrow single-pass kernel (zero shuffle);
+    * only the verification needs the shingle table. */
+  private def verifiedMinhashPairs(input: DataFrame)(
+      candidates: DataFrame => DataFrame): DataFrame = {
+    val sigs = Dedup.minhashShingles(input, "doc_id", "text", 8, 8)
+    val pairs = candidates(Dedup.minhashBands(sigs, "doc_id", 4))
+    val sh = Dedup.charShingles(input, "doc_id", "text", 8)
+      .withColumnRenamed("shingle", "token")
+    Dedup.jaccardVerify(pairs, sh, "doc_id").where(col("jaccard") >= 0.5)
+  }
+
   /** Banded hyperplane-LSH candidate CTE over `embeddings` (mirrors
     * Similarity.lshBands + bandedCandidates: 4 bands × 8 planes, bucket
     * cap, pairs distinct'd before scoring). Yields `cand(id1, id2)`. */
@@ -383,16 +397,8 @@ object DataOps {
     "dd_minhash_sig" -> ((s, dir) =>
       Dedup.minhashShingles(ddInput(s, dir), "doc_id", "text", 8, 8)),
 
-    "dd_minhash_pairs" -> ((s, dir) => {
-      val input = ddInput(s, dir)
-      // signatures come from the narrow single-pass kernel (zero shuffle);
-      // only the exact-Jaccard verification needs the shingle table
-      val sigs = Dedup.minhashShingles(input, "doc_id", "text", 8, 8)
-      val pairs = Dedup.candidatePairs(Dedup.minhashBands(sigs, "doc_id", 4), "doc_id")
-      val sh = Dedup.charShingles(input, "doc_id", "text", 8)
-        .withColumnRenamed("shingle", "token")
-      Dedup.jaccardVerify(pairs, sh, "doc_id").where(col("jaccard") >= 0.5)
-    }),
+    "dd_minhash_pairs" -> ((s, dir) =>
+      verifiedMinhashPairs(ddInput(s, dir))(Dedup.candidatePairs(_, "doc_id"))),
 
     // ER meta-blocking (SparkER WNP): pairs scored by shared-block count
     // over the SAME band table the LSH dedup uses, pruned by the exact
@@ -416,27 +422,17 @@ object DataOps {
     // found when those shards landed) must NOT re-emit. In production
     // the band index is persisted (ir_index_build pattern) and only the
     // shard is fingerprinted; the stateless contract recomputes it here
-    "dd_delta_pairs" -> ((s, dir) => {
-      val input = ddInput(s, dir)
-      val sigs = Dedup.minhashShingles(input, "doc_id", "text", 8, 8)
-      val pairs = Dedup.deltaCandidatePairs(
-        Dedup.minhashBands(sigs, "doc_id", 4), col("doc_id") >= 2000000L, "doc_id")
-      val sh = Dedup.charShingles(input, "doc_id", "text", 8)
-        .withColumnRenamed("shingle", "token")
-      Dedup.jaccardVerify(pairs, sh, "doc_id").where(col("jaccard") >= 0.5)
-    }),
+    "dd_delta_pairs" -> ((s, dir) =>
+      verifiedMinhashPairs(ddInput(s, dir))(
+        Dedup.deltaCandidatePairs(_, col("doc_id") >= 2000000L, "doc_id"))),
 
     // end-to-end dedup artifact: verified LSH pairs → CC over the pair
     // graph → min-id cluster labels + the canonical-doc flag training
     // actually filters on (same pair scheme as dd_minhash_pairs)
     "dd_dedup_clusters" -> ((s, dir) => {
       val input = ddInput(s, dir)
-      val sigs = Dedup.minhashShingles(input, "doc_id", "text", 8, 8)
-      val cand = Dedup.candidatePairs(Dedup.minhashBands(sigs, "doc_id", 4), "doc_id")
-      val sh = Dedup.charShingles(input, "doc_id", "text", 8)
-        .withColumnRenamed("shingle", "token")
-      val pairs = Dedup.jaccardVerify(cand, sh, "doc_id").where(col("jaccard") >= 0.5)
-      Dedup.dedupClusters(input, "doc_id", pairs)
+      Dedup.dedupClusters(input, "doc_id",
+        verifiedMinhashPairs(input)(Dedup.candidatePairs(_, "doc_id")))
     }),
 
     // training-sequence packing: per-shard concat-and-chunk layout into
@@ -523,17 +519,12 @@ object DataOps {
     }),
 
     // IVF-flat ANN: coarse-quantizer scale path (8 lists, probe 2,
-    // farthest-point seeding, 2 Lloyd steps, parquet centroid ledger);
-    // integer-exact assignment math — the oracle recomputes it verbatim
+    // farthest-point seeding, 2 materialized Lloyd steps); integer-exact
+    // assignment math — the oracle recomputes it verbatim
     "sim_ivf_topk" -> ((s, dir) => {
       val e = emb(s, dir)
-      // exercise the REAL ledger path: centroids checkpoint to parquet
-      // between Lloyd steps exactly as a production run would; ONE
-      // ledger dir per source dir per JVM (repeat invocations overwrite
-      // it rather than leaking tempdirs + shutdown hooks)
-      val ledger = TmpDirs.cached(s"ivf:$dir", "ivf")
       Similarity.ivfTopK(e, e.where(col("vec_id") < 10), "vec_id", "embedding", 5,
-        nClusters = 8, nProbe = 2, lloydSteps = 2, ledgerDir = Some(ledger))
+        nClusters = 8, nProbe = 2, lloydSteps = 2)
     }),
 
     // int8 embedding compression (4 B → 1 B per dim at 100 TB)

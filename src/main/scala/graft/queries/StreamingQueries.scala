@@ -187,15 +187,15 @@ object StreamingQueries {
     // extractor families) runs on a live micro-batch stream of pages and
     // must emit EXACTLY the batch pipeline's triples — the oracle is the
     // same kg_triples SQL re-derivation. Extraction is per-row, so the
-    // streaming lane reuses the batch code verbatim (streamTriples →
-    // Pipeline.triplesForDoc)
+    // streaming lane runs the batch code itself (Pipeline.triplesFromPages
+    // over the stream)
     "st_kg_triples" -> ((s, dir) => {
       import s.implicits._
       val pages = graft.ops.Layout.spread(
         graft.queries.KgQueries.pageProjection(streamTbl(s, dir, "documents")))
         .as[graft.kg.Schema.Page]
       runToSink(s,
-        graft.kg.StreamingPipeline.streamTriples(s, pages).toDF()
+        graft.kg.Pipeline.triplesFromPages(s, pages).toDF()
           .select(col("url"), col("pred"), col("obj"), col("kind"), col("weight")),
         "append")
     }),

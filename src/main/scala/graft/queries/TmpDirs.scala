@@ -3,9 +3,9 @@ package graft.queries
 /** One cached scratch directory per logical key per JVM — tmpfs-backed
   * when available (/dev/shm: this sandbox's single virtual disk is the
   * contention point, not the plan), cleaned up at JVM exit. Shared by
-  * the IVF centroid ledger and the streaming input rewrites so repeat
-  * Bench/Verify invocations reuse ONE dir per key instead of leaking a
-  * tempdir + shutdown hook each. */
+  * the streaming input rewrites so repeat Bench/Verify invocations
+  * reuse ONE dir per key instead of leaking a tempdir + shutdown hook
+  * each. */
 private[queries] object TmpDirs {
   private val dirs = scala.collection.concurrent.TrieMap.empty[String, String]
 

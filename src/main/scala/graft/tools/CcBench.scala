@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
+import graft.ops.Layout.materialize
 
 /** Dev tool: at-scale evidence for the DISTRIBUTED connected-components
   * loop (the path a 10^12-page vocabulary would take). Forces
@@ -23,7 +24,7 @@ object CcBench {
     val linked = spark.read.parquet(s"$work/linked_mentions")
     val aliases = spark.read.parquet(s"$work/alias_edges")
     // materialize inputs first so the timed region is CC alone
-    val edges = Pipeline.ccEdges(linked, aliases).localCheckpoint(true)
+    val edges = materialize(Pipeline.ccEdges(linked, aliases))
     val nEdges = edges.count()
     var t0 = System.nanoTime()
     val (labels, rounds) = ConnectedComponents.runWithStats(
@@ -35,9 +36,8 @@ object CcBench {
 
     // worst-case chains: rounds must track log2(d), not d
     for (d <- Seq(256, 4096)) {
-      val chain = spark.range(d - 1)
-        .select(col("id").as("src"), (col("id") + 1).as("dst"))
-        .localCheckpoint(true)
+      val chain = materialize(spark.range(d - 1)
+        .select(col("id").as("src"), (col("id") + 1).as("dst")))
       t0 = System.nanoTime()
       val (lab, r) = ConnectedComponents.runWithStats(spark, chain, driverSolveThreshold = 0L)
       val ok = lab.where(col("component") =!= 0L).isEmpty
@@ -49,10 +49,9 @@ object CcBench {
     // distributed loop at millions of edges, the scale where the driver
     // fast path stops being an option
     val n = 1 << 22
-    val tree = spark.range(1, n)
+    val tree = materialize(spark.range(1, n)
       .select(col("id").as("src"), (col("id") / 2).cast("long").as("dst"))
-      .repartition(32)
-      .localCheckpoint(true)
+      .repartition(32))
     t0 = System.nanoTime()
     val (lab, r) = ConnectedComponents.runWithStats(spark, tree, driverSolveThreshold = 0L)
     val ok = lab.where(col("component") =!= 0L).isEmpty
@@ -68,25 +67,23 @@ object CcBench {
     // adjacent clusters → 2000 touched components, 8000 touched labels.
     // Wall must track the DELTA, not the 4M-label history.
     val m = 1000000
-    val starsHist = spark.range(m.toLong)
+    val starsHist = materialize(spark.range(m.toLong)
       .select(explode(array(lit(1), lit(2), lit(3))).as("j"), (col("id") * 4).as("base"))
       .select(col("base").as("src"), (col("base") + col("j")).as("dst"))
-      .repartition(32)
-      .localCheckpoint(true)
+      .repartition(32))
     t0 = System.nanoTime()
     val (labH, rH) = ConnectedComponents.runWithStats(spark, starsHist, driverSolveThreshold = 0L)
-    val prevLabels = labH.localCheckpoint(true)
+    val prevLabels = materialize(labH)
     println(f"[ccbench] clusters(1M comps, 3M edges) full solve: rounds=$rH " +
       f"wall=${(System.nanoTime() - t0) / 1e9}%.2f s labels=${prevLabels.count()}")
-    val delta = spark.range(1000L)
-      .select((col("id") * 8).as("src"), (col("id") * 8 + 4).as("dst"))
-      .localCheckpoint(true)
+    val delta = materialize(spark.range(1000L)
+      .select((col("id") * 8).as("src"), (col("id") * 8 + 4).as("dst")))
     t0 = System.nanoTime()
     val (lab2, r2) = ConnectedComponents.incrementalWithStats(
       spark, prevLabels, delta, driverSolveThreshold = 0L)
     // materialize the full labeling (the fold itself) inside the timer;
     // the countDistinct audit below is a separate verification shuffle
-    val lab2Ck = lab2.localCheckpoint(true)
+    val lab2Ck = materialize(lab2)
     val foldWall = (System.nanoTime() - t0) / 1e9
     val nComps2 = lab2Ck.select(countDistinct(col("component"))).head.getLong(0)
     println(f"[ccbench] clusters+delta incremental: deltaEdges=1000 rounds=$r2 " +

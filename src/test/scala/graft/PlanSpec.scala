@@ -108,6 +108,18 @@ class PlanSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"spread the input with Layout.spread in: ${offenders.mkString(", ")}")
   }
 
+  test("materialization has one home: no localCheckpoint( or checkpoint( call outside Layout.materialize") {
+    val call = """\.(?:localC|c)heckpoint\(""".r
+    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val found = try sources.iterator().asScala.toSeq finally sources.close()
+    val offenders = found.filter(f => f.toString.endsWith(".scala") &&
+        !f.endsWith(java.nio.file.Paths.get("graft/ops/Layout.scala")))
+      .flatMap(f => call.findAllIn(java.nio.file.Files.readString(f)).map(_ => f))
+    assert(found.exists(_.toString.endsWith("Layout.scala")), "src/main/scala not found")
+    assert(offenders.isEmpty, s"${offenders.size} calls; materialize with Layout.materialize " +
+      s"in: ${offenders.distinct.mkString(", ")}")
+  }
+
   test("dedup exact-groups plan has a single shuffle") {
     val df = graft.ops.Dedup.exactGroups(
       spark.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")

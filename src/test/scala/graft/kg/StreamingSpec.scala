@@ -54,7 +54,7 @@ class StreamingSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("pages").toString
     PagesGen.pages(spark, 80L).write.mode("overwrite").parquet(dir)
 
-    val stream = StreamingPipeline.streamTriples(
+    val stream = Pipeline.triplesFromPages(
       spark, StreamingPipeline.readPages(spark, dir))
     val q = stream.writeStream
       .format("memory").queryName("stream_triples").outputMode("append")
