@@ -1,6 +1,8 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
@@ -11,7 +13,7 @@ import graft.kg.Schema.{LinkedMention, Triple}
   * linking"):
   *
   *  1. Alias discovery — within a url, acronym A pairs with phrase P when
-  *     initials(P) == A (urlAliasPairs).
+  *     initials(P) == A (urlMentions).
   *  2. Ambiguity split — an acronym whose global pair set holds MORE than
   *     one expansion ("CNN" → convolutional neural network / cable news
   *     network) must NOT become a global alias edge: connected components
@@ -24,24 +26,23 @@ import graft.kg.Schema.{LinkedMention, Triple}
   *     the expansion itself decides instantly); ties break
   *     lexicographically. Deterministic.
   *
-  * Shuffle shape: every read of the triples is a Column filter on `pred`
-  * (and `kind`) plus a projection, so parquet pushes the filter into the
-  * scan and never reads `context`, the bulk of a triple row; keys are
-  * lowered after projection. The ambiguity split is computed ONCE per
-  * resolve and persisted — both outputs read it. Profiles, the split and
-  * candidate tables are entity-vocabulary-sized — small enough that AQE
-  * promotes them to broadcast at runtime; no FORCED broadcast hints (at
-  * 10^12 pages the vocabulary tables can outgrow driver memory, and a
-  * wrong hint OOMs where AQE degrades to a shuffled join). Only the
-  * url-keyword join necessarily shuffles, keyed by url (the natural
-  * partitioning).
+  * Shuffle shape: one url pass, SparkER's block-by-block resolution with
+  * the url as the block. The `mentionsEntity` and `hasKeyword` triples
+  * are each read once — a Column filter on `pred` pushed into the
+  * parquet scan, never reading `context`, the bulk of a triple row — and
+  * their slim projection is shuffled by url once. Each url's block
+  * derives its alias pairs, concept keys, mention groups and keyword
+  * list, and is persisted: both outputs read it. The only global steps
+  * are entity-vocabulary-sized: the ambiguity split and the top-20
+  * expansion profiles, joined into one candidate row per ambiguous
+  * acronym. They join back with no hint, so AQE broadcasts them at
+  * runtime (at 10^12 pages the vocabulary tables can outgrow driver
+  * memory, and a forced hint OOMs where AQE degrades to a shuffled
+  * join), and the pick then runs inside each url's block with no
+  * further exchange. An input with no ambiguous acronym takes the same
+  * path and keeps every mention under its own key.
   */
 object EntityLinking {
-
-  /** Python `str.lower()` over a column: the Scala kernel (Locale.ROOT),
-    * never Spark's `lower`, whose non-ASCII path follows the JVM default
-    * locale. */
-  private val pyLower = udf((s: String) => Py.lower(s))
 
   /** Acronym candidate of a phrase: first letter of each word, uppercased.
     * Word split is Python `str.split()` (Py.split — any whitespace incl.
@@ -49,28 +50,6 @@ object EntityLinking {
     * everywhere else. */
   def initialsOf(phrase: String): String =
     Py.split(phrase).map(w => Character.toUpperCase(w.charAt(0))).mkString
-
-  /** Per-url (acr_key, exp_key) candidate pairs — NOT distinct'd, the
-    * per-url grain carries the local-co-occurrence signal. */
-  def urlAliasPairs(spark: SparkSession, triples: Dataset[Triple]): DataFrame = {
-    import spark.implicits._
-    val ents = triples
-      .where(col("pred") === "mentionsEntity" && col("kind").isin("acronym", "concept"))
-      .select(col("url"), col("obj"), col("kind"))
-      .as[(String, String, String)]
-    ents.groupByKey(_._1)
-      .flatMapGroups { (url, it) =>
-        val ms = it.toVector
-        val acronyms = ms.filter(_._3 == "acronym").map(_._2).distinct
-        val phrases = ms.filter(_._3 == "concept").map(_._2).distinct
-        for {
-          a <- acronyms
-          p <- phrases
-          if initialsOf(p) == a
-        } yield (url, Py.lower(a), Py.lower(p))
-      }
-      .toDF("url", "acr_key", "exp_key")
-  }
 
   /** MinHash-LSH blocking over entity NAMES (north_star: "canonicalization
     * via MinHash-LSH blocking plus iterative DataFrame connected-
@@ -170,24 +149,62 @@ object EntityLinking {
       .select(col("acr_key"), explode(col("exps")).as("exp_key"),
         size(col("exps")).as("n_exp"))
 
-  /** Global keyword profile per expansion: top-20 keywords (by url count,
-    * ties lexicographic) across urls that mention the expansion phrase.
-    * `mentions` is resolve's lowered mention projection, `urlKw` its
-    * (url, kw) keyword projection. */
-  def expansionProfiles(mentions: DataFrame, urlKw: DataFrame, expansions: DataFrame): DataFrame = {
-    val expMentions = mentions
-      .where(col("kind") === "concept")
-      .select(col("url"), col("entity_key").as("exp_key"))
-      .join(expansions, Seq("exp_key"), "left_semi")
-      .distinct()
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("exp_key")).orderBy(col("n").desc, col("kw").asc)
-    expMentions.join(urlKw, Seq("url"))
-      .groupBy(col("exp_key"), col("kw")).agg(count(lit(1)).as("n"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= 20)
-      .select(col("exp_key"), col("kw"))
+  /** An expansion's global keyword profile: the top-20 keywords by url
+    * count (ties in Spark's string order, a null keyword first) across
+    * the urls that mention the expansion phrase. Input rows are one url's
+    * keyword list each (duplicates counted; a null list is skipped).
+    * Combines map-side: a partial buffer holds keyword counts, so a hot
+    * expansion's reducer merges one buffer per map partition. */
+  private object ExpansionProfile extends Aggregator[Seq[String], Map[String, Long], Seq[String]] {
+    def zero: Map[String, Long] = Map.empty
+    def reduce(b: Map[String, Long], kws: Seq[String]): Map[String, Long] =
+      if (kws == null) b else kws.foldLeft(b)((acc, k) => acc.updated(k, acc.getOrElse(k, 0L) + 1))
+    def merge(x: Map[String, Long], y: Map[String, Long]): Map[String, Long] =
+      y.foldLeft(x) { case (acc, (k, n)) => acc.updated(k, acc.getOrElse(k, 0L) + n) }
+    private def before(a: (String, Long), b: (String, Long)): Boolean =
+      if (a._2 != b._2) a._2 > b._2
+      else if (a._1 == null || b._1 == null) a._1 == null && b._1 != null
+      else UTF8String.fromString(a._1).compareTo(UTF8String.fromString(b._1)) < 0
+    def finish(b: Map[String, Long]): Seq[String] = b.toSeq.sortWith(before).take(20).map(_._1)
+    // kryo: a keyword may be null, which a Spark map key may not
+    def bufferEncoder: Encoder[Map[String, Long]] = Encoders.kryo[Map[String, Long]]
+    def outputEncoder: Encoder[Seq[String]] = ExpressionEncoder[Seq[String]]()
   }
+
+  private val expansionProfile = udaf(ExpansionProfile)
+
+  /** One url's mentions with one `(entity_key, surface)`: an ambiguous
+    * acronym group resolves to ONE row (its first), any other group
+    * keeps every row. */
+  final case class MentionRow(kind: String, weight: java.lang.Integer)
+  final case class MentionGroup(entity_key: String, surface: String, rows: Seq[MentionRow])
+  final case class AliasPair(acr_key: String, exp_key: String)
+  /** What resolve derives from one url's mentions: its alias pairs, its
+    * distinct concept keys and its mention groups. */
+  final case class UrlMentions(pairs: Seq[AliasPair], concepts: Seq[String],
+      groups: Seq[MentionGroup])
+
+  /** Alias discovery and grouping over one url's mentions `(obj,
+    * surface, kind, weight)`: acronym A pairs with phrase P of the same
+    * url when initials(P) == A; keys are `Py.lower`ed (Locale.ROOT, never
+    * Spark's `lower`, whose non-ASCII path follows the JVM default
+    * locale). A group's rows are sorted, so its first is deterministic. */
+  def urlMentions(ms: Seq[Row]): UrlMentions = {
+    def of(kind: String) = ms.filter(_.getString(2) == kind).map(_.getString(0)).distinct
+    val pairs = for {
+      a <- of("acronym")
+      p <- of("concept")
+      if initialsOf(p) == a
+    } yield AliasPair(Py.lower(a), Py.lower(p))
+    val groups = ms.groupBy(m => (Py.lower(m.getString(0)), m.getString(1))).toSeq
+      .map { case ((key, surface), rows) =>
+        MentionGroup(key, surface, rows
+          .map(m => MentionRow(m.getString(2), m.getAs[java.lang.Integer](3)))
+          .sortBy(r => (Option(r.kind), Option(r.weight).map(_.intValue)))) }
+    UrlMentions(pairs, of("concept").map(Py.lower).distinct, groups)
+  }
+
+  private val urlMentionsUdf = udf(urlMentions _)
 
   /** resolve's outputs plus the exact DataFrames it persisted, so the
     * caller can `unpersist()` precisely those after checkpointing —
@@ -205,60 +222,74 @@ object EntityLinking {
     * alias edges); ambiguous acronyms are resolved per url. */
   def resolve(spark: SparkSession, triples: Dataset[Triple]): Resolved = {
     import spark.implicits._
-    // both returned plans (alias edges AND resolved mentions) read the
-    // ambiguity split, and the resolved mentions also read the per-url
-    // pairs (local bonus). Both are persisted and the isEmpty probe
-    // below materializes them, so the caller's two stage writes (run
-    // concurrently in Pipeline.run) compute neither again. `cached`
-    // lists the split first: it is the cache that depends on pairs.
-    val pairs = urlAliasPairs(spark, triples).persist(StorageLevel.MEMORY_AND_DISK)
-    val split = splitAmbiguity(pairs).persist(StorageLevel.MEMORY_AND_DISK)
-    val cached = Seq(split, pairs)
+    // the url pass: one scan per pred, one shuffle by url. Each url
+    // block holds its alias pairs, concept keys, mention groups and
+    // keyword list. Both outputs read it (three times and once), so it
+    // is persisted.
+    val mentions = triples.where(col("pred") === "mentionsEntity")
+      .select(col("url"),
+        struct(col("obj"), col("surface"), col("kind"), col("weight")).as("m"),
+        lit(null).cast("struct<kw:string>").as("k"))
+    val keywords = triples.where(col("pred") === "hasKeyword")
+      .select(col("url"), lit(null).cast(mentions.schema("m").dataType).as("m"),
+        struct(col("obj").as("kw")).as("k"))
+    val block = mentions.union(keywords)
+      .groupBy(col("url"))
+      .agg(collect_list(col("m")).as("ms"), collect_list(col("k")).as("ks"))
+      .select(col("url"), urlMentionsUdf(col("ms")).as("b"), col("ks.kw").as("kws"))
+      .select(col("url"), col("b.pairs").as("pairs"), col("b.concepts").as("concepts"),
+        col("b.groups").as("groups"), col("kws"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // materialized here, in one job: planned over the cache's real size,
+    // the pick below broadcasts the vocabulary tables when they are small
+    // instead of shuffling the mentions to join them, and neither output
+    // query materializes the cache again per scan of it
+    block.foreachPartition((_: Iterator[Row]) => ())
+
+    // the vocabulary-sized global steps. No forced broadcast hints
+    // anywhere in linking: these tables are usually small, but at 10^12
+    // pages "usually" is not a guarantee — a forced hint OOMs when it's
+    // wrong, while AQE promotes small sides to broadcast at runtime from
+    // observed sizes and degrades to a shuffled join otherwise.
+    val split = splitAmbiguity(block.select(explode(col("pairs")).as("p"))
+      .select(col("p.acr_key").as("acr_key"), col("p.exp_key").as("exp_key")))
     val unambiguous = split.where(col("n_exp") === 1)
       .select(col("acr_key").as("key_a"), col("exp_key").as("key_b"))
     val ambiguous = split.where(col("n_exp") > 1)
       .select(col("acr_key"), col("exp_key"))
-    val mentions = triples
-      .where(col("pred") === "mentionsEntity")
-      .select(col("url"), col("pred"), pyLower(col("obj")).as("entity_key"),
-        col("surface"), col("kind"), col("weight"))
+    // each ambiguous acronym with its candidate expansions and their
+    // profiles, grouped over a union rather than joined: a join's size
+    // estimate is the product of its sides', which would keep the pick
+    // below from broadcasting this vocabulary-sized table
+    val expConcepts = block.select(explode(col("concepts")).as("exp_key"), col("kws"))
+      .join(ambiguous, Seq("exp_key"), "left_semi")
+    val cands = ambiguous.select(col("exp_key"), col("acr_key"), lit(null).cast("array<string>").as("kws"))
+      .union(expConcepts.select(col("exp_key"), lit(null).cast("string").as("acr_key"), col("kws")))
+      .groupBy(col("exp_key"))
+      .agg(collect_set(col("acr_key")).as("acrs"), expansionProfile(col("kws")).as("profile"))
+      .select(explode(col("acrs")).as("acr_key"),
+        struct(col("exp_key"), col("profile")).as("cand"))
+      .groupBy(col("acr_key")).agg(collect_list(col("cand")).as("cands"))
 
-    if (ambiguous.isEmpty) return Resolved(unambiguous, mentions.as[LinkedMention], cached)
+    // the pick, inside each url's block: score = |url keywords ∩
+    // profile| + 1e6 when the url itself pairs the acronym with the
+    // expansion; the least (-score, exp_key) wins
+    val scored = transform(col("cands"), c => named_struct(
+      lit("s"), -(size(filter(col("kws"), k => array_contains(c("profile"), k))) +
+        when(exists(col("pairs"), p => p("acr_key") === col("g.entity_key") &&
+          p("exp_key") === c("exp_key")), 1000000L).otherwise(0L)),
+      lit("e"), c("exp_key")))
+    val linked = block
+      .select(explode(col("groups")).as("g"), col("url"), col("kws"), col("pairs"))
+      .join(cands, col("g.entity_key") === col("acr_key"), "left")
+      .select(col("url"),
+        coalesce(array_min(scored)("e"), col("g.entity_key")).as("entity_key"),
+        col("g.surface").as("surface"),
+        explode(when(col("cands").isNull, col("g.rows"))
+          .otherwise(slice(col("g.rows"), 1, 1))).as("r"))
+      .select(col("url"), lit("mentionsEntity").as("pred"), col("entity_key"),
+        col("surface"), col("r.kind").as("kind"), col("r.weight").as("weight"))
 
-    val urlKw = triples.where(col("pred") === "hasKeyword")
-      .select(col("url"), col("obj").as("kw"))
-    val profiles = expansionProfiles(mentions, urlKw, ambiguous)
-
-    // candidate grid: every ambiguous-acronym mention × its expansions.
-    // No forced broadcast hints anywhere in linking: the ambiguous/profile
-    // tables are usually vocabulary-sized, but at 10^12 pages "usually"
-    // is not a guarantee — a forced hint OOMs when it's wrong, while AQE
-    // promotes small sides to broadcast at runtime from observed sizes.
-    val grid = mentions.join(ambiguous, col("entity_key") === col("acr_key"))
-
-    // context score: |url keywords ∩ expansion profile|
-    val overlap = urlKw
-      .join(profiles, Seq("kw"))
-      .groupBy(col("url"), col("exp_key")).agg(count(lit(1)).as("ctx_score"))
-
-    // local bonus: the url itself contains this expansion phrase
-    val localPairs = pairs.select(col("url"), col("acr_key"), col("exp_key"))
-      .distinct().withColumn("local", lit(1000000L))
-
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("url"), col("acr_key"), col("surface"))
-      .orderBy(col("score").desc, col("exp_key").asc)
-    val resolved = grid
-      .join(overlap, Seq("url", "exp_key"), "left")
-      .join(localPairs, Seq("url", "acr_key", "exp_key"), "left")
-      .withColumn("score", coalesce(col("ctx_score"), lit(0L)) + coalesce(col("local"), lit(0L)))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") === 1)
-      .select(col("url"), col("pred"), col("exp_key").as("entity_key"),
-        col("surface"), col("kind"), col("weight"))
-
-    val untouched = mentions.join(ambiguous, col("entity_key") === col("acr_key"), "left_anti")
-
-    Resolved(unambiguous, untouched.unionByName(resolved).as[LinkedMention], cached)
+    Resolved(unambiguous, linked.as[LinkedMention], Seq(block))
   }
 }

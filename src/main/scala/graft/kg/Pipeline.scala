@@ -169,12 +169,12 @@ object Pipeline {
       else {
         val t0 = System.nanoTime()
         val resolved = EntityLinking.resolve(spark, triples)
-        // independent outputs sharing resolve's persisted ambiguity split —
+        // independent outputs sharing resolve's persisted url blocks —
         // overlapped like the stage-1/2 and nodes/edges write pairs
         inParallel(outs.zip(Seq(resolved.linked.toDF(), resolved.aliasEdges)).map {
           case ((io, t), df) => () => io.write(df, t)
         })
-        resolved.unpersistCached() // exactly resolve's split + pairs persists
+        resolved.unpersistCached() // exactly resolve's url-block persist
         Some((System.nanoTime() - t0) / 1000000L)
       }
     val Seq(linked, aliases) = outs.map { case (io, t) => io.read(spark, t) }
@@ -245,37 +245,30 @@ object Pipeline {
       .groupBy($"component", $"url")
       .agg(sum($"weight").as("weight"))
     val nUrls = perUrl.groupBy($"component").agg(count(lit(1)).as("n_urls"))
+    // one pass per (component, key, kind): its weight and its surface
+    // forms (aliases include resolved surface forms: an ambiguous acronym
+    // like "cnn" appears as an alias on EVERY component it resolves into,
+    // while the components themselves stay separate)
     val perKey = labeled
       .groupBy($"component", $"entity_key", $"kind")
-      .agg(sum($"weight").as("w"))
+      .agg(sum($"weight").as("w"), collect_set(lower($"surface")).as("surf_keys"))
 
-    // kind joins the ordering: the same key can carry two kinds in one
-    // component (a resolved acronym mention lands on its expansion's key
-    // with kind 'acronym') and a (w, key) tie between them would make
-    // row_number nondeterministic
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy($"component")
-      .orderBy($"w".desc, $"entity_key".asc, $"kind".asc)
-    val ranked = perKey.withColumn("rn", row_number().over(win))
-
-    // aliases include resolved surface forms (an ambiguous acronym like
-    // "cnn" appears as an alias on EVERY component it resolves into,
-    // while the components themselves stay separate)
-    val surfaceAliases = labeled
-      .groupBy($"component")
-      .agg(collect_set(lower($"surface")).as("surf_keys"))
-
-    val nodes = ranked
+    // the canonical row is the least (-w, key, kind): kind joins the
+    // ordering because the same key can carry two kinds in one component
+    // (a resolved acronym mention lands on its expansion's key with kind
+    // 'acronym'), and a (w, key) tie between them must still pick one
+    val perComponent = perKey
       .groupBy($"component")
       .agg(
-        max(when($"rn" === 1, $"entity_key")).as("canonical_name"),
-        max(when($"rn" === 1, $"kind")).as("kind"),
+        min(struct(-$"w", $"entity_key", $"kind")).as("best"),
         collect_set($"entity_key").as("key_aliases"),
+        flatten(collect_list($"surf_keys")).as("surf_keys"),
         sum($"w").as("n_mentions"))
-      .join(surfaceAliases, Seq("component"))
-      .withColumn("aliases",
-        sort_array(array_distinct(concat($"key_aliases", $"surf_keys"))))
-      .drop("key_aliases", "surf_keys")
+
+    val nodes = perComponent
+      .select($"component", $"best.entity_key".as("canonical_name"), $"best.kind".as("kind"),
+        $"n_mentions",
+        sort_array(array_distinct(concat($"key_aliases", $"surf_keys"))).as("aliases"))
       .join(nUrls, Seq("component"))
       .withColumnRenamed("component", "entity_id")
 
@@ -283,8 +276,7 @@ object Pipeline {
     // easily 10^8+ rows, where a forced broadcast hint OOMs the driver.
     // No hint: AQE broadcasts it at runtime when it observes it small,
     // and degrades to a shuffled join when it isn't.
-    val canon = ranked.where($"rn" === 1)
-      .select($"component", $"entity_key".as("canonical_name_e"))
+    val canon = perComponent.select($"component", $"best.entity_key".as("canonical_name_e"))
     val edges = perUrl
       .join(canon, Seq("component"))
       .select(

@@ -97,12 +97,19 @@ object StreamingPipeline {
         // batch=<id> as a discovered partition column and project it
         // away. (The Iceberg deployment writes the same shape as an
         // idempotent overwrite-partition commit.)
+        // The batch's row count rides the write (an observe) and is kept
+        // beside its rows, so fold bookkeeping never rescans them.
         batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        batch.write.mode(SaveMode.Overwrite).parquet(s"$triplesPath/batch=$batchId")
-        batch.groupBy(spark_partition_id().as("partition_id"))
-          .agg(count(lit(1)).as("rows"))
-          .write.mode(SaveMode.Overwrite).parquet(s"$lineagePath/batch_id=$batchId")
-        batch.unpersist(false)
+        try {
+          val batchDir = new Path(s"$triplesPath/batch=$batchId")
+          val rows = org.apache.spark.sql.Observation()
+          batch.observe(rows, count(lit(1)).as("n"))
+            .write.mode(SaveMode.Overwrite).parquet(batchDir.toString)
+          writeMarker(fs, new Path(batchDir, batchRowsFile), rows.get("n").toString)
+          batch.groupBy(spark_partition_id().as("partition_id"))
+            .agg(count(lit(1)).as("rows"))
+            .write.mode(SaveMode.Overwrite).parquet(s"$lineagePath/batch_id=$batchId")
+        } finally batch.unpersist(false)
         if (recanonEvery > 0 && (batchId + 1) % recanonEvery == 0)
           recanonicalize(spark, fs, workDir, labels)
         ()
@@ -118,8 +125,7 @@ object StreamingPipeline {
     // stream whose last batch landed on the cadence is already covered
     // and runs none; a latest version marked other than `exact` (a work
     // dir written when cadence folds were seeded) still gets one.
-    val landed =
-      if (fs.exists(new Path(triplesPath))) landedTriples(spark, triplesPath).count() else 0L
+    val landed = landedRows(spark, fs, triplesPath)
     val (covered, exact) = coverage(fs, labels)
     if (landed > 0 && !(exact && covered == landed))
       recanonicalize(spark, fs, workDir, labels)
@@ -132,6 +138,38 @@ object StreamingPipeline {
   private def landedTriples(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(Encoders.product[Triple].schema.add("batch", IntegerType)).parquet(path)
 
+  /** The row count a batch dir of `triples_stream` recorded at landing
+    * (a `_`-prefixed file, which parquet reads skip). */
+  private val batchRowsFile = "_rows.txt"
+
+  /** Overwrite `f` with `text` through `fs`. */
+  private def writeMarker(fs: FileSystem, f: Path, text: String): Unit = {
+    val out = fs.create(f, true)
+    try out.write(text.getBytes(UTF_8)) finally out.close()
+  }
+
+  /** The space-separated tokens of a marker file, or None when it is
+    * missing. A crash between its create and close leaves it 0 bytes,
+    * which reads as one empty token. */
+  private def readMarker(fs: FileSystem, f: Path): Option[Array[String]] =
+    Option.when(fs.exists(f)) {
+      val in = fs.open(f)
+      try new String(in.readAllBytes(), UTF_8).trim.split(" ") finally in.close()
+    }
+
+  /** Rows landed in `triples_stream`: the sum of the counts its batch
+    * dirs recorded at landing. A batch dir without a readable count (a
+    * crash between its write and the record) is counted by reading it. */
+  private def landedRows(spark: SparkSession, fs: FileSystem, triplesPath: String): Long =
+    Option(fs.globStatus(new Path(triplesPath, "batch=*"))).toSeq.flatten
+      .filter(_.isDirectory).map(_.getPath)
+      .map { dir =>
+        readMarker(fs, new Path(dir, batchRowsFile)).flatMap(_(0).toLongOption)
+          .getOrElse(spark.read.schema(Encoders.product[Triple].schema)
+            .parquet(dir.toString).count())
+      }
+      .sum
+
   /** (covered triples rows, was-exact) of the LATEST labels version —
     * the shipped tables must come from an exact fold (a full CC). An
     * unparsable marker (a crash between its create and close leaves 0
@@ -139,12 +177,8 @@ object StreamingPipeline {
   private def coverage(fs: FileSystem, labels: Ledger): (Long, Boolean) =
     labels.latest()
       .map(v => new Path(labels.path(v), "_covered_rows.txt"))
-      .filter(fs.exists)
-      .flatMap { f =>
-        val in = fs.open(f)
-        val parts = try new String(in.readAllBytes(), UTF_8).trim.split(" ") finally in.close()
-        parts(0).toLongOption.map((_, parts.length > 1 && parts(1) == "exact"))
-      }
+      .flatMap(readMarker(fs, _))
+      .flatMap(parts => parts(0).toLongOption.map((_, parts.length > 1 && parts(1) == "exact")))
       .getOrElse((0L, false))
 
   /** One re-canonicalization pass over the accumulated streamed triples:
@@ -160,9 +194,9 @@ object StreamingPipeline {
       labels: Ledger): Unit = {
     import spark.implicits._
     val raw = landedTriples(spark, s"$workDir/triples_stream")
-    // count the covered rows for the on-disk staleness ledger — and as
-    // the linking-stage checkpoint key below
-    val nCovered = raw.count()
+    // the covered rows for the on-disk staleness ledger — and the
+    // linking-stage checkpoint key below — from the landing-time counts
+    val nCovered = landedRows(spark, fs, s"$workDir/triples_stream")
 
     // ---- the batch build's link stage, its checkpoints keyed by
     // coverage: linking is a pure function of the accumulated triples
@@ -184,8 +218,7 @@ object StreamingPipeline {
     // check compares it against the landed count on disk, so a crash
     // before the final fold self-heals on restart. (A production table
     // format records this as snapshot metadata.)
-    val marker = fs.create(new Path(labels.path(next), "_covered_rows.txt"), true)
-    try marker.write(s"$nCovered exact".getBytes(UTF_8)) finally marker.close()
+    writeMarker(fs, new Path(labels.path(next), "_covered_rows.txt"), s"$nCovered exact")
     // both outputs read the same persisted label table — overlap the two
     // writes as concurrent jobs exactly like the batch pipeline does
     Pipeline.inParallel(Seq(

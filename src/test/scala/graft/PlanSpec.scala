@@ -201,6 +201,44 @@ class PlanSpec extends AnyFunSuite {
     } finally resolved.unpersistCached()
   }
 
+  test("resolve reads each triple pred at most once per query") {
+    // one url pass: each output's plan reads the mentionsEntity and the
+    // hasKeyword triples at most once. A cached relation's scan runs once
+    // however often the plan reads the cache, so scans are counted by
+    // identity.
+    import graft.kg.{EntityLinking, PagesGen, Pipeline}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val tmp = java.nio.file.Files.createTempDirectory("link_reads").toString
+    Pipeline.triplesFromPages(spark, PagesGen.pages(spark, 60L))
+      .write.mode("overwrite").parquet(tmp)
+    val triples = spark.read.parquet(tmp).as[graft.kg.Schema.Triple]
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case s: FileSourceScanExec => Seq(s)
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
+      case o => o.children.flatMap(scans)
+    }
+    val resolved = EntityLinking.resolve(spark, triples)
+    try {
+      for ((name, df) <- Seq("linked" -> resolved.linked.toDF(),
+          "aliasEdges" -> resolved.aliasEdges)) {
+        val found = scans(df.queryExecution.executedPlan)
+          .filter(_.relation.location.rootPaths.exists(_.toString.contains(tmp)))
+        val distinct = found.foldLeft(Seq.empty[FileSourceScanExec]) { (seen, s) =>
+          if (seen.exists(_ eq s)) seen else seen :+ s
+        }
+        assert(distinct.nonEmpty, s"$name: no triples scan found:\n${plan(df)}")
+        val pred = """EqualTo\(pred,([^)]+)\)""".r
+        for ((p, reads) <- distinct.groupBy(s =>
+            pred.findFirstMatchIn(s.metadata("PushedFilters")).map(_.group(1))))
+          assert(reads.size <= 1, s"$name reads pred $p ${reads.size} times:\n${plan(df)}")
+      }
+    } finally resolved.unpersistCached()
+  }
+
   test("per-url triple extraction is a purely narrow pass (zero shuffles)") {
     val pages = graft.kg.PagesGen.pages(spark, 10L)
     val triples = graft.kg.Pipeline.triplesFromPages(spark, pages)

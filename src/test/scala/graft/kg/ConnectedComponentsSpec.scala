@@ -17,6 +17,24 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     driver
   }
 
+  test("driver edge budget is bounded by the heap and by the result cap") {
+    val GiB = 1L << 30
+    // heap side: 5% of the heap at 300 B/edge, under any cap it fits
+    assert(ConnectedComponents.edgeBudget(4 * GiB, 0L, 0.05) == (4 * GiB * 0.05 / 300).toLong)
+    assert(ConnectedComponents.edgeBudget(4 * GiB, GiB, 0.05) == (4 * GiB * 0.05 / 300).toLong)
+    // cap side: a 16 MiB cap failed a 1.5 M-row collect at ~19.7 B/row;
+    // the budget's collect of budget + 1 rows stays under it
+    val cap = 16L << 20
+    val capped = ConnectedComponents.edgeBudget(4 * GiB, cap, 0.05)
+    assert(capped == cap / 24 && capped < (4 * GiB * 0.05 / 300).toLong)
+    assert((capped + 1) * 20 <= cap)
+    assert(ConnectedComponents.edgeBudget(400 * GiB, GiB, 0.05) == GiB / 24)
+    // the session's budget reads its own heap and cap
+    val conf = spark.sparkContext.getConf
+    assert(ConnectedComponents.driverEdgeBudget() == ConnectedComponents.edgeBudget(
+      Runtime.getRuntime.maxMemory, conf.getSizeAsBytes("spark.driver.maxResultSize", "1g"), 0.05))
+  }
+
   test("path graph contracts to min id") {
     val got = cc(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)))
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L))

@@ -57,7 +57,7 @@ class JobBudgetSpec extends AnyFunSuite {
       StreamingPipeline.runIncremental(spark, pages, work, recanonEvery = 2)
     }
     info(s"runIncremental jobs: $jobs")
-    assert(jobs <= 110, s"runIncremental ran $jobs jobs")
+    assert(jobs <= 80, s"runIncremental ran $jobs jobs")
   }
 
   test("Pipeline.run over a fixed PagesGen window stays within its job budget") {
@@ -65,6 +65,6 @@ class JobBudgetSpec extends AnyFunSuite {
     val jobs = jobsOf(Pipeline.run(spark, PagesGen.pages(spark, 400L),
       Pipeline.Config(work, nPartitions = 4)))
     info(s"Pipeline.run jobs: $jobs")
-    assert(jobs <= 52, s"Pipeline.run ran $jobs jobs")
+    assert(jobs <= 40, s"Pipeline.run ran $jobs jobs")
   }
 }
