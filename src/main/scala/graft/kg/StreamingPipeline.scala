@@ -1,7 +1,8 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types._
 import graft.kg.Schema._
 import graft.kg.io.{Ledger, ParquetTableIO}
@@ -31,6 +32,34 @@ object StreamingPipeline {
     import spark.implicits._
     spark.readStream.schema(pageSchema).parquet(dir).as[Page]
   }
+
+  /** Run a bounded stream to its end: `df` writes through `sink` with the
+    * checkpoint at `checkpoint`, in `outputMode`, under
+    * `Trigger.AvailableNow`, and the call returns once the query has
+    * stopped (rethrowing its failure). The contract every bounded lane
+    * keeps:
+    *  - AvailableNow drains the files present when the query starts, in
+    *    as many micro-batches as the source's `maxFilesPerTrigger`
+    *    makes, then stops;
+    *  - `checkpoint` is either fresh (`TmpDirs.fresh`: a reused dir
+    *    would resume the previous stream and skip its batches) or the
+    *    lane's own work dir's, which is what makes a crashed lane
+    *    restartable. Give it explicitly: Spark's default puts the offset
+    *    and state-store logs under `java.io.tmpdir`;
+    *  - a `foreachBatch` body runs at least once per batch (a crash
+    *    between its write and the commit log replays it), so it
+    *    OVERWRITES a location keyed by its `batchId` and never appends:
+    *    a replayed batch lands on itself.
+    * The runner does not persist the batch: a body that reads it twice
+    * persists and releases it itself. */
+  def drain(df: DataFrame, checkpoint: String, outputMode: String = "append")(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit =
+    sink(df.writeStream
+      .option("checkpointLocation", checkpoint)
+      .outputMode(outputMode)
+      .trigger(Trigger.AvailableNow()))
+      .start()
+      .awaitTermination()
 
   // ------------------------------------------------- incremental KG build
   /** The STATEFUL half of the KG build on a stream — linking +
@@ -67,7 +96,6 @@ object StreamingPipeline {
     * ledger, conservation-checkable against the triples table. */
   def runIncremental(spark: SparkSession, pages: Dataset[Page], workDir: String,
       recanonEvery: Int = 2, extractParallelism: Int = 0): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     val triplesPath = s"$workDir/triples_stream"
     val lineagePath = s"$workDir/stream_lineage"
     // all fold bookkeeping goes through the work dir's Hadoop FileSystem,
@@ -81,24 +109,15 @@ object StreamingPipeline {
     // projection is slim (html already dropped/null); for a fat-row
     // corpus prefer more files per trigger over this shuffle.
     val src = if (extractParallelism > 0) pages.repartition(extractParallelism) else pages
-    val q = Pipeline.triplesFromPages(spark, src).toDF()
-      .writeStream
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    drain(Pipeline.triplesFromPages(spark, src).toDF(), s"$workDir/ckpt")(
+      _.foreachBatch { (batch: DataFrame, batchId: Long) =>
         // two actions read the batch (append + lineage): persist so the
-        // regex-heavy extraction runs once per row, not twice.
-        // IDEMPOTENT per-batch writes: foreachBatch is at-least-once (a
-        // crash between the sink write and the streaming commit log
-        // replays the batch on restart), so each batch OVERWRITES its
-        // own batchId-keyed subdirectory instead of appending — a
-        // replayed batch lands on itself, never doubles. Readers see
-        // batch=<id> as a discovered partition column and project it
-        // away. (The Iceberg deployment writes the same shape as an
-        // idempotent overwrite-partition commit.)
-        // The batch's row count rides the write (an observe) and is kept
-        // beside its rows, so fold bookkeeping never rescans them.
+        // regex-heavy extraction runs once per row, not twice. Each batch
+        // overwrites its own batch=<id> dir (the [[drain]] replay rule);
+        // readers see `batch` as a discovered partition column and
+        // project it away. The batch's row count rides the write (an
+        // observe) and is kept beside its rows, so fold bookkeeping never
+        // rescans them.
         batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           val batchDir = new Path(s"$triplesPath/batch=$batchId")
@@ -113,9 +132,7 @@ object StreamingPipeline {
         if (recanonEvery > 0 && (batchId + 1) % recanonEvery == 0)
           recanonicalize(spark, fs, workDir, labels)
         ()
-      }
-      .start()
-    q.awaitTermination()
+      })
     // fold in whatever the cadence has not covered yet. Staleness is
     // derived from DISK, not an in-memory flag (which a crash between
     // stream commit and fold would lose, leaving nodes_stream

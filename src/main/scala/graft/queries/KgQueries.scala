@@ -177,15 +177,7 @@ object KgQueries {
     * work-dir. All stage outputs live there as parquet. */
   def kgRun(s: SparkSession, dir: String): String =
     kgCache.getOrElseUpdate(dir, {
-      // tmpfs when available, like Bench.kgBuild: the sandbox has one
-      // virtual disk whose contention is a box artifact, not the plan's
-      val base = if (new java.io.File("/dev/shm").isDirectory)
-        java.nio.file.Paths.get("/dev/shm") else java.nio.file.Paths.get("/tmp")
-      val work = java.nio.file.Files.createTempDirectory(base, "kgq").toString
-      // tmpfs outlives the process — without this hook every Verify/Bench
-      // run would leak a full pipeline output into RAM-backed /dev/shm
-      sys.addShutdownHook(
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work)))
+      val work = TmpDirs.fresh("kgq")
       // Pipeline.run stays narrow (an html-fat source must not
       // shuffle); this projection is slim (html is null), so it spreads
       Pipeline.run(s, graft.ops.Layout.spread(kgPages(s, dir)),

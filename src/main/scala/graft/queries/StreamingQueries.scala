@@ -4,8 +4,8 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
+import graft.kg.StreamingPipeline.drain
 import graft.ops.Curation
 
 /** Structured Streaming under the DRIVER contract (not just ScalaTest):
@@ -21,37 +21,31 @@ object StreamingQueries {
 
   private val sinkSeq = new AtomicInteger(0)
 
-  /** Scale-adaptive partition count for STATEFUL streams, derived from
-    * the stream's source size (never from the local core count): one
-    * state/shuffle partition per `SPARK_GRAFT_ST_PART_BYTES` of source
-    * parquet (default 32 MB ≈ ~100 MB in-memory rows), floored at 4 for
-    * a parallelism minimum and CAPPED by the session's
-    * spark.sql.shuffle.partitions — so a cluster-sized session setting
-    * is respected and only over-partitioning is trimmed. Stateful
-    * shuffle partitioning is frozen into a stream's checkpoint, so
-    * production streaming jobs size it to expected state volume
-    * explicitly rather than inheriting a batch default; AQE cannot
-    * coalesce streaming exchanges (it is disabled for streams), which
-    * is why this is derived manually. Measured motivation: 32 state
-    * partitions over a 2 MB bounded replay spent ~50 s of summed
-    * state-store commit wall vs 2.5 s at 8 — pure per-store overhead,
-    * no data. */
-  private def statePartitions(s: SparkSession, dir: String, name: String): Int = {
+  /** Source parquet bytes per state partition (≈ 100 MB of in-memory
+    * rows). */
+  private val statePartBytes = 32L << 20
+
+  /** Run `f` (which must START and DRAIN a STATEFUL stream of the `name`
+    * table inside it) with the session's shuffle partitions — the value
+    * a streaming query captures at start — pinned to a count derived
+    * from the source's size (never from the local core count): one per
+    * `statePartBytes` of source parquet, floored at 4 and CAPPED by the
+    * session's spark.sql.shuffle.partitions, so a cluster-sized setting
+    * is respected and only over-partitioning is trimmed. The session
+    * value is restored after, so co-resident batch queries are
+    * untouched. Stateful shuffle partitioning is frozen into a stream's
+    * checkpoint, and AQE cannot coalesce streaming exchanges, which is
+    * why it is derived here. Measured motivation: 32 state partitions
+    * over a 2 MB bounded replay spent ~50 s of summed state-store commit
+    * wall vs 2.5 s at 8 — pure per-store overhead, no data. */
+  private def withStatePartitions[A](s: SparkSession, dir: String, name: String)(f: => A): A = {
     // sized through the path's own FileSystem, so hdfs:// and s3a://
     // sources count their bytes too
     val path = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
     val bytes = path.getFileSystem(s.sessionState.newHadoopConf())
       .getContentSummary(path).getLength
-    val perPart = sys.env.getOrElse("SPARK_GRAFT_ST_PART_BYTES", (32L << 20).toString).toLong
-    val derived = math.max(4L, (bytes + perPart - 1) / perPart)
-    math.min(s.sessionState.conf.numShufflePartitions.toLong, derived).toInt
-  }
-
-  /** Run `f` (which must START and DRAIN the stream inside it) with the
-    * session shuffle-partition setting temporarily pinned to `n` — the
-    * value a streaming query captures at start — restoring the session
-    * default after, so co-resident batch queries are untouched. */
-  private def withShufflePartitions[A](s: SparkSession, n: Int)(f: => A): A = {
+    val n = math.min(s.sessionState.conf.numShufflePartitions.toLong,
+      math.max(4L, (bytes + statePartBytes - 1) / statePartBytes))
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
     s.conf.set(key, n.toString)
@@ -65,20 +59,7 @@ object StreamingQueries {
     * `format`). */
   private def runToSink(s: SparkSession, df: DataFrame, outputMode: String): DataFrame = {
     val name = s"graft_st_sink_${sinkSeq.incrementAndGet()}"
-    val q = df.writeStream
-      .format("memory").queryName(name)
-      // explicit tmpfs-backed checkpoint: without one Spark puts the
-      // offset/commit logs AND every state-store delta/snapshot file
-      // under java.io.tmpdir — this sandbox's single contended virtual
-      // disk, whose fsync-heavy many-small-file pattern is a box
-      // artifact, not the plan's (a cluster checkpoints to its DFS).
-      // FRESH per run: a cached dir would resume the previous stream and
-      // skip the batches (TmpDirs.fresh doc).
-      .option("checkpointLocation", TmpDirs.fresh("st_ckpt"))
-      .outputMode(outputMode)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(df, TmpDirs.fresh("st_ckpt"), outputMode)(_.format("memory").queryName(name))
     s.table(name)
   }
 
@@ -232,7 +213,7 @@ object StreamingQueries {
     // to a file sink), plus a watermark on ts when arrival order allows
     // eviction
     "st_events_hourly" -> ((s, dir) =>
-      withShufflePartitions(s, statePartitions(s, dir, "events")) {
+      withStatePartitions(s, dir, "events") {
         runToSink(s,
           streamTbl(s, dir, "events")
             .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
@@ -241,36 +222,27 @@ object StreamingQueries {
       }),
 
     // the PRODUCTION shape of the same rollup: update mode to a FILE
-    // sink via foreachBatch — each micro-batch appends only the keys it
-    // changed (tagged with its batchId), and the reader resolves
-    // last-writer-wins per key. Unlike complete mode, emitted volume is
-    // per-batch delta, not the whole state table; the store itself still
-    // holds every live key, and in an unbounded deployment a watermark
-    // on ts would evict old windows — deliberately OMITTED here because
-    // the 4-file rewrite delivers hours in arbitrary order, so any
-    // finite watermark could silently drop legitimately-late rows and
-    // break stream ≡ batch. foreachBatch is at-least-once: a replayed
-    // batch re-appends identical (key, batchId) rows, which
-    // last-writer-wins absorbs — the sink is idempotent at the reader.
+    // sink via foreachBatch — each micro-batch writes only the keys it
+    // changed into its own batch=<id> dir, and the reader keeps each
+    // key's row from the latest batch. Unlike complete mode, emitted
+    // volume is per-batch delta, not the whole state table; the store
+    // itself still holds every live key, and in an unbounded deployment
+    // a watermark on ts would evict old windows — deliberately OMITTED
+    // here because the 4-file rewrite delivers hours in arbitrary order,
+    // so any finite watermark could silently drop legitimately-late rows
+    // and break stream ≡ batch.
     "st_events_hourly_update" -> ((s, dir) => {
       val work = TmpDirs.fresh("st_upd")
-      withShufflePartitions(s, statePartitions(s, dir, "events")) {
-      val q = streamTbl(s, dir, "events")
-        .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-        .writeStream
-        // tmpfs checkpoint (see runToSink) — separate from `work`, which
-        // is read back whole as parquet
-        .option("checkpointLocation", TmpDirs.fresh("st_upd_ckpt"))
-        .outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.withColumn("batch", lit(batchId))
-            .write.mode("append").parquet(work)
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      withStatePartitions(s, dir, "events") {
+        // the checkpoint lives apart from `work`, which is read back
+        // whole as parquet
+        drain(streamTbl(s, dir, "events")
+            .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
+            .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value")),
+          TmpDirs.fresh("st_upd_ckpt"), "update")(
+          _.foreachBatch { (batch: DataFrame, batchId: Long) =>
+            batch.write.mode("overwrite").parquet(s"$work/batch=$batchId")
+          })
       }
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("hour"), col("event_type")).orderBy(col("batch").desc)
@@ -301,22 +273,17 @@ object StreamingQueries {
       val work = TmpDirs.fresh("st_mv")
       val keys = Seq("event_type", "hour"); val ms = Seq("m1", "m2")
       val summaries = new graft.kg.io.Ledger(s, work, "summary_v")
-      val q = streamTbl(s, dir, "events")
-        .select(col("event_type"), date_trunc("hour", col("ts")).as("hour"),
-          (col("event_id") % 97).as("m1"), expr("nullif(user_id % 5, 0)").as("m2"))
-        .writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      drain(streamTbl(s, dir, "events")
+          .select(col("event_type"), date_trunc("hour", col("ts")).as("hour"),
+            (col("event_id") % 97).as("m1"), expr("nullif(user_id % 5, 0)").as("m2")),
+        s"$work/ckpt")(
+        _.foreachBatch { (batch: DataFrame, batchId: Long) =>
           val base = summaries.latest(below = batchId)
           val folded = base.fold(graft.ops.Cdc.aggregateSummary(batch, keys, ms))(v =>
             graft.ops.Cdc.refreshSummary(s.read.parquet(summaries.path(v)), batch, keys, ms))
           folded.write.mode("overwrite").parquet(summaries.path(batchId))
           summaries.prune(base.getOrElse(batchId))
-        }
-        .option("checkpointLocation", s"$work/ckpt") // tmpfs (see runToSink)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        })
       s.read.parquet(summaries.path(summaries.latest().get))
     }),
 
@@ -332,7 +299,7 @@ object StreamingQueries {
     // because testdata duplicates carry no bounded-lateness guarantee.
     // null text fingerprints as "" (the Dedup kernel convention).
     "st_exact_dedup" -> ((s, dir) =>
-      withShufflePartitions(s, statePartitions(s, dir, "documents")) {
+      withStatePartitions(s, dir, "documents") {
         runToSink(s,
           streamTbl(s, dir, "documents")
             .select(md5(coalesce(col("text"), lit(""))).as("text_md5"))
@@ -367,11 +334,9 @@ object StreamingQueries {
       // the accumulated index IS the state: these versions are never pruned
       val Seq(bands, shingles, pairs) =
         Seq("bands_v", "sh_v", "pairs_v").map(new graft.kg.io.Ledger(s, work, _))
-      val q = streamTbl(s, dir, "documents")
-        .select(col("doc_id"), col("text"))
-        .writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      drain(streamTbl(s, dir, "documents").select(col("doc_id"), col("text")),
+        s"$work/ckpt")(
+        _.foreachBatch { (batch: DataFrame, batchId: Long) =>
           // spread the slim (doc_id, text) shard before the CPU-fat
           // fingerprint kernels, and overlap the two independent index
           // writes as concurrent jobs (they share the persisted shard;
@@ -395,12 +360,7 @@ object StreamingQueries {
           graft.ops.Dedup.jaccardVerify(candidates, allSh, "doc_id")
             .where(col("jaccard") >= 0.5)
             .write.mode("overwrite").parquet(pairs.path(batchId))
-          ()
-        }
-        .option("checkpointLocation", s"$work/ckpt") // tmpfs (see runToSink)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        })
       s.read.parquet(pairs.list.map(pairs.path): _*)
     }),
 
@@ -447,7 +407,7 @@ object StreamingQueries {
         .select(col("e.event_id").as("error_id"), col("c.event_id").as("click_id"),
           col("e.user_id").as("user_id"), col("e.ts").as("error_ts"),
           col("c.ts").as("click_ts"))
-      withShufflePartitions(s, statePartitions(s, dir, "events")) {
+      withStatePartitions(s, dir, "events") {
         runToSink(s, joined, "append")
       }
     }),
@@ -462,7 +422,7 @@ object StreamingQueries {
     // exactly-30-min gap does NOT merge) — the oracle mirrors that exact
     // boundary at µs precision, NOT q10's floor-seconds `> 1800` rule.
     "st_sessionize" -> ((s, dir) =>
-      withShufflePartitions(s, statePartitions(s, dir, "events")) {
+      withStatePartitions(s, dir, "events") {
       runToSink(s,
         eventsByTsStream(s, dir)
           // event-time ops require TIMESTAMP (the table is NTZ; the

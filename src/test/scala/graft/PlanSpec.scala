@@ -120,6 +120,24 @@ class PlanSpec extends AnyFunSuite {
       s"in: ${offenders.distinct.mkString(", ")}")
   }
 
+  test("bounded streams have one home: no .writeStream or Trigger.AvailableNow outside StreamingPipeline.drain") {
+    val chain = """\.writeStream\b|Trigger\.AvailableNow\(""".r
+    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val found = try sources.iterator().asScala.toSeq finally sources.close()
+    val runner = found.find(_.endsWith(java.nio.file.Paths.get("graft/kg/StreamingPipeline.scala")))
+    assert(runner.isDefined, "src/main/scala not found")
+    // drain's definition runs from its `def` to the first blank line
+    val text = java.nio.file.Files.readString(runner.get)
+    val start = text.indexOf("def drain(")
+    assert(start >= 0, "StreamingPipeline.drain not found")
+    val body = text.substring(start, text.indexOf("\n\n", start))
+    assert(chain.findAllIn(body).size == 2, s"drain must start the stream itself:\n$body")
+    val hits = found.filter(_.toString.endsWith(".scala"))
+      .flatMap(f => chain.findAllIn(java.nio.file.Files.readString(f)).map(_ => f))
+    assert(hits.size == 2, s"${hits.size - 2} chains outside drain; start a bounded " +
+      s"stream with StreamingPipeline.drain in: ${hits.distinct.mkString(", ")}")
+  }
+
   test("dedup exact-groups plan has a single shuffle") {
     val df = graft.ops.Dedup.exactGroups(
       spark.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")

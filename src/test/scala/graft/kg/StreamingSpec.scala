@@ -106,6 +106,32 @@ class StreamingSpec extends AnyFunSuite {
     assert(got.count() > 0)
   }
 
+  test("stream lanes land their batch equivalents: hourly rollups, exact and near dedup") {
+    import org.apache.spark.sql.functions._
+    import graft.queries.{DataOps, StreamingQueries}
+    val dir = "/root/testdata/sf0.001"
+    def rows(df: org.apache.spark.sql.DataFrame, cols: String*) =
+      df.select(cols.map(col): _*).collect().map(_.toSeq).toSet
+    def lane(name: String) = StreamingQueries.queries(name)(spark, dir)
+    val hourly = spark.read.parquet(s"$dir/events.parquet")
+      .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
+      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
+    val hourlyCols = Seq("hour", "event_type", "n", "sum_value")
+    val hourlyRows = rows(hourly, hourlyCols: _*)
+    assert(hourlyRows.nonEmpty)
+    // update mode: each batch dir holds only the keys it changed; the
+    // latest batch per key must converge to the batch GROUP BY
+    assert(rows(lane("st_events_hourly_update"), hourlyCols: _*) == hourlyRows)
+    assert(rows(lane("st_events_hourly"), hourlyCols: _*) == hourlyRows)
+    val distinctText = spark.read.parquet(s"$dir/documents.parquet")
+      .select(md5(coalesce(col("text"), lit(""))).as("text_md5")).distinct()
+    assert(rows(lane("st_exact_dedup"), "text_md5") == rows(distinctText, "text_md5"))
+    val pairs = rows(DataOps.queries("dd_minhash_pairs")(spark, dir), "id1", "id2", "jaccard")
+    assert(pairs.nonEmpty)
+    assert(rows(lane("st_delta_pairs"), "id1", "id2", "jaccard") == pairs)
+    assert(spark.streams.active.isEmpty)
+  }
+
   test("incremental streaming KG build: linking + canonicalization stream == batch") {
     val nDocs = 120L
     val dir = Files.createTempDirectory("pages_inc").toString
@@ -195,6 +221,8 @@ class StreamingSpec extends AnyFunSuite {
     intercept[Exception](StreamingPipeline.runIncremental(
       spark, StreamingPipeline.readPages(spark, dir), work, recanonEvery = 2))
     assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+    // the failed batch also stops its query: nothing is left running
+    assert(spark.streams.active.isEmpty)
   }
 
   test("incremental streaming KG build on a file: URI work dir: stream == batch") {

@@ -8,17 +8,22 @@ PARENT_DIR and CHANGE_DIR are two checkouts (e.g. `git archive` copies).
 Pair i runs `perfbench/run.py --workload W --seed SEED0+i --trace 0` in
 both, the parent first on even i and the change first on odd i, with the
 run length BENCHMARK.json sets. Per end-to-end metric it prints the
-medians, the parent's quartiles, the change's wins and a verdict:
+medians and the parent's quartiles over each side's successful runs, the
+change's wins over ALL pairs run (a pair with a failed run is no win) and
+a verdict:
 
-  shown       the change is better in >= 90% of the pairs and its median
-              beats the parent's by more than the parent's IQR;
+  shown       the change is better in >= 90% of the pairs run, its median
+              beats the parent's by more than the parent's IQR, and the
+              change side failed no more runs than the parent side;
   not shown   otherwise;
   unresolved  the parent's IQR, relative to its median, exceeds the
-              metric's BENCHMARK.json bound: these runs cannot tell.
+              metric's BENCHMARK.json bound, so these runs cannot tell,
+              unless every change run beats every parent run.
 
 A last column says whether the change's median is within the bound of the
-parent's. The script reads PARENT_DIR/BENCHMARK.json and writes nothing in
-either checkout beyond what run.py itself leaves in .bench_out/.
+parent's. The failed runs of each side are printed first. The script
+reads only PARENT_DIR/BENCHMARK.json and writes nothing in either
+checkout beyond what run.py itself leaves in .bench_out/.
 """
 import argparse
 import json
@@ -72,11 +77,11 @@ def main():
         got = {side: run(sides[side], args.workload, seed, bench["run_seconds"]) for side in order}
         summary = "  ".join(f"{s}: " + (json.dumps(got[s]) if got[s] else "failed") for s in order)
         print(f"pair {i} seed {seed} ({order[0]} first)  {summary}", file=sys.stderr, flush=True)
-        if got["parent"] and got["change"]:
-            pairs.append(got)
-    failed = args.pairs - len(pairs)
-    print(f"{args.workload}: {len(pairs)} complete pairs, {failed} with a failed run")
-    if len(pairs) < 2:
+        pairs.append(got)
+    failed = {side: sum(p[side] is None for p in pairs) for side in sides}
+    print(f"{args.workload}: {len(pairs)} pairs, failed runs: parent {failed['parent']}, "
+          f"change {failed['change']}")
+    if len(pairs) - max(failed.values()) < 2:
         sys.exit(1)
 
     print("| metric | parent median | parent IQR | change median | change wins | verdict "
@@ -84,15 +89,20 @@ def main():
     print("|---|---|---|---|---|---|---|")
     for m in metrics:
         name, lower, bound = m["name"], m["better"] == "lower", m["bound"]
-        par = [p["parent"][name] for p in pairs]
-        chg = [p["change"][name] for p in pairs]
+        better = (lambda c, p: c < p) if lower else (lambda c, p: c > p)
+        par = [p["parent"][name] for p in pairs if p["parent"]]
+        chg = [p["change"][name] for p in pairs if p["change"]]
         med_p, med_c = statistics.median(par), statistics.median(chg)
         q1, q3 = quartiles(par)
-        wins = sum((c < p) if lower else (c > p) for p, c in zip(par, chg))
+        wins = sum(bool(p["parent"] and p["change"]
+                        and better(p["change"][name], p["parent"][name])) for p in pairs)
         gap = (med_p - med_c) if lower else (med_c - med_p)
         rel = abs(med_p) if med_p else 1.0
-        if (q3 - q1) / rel > bound:
-            verdict = "unresolved"
+        separated = all(better(c, p) for c in chg for p in par)
+        if failed["change"] > failed["parent"]:
+            verdict = "not shown"
+        elif (q3 - q1) / rel > bound:
+            verdict = "shown" if separated else "unresolved"
         elif wins >= 0.9 * len(pairs) and gap > q3 - q1:
             verdict = "shown"
         else:
@@ -100,7 +110,6 @@ def main():
         within = -gap / rel <= bound
         print(f"| {name} | {med_p:.4g} | {q1:.4g}–{q3:.4g} | {med_c:.4g} | {wins}/{len(pairs)} "
               f"| {verdict} | {'yes' if within else 'NO'} |")
-
 
 if __name__ == "__main__":
     main()
