@@ -171,10 +171,10 @@ object Pipeline {
         val resolved = EntityLinking.resolve(spark, triples)
         // independent outputs sharing resolve's persisted url blocks —
         // overlapped like the stage-1/2 and nodes/edges write pairs
-        inParallel(outs.zip(Seq(resolved.linked.toDF(), resolved.aliasEdges)).map {
+        try inParallel(outs.zip(Seq(resolved.linked.toDF(), resolved.aliasEdges)).map {
           case ((io, t), df) => () => io.write(df, t)
         })
-        resolved.unpersistCached() // exactly resolve's url-block persist
+        finally resolved.unpersistCached() // exactly resolve's url-block persist
         Some((System.nanoTime() - t0) / 1000000L)
       }
     val Seq(linked, aliases) = outs.map { case (io, t) => io.read(spark, t) }
@@ -292,16 +292,20 @@ object Pipeline {
   // ---------------------------------------------------------- orchestration
   /** Run independent stage writes as concurrent Spark jobs (one thread
     * each): overlaps the serial tails (last straggler task, parquet
-    * commit, driver bookkeeping) that otherwise stack up per stage. */
+    * commit, driver bookkeeping) that otherwise stack up per stage.
+    * Returns once every job has ended; a failure is rethrown then, with
+    * any other job's failure added to it as suppressed, so no job is
+    * still running when the caller's cleanup or retry starts. */
   private[graft] def inParallel(jobs: Seq[() => Unit]): Unit =
     if (jobs.size <= 1) jobs.foreach(_.apply())
     else {
-      import scala.concurrent.{Await, Future, ExecutionContext}
-      import scala.concurrent.duration.Duration
+      import scala.jdk.CollectionConverters._
       val pool = java.util.concurrent.Executors.newFixedThreadPool(jobs.size)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      try Await.result(Future.sequence(jobs.map(j => Future(j()))), Duration.Inf)
+      val ended = try pool.invokeAll(jobs.map(j =>
+        (() => j()): java.util.concurrent.Callable[Unit]).asJava).asScala
       finally pool.shutdown()
+      val failures = ended.flatMap(f => scala.util.Try(f.get()).failed.toOption.map(_.getCause))
+      failures.headOption.foreach { e => failures.tail.foreach(e.addSuppressed); throw e }
     }
 
   /** Run all stages with parquet checkpointing + resume. */
@@ -371,8 +375,8 @@ object Pipeline {
         (needTriples, "triples", () => writeCounted(
           src.flatMap(d => triplesForDoc(d.url, d.raw_text)).toDF(), triplesAt, "triples")))
         .collect { case (true, name, job) => (name, job) }
-      inParallel(work.map(_._2))
-      if (needDocs && needTriples) src.unpersist(false)
+      try inParallel(work.map(_._2))
+      finally if (needDocs && needTriples) src.unpersist(false)
       for ((name, _) <- work)
         metrics += ((name, -1L, (System.nanoTime() - t0) / 1000000L))
     }
@@ -394,9 +398,9 @@ object Pipeline {
       val canonical = canonicalize(spark, linked.mentions, linked.aliases)
       // nodes and edges both read canonicalize's persisted label table —
       // two independent writes, overlapped
-      inParallel(Seq(() => writeCounted(canonical.nodes, nodesAt, "nodes"),
+      try inParallel(Seq(() => writeCounted(canonical.nodes, nodesAt, "nodes"),
         () => writeCounted(canonical.edges, edgesAt, "edges")))
-      canonical.unpersistCached() // exactly canonicalize's label persist
+      finally canonical.unpersistCached() // exactly canonicalize's label persist
       metrics += (("canonicalize", -1L, (System.nanoTime() - t0) / 1000000L))
     }
     val nodesDf = read(nodesAt)

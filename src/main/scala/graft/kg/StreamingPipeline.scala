@@ -6,8 +6,6 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types._
 import graft.kg.Schema._
 import graft.kg.io.{Ledger, ParquetTableIO}
-import org.apache.hadoop.fs.{FileSystem, Path}
-import java.nio.charset.StandardCharsets.UTF_8
 
 /** Streaming ingest path: the KG extract→clean→triples stages are narrow
   * per-row transforms, so they apply unchanged to a streaming
@@ -64,44 +62,38 @@ object StreamingPipeline {
   // ------------------------------------------------- incremental KG build
   /** The STATEFUL half of the KG build on a stream — linking +
     * canonicalization, not just extraction. Extraction runs inside each
-    * micro-batch (stateless, batch code verbatim) and lands in an
-    * accumulated triples table via IDEMPOTENT batchId-keyed overwrites;
-    * every `recanonEvery` batches the accumulated triples re-link and
-    * re-canonicalize through the batch build's own link → canonicalize
-    * path ([[Pipeline.link]], then [[Pipeline.canonicalize]] with its
-    * EXACT connected components over the whole coverage's CC graph), so
+    * micro-batch (stateless, batch code verbatim), and batch `b` lands
+    * its triples in `triples_stream/batch=<b>` (the [[drain]] replay
+    * rule: a replay overwrites it). Every `recanonEvery` batches, and
+    * once after the stream drains, the landed triples fold through the
+    * batch build's own link → canonicalize path ([[recanonicalize]]): an
+    * EXACT connected components over the whole coverage's CC graph, so
     * every fold ships the tables the batch pipeline would build from the
-    * same triples. After the stream
-    * drains, a last fold runs only if landed rows moved past the latest
-    * fold (an off-cadence end, or a crash between landing and folding);
-    * a stream whose last batch lands on the cadence ships from that
-    * fold; a crash after a fold's link stage reuses its checkpoints.
-    * Seeding the CC with the previous labeling
-    * ([[ConnectedComponents.incremental]]) returns only with a true
-    * delta edge set: fed the whole re-derived graph it does strictly
-    * more work than the exact CC and can keep merges the full corpus no
-    * longer justifies. This is the lambda shape a 100-TB/day feed needs:
-    * the expensive per-row extraction is never redone (streams once),
-    * linking and canonicalization re-derive from slim accumulated
-    * triples. `foreachBatch` is the
-    * sanctioned sink for batch-side effects; the stream checkpoint +
-    * idempotent per-batch dirs + on-disk coverage markers make the
-    * whole lane restartable and self-healing. The reference analog is
-    * the per-upload FULL reprocess at /root/reference/app.py:53-122 —
-    * which re-extracts everything; here only the canonicalization
-    * folds, over already-extracted triples.
+    * same triples.
+    *
+    * A fold is keyed by the micro-batch id it folds through, and its
+    * state lives in [[graft.kg.io.Ledger]] dirs alone: the fold through
+    * `b` commits by writing `cc_labels/v<b>` after its outputs. Both
+    * call sites fold through `b` only when the latest committed version
+    * is below `b` — at the cadence `b` is the batch's id, after the
+    * stream the latest landed batch. So a replayed batch whose fold
+    * committed does not fold again, a stream whose last batch lands on
+    * the cadence runs no drain fold, and a crash anywhere in a fold
+    * leaves the version uncommitted, so the restart folds again, reusing
+    * a complete link stage. The batches a fold through `b` adds are the
+    * ids in `(v_prev, b]`; seeding the CC with the previous labeling
+    * ([[ConnectedComponents.incremental]]) pays only with such a true
+    * delta edge set.
     *
     * Per-batch lineage (north_rule): (batch_id, partition_id, rows)
     * under `stream_lineage` — the streaming lane's per-partition
     * ledger, conservation-checkable against the triples table. */
   def runIncremental(spark: SparkSession, pages: Dataset[Page], workDir: String,
       recanonEvery: Int = 2, extractParallelism: Int = 0): Unit = {
-    val triplesPath = s"$workDir/triples_stream"
-    val lineagePath = s"$workDir/stream_lineage"
-    // all fold bookkeeping goes through the work dir's Hadoop FileSystem,
-    // so a `file:` URI or a remote store behaves like a local path
-    val fs = new Path(workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val landed = new Ledger(spark, s"$workDir/triples_stream", "batch=")
     val labels = new Ledger(spark, s"$workDir/cc_labels", "v")
+    def foldThrough(b: Long): Unit =
+      if (labels.latest().forall(_ < b)) recanonicalize(spark, workDir, landed, labels, b)
     // a micro-batch is as parallel as its FILE COUNT (one scan split per
     // small file), so a 1-file trigger runs the regex-heavy extraction
     // nearly single-core. extractParallelism > 0 repartitions the pages
@@ -111,143 +103,56 @@ object StreamingPipeline {
     val src = if (extractParallelism > 0) pages.repartition(extractParallelism) else pages
     drain(Pipeline.triplesFromPages(spark, src).toDF(), s"$workDir/ckpt")(
       _.foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // two actions read the batch (append + lineage): persist so the
-        // regex-heavy extraction runs once per row, not twice. Each batch
-        // overwrites its own batch=<id> dir (the [[drain]] replay rule);
-        // readers see `batch` as a discovered partition column and
-        // project it away. The batch's row count rides the write (an
-        // observe) and is kept beside its rows, so fold bookkeeping never
-        // rescans them.
+        // two actions read the batch (landing + lineage): persist so the
+        // regex-heavy extraction runs once per row, not twice. Readers
+        // that read the whole dir see `batch` as a discovered partition
+        // column and project it away.
         batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          val batchDir = new Path(s"$triplesPath/batch=$batchId")
-          val rows = org.apache.spark.sql.Observation()
-          batch.observe(rows, count(lit(1)).as("n"))
-            .write.mode(SaveMode.Overwrite).parquet(batchDir.toString)
-          writeMarker(fs, new Path(batchDir, batchRowsFile), rows.get("n").toString)
+          batch.write.mode(SaveMode.Overwrite).parquet(landed.path(batchId))
           batch.groupBy(spark_partition_id().as("partition_id"))
             .agg(count(lit(1)).as("rows"))
-            .write.mode(SaveMode.Overwrite).parquet(s"$lineagePath/batch_id=$batchId")
+            .write.mode(SaveMode.Overwrite).parquet(s"$workDir/stream_lineage/batch_id=$batchId")
         } finally batch.unpersist(false)
-        if (recanonEvery > 0 && (batchId + 1) % recanonEvery == 0)
-          recanonicalize(spark, fs, workDir, labels)
+        if (recanonEvery > 0 && (batchId + 1) % recanonEvery == 0) foldThrough(batchId)
         ()
       })
-    // fold in whatever the cadence has not covered yet. Staleness is
-    // derived from DISK, not an in-memory flag (which a crash between
-    // stream commit and fold would lose, leaving nodes_stream
-    // permanently behind triples_stream): each labels version records
-    // the triples row count it covered, and a final fold runs whenever
-    // the landed count has moved past it. Every fold is exact, so a
-    // stream whose last batch landed on the cadence is already covered
-    // and runs none; a latest version marked other than `exact` (a work
-    // dir written when cadence folds were seeded) still gets one.
-    val landed = landedRows(spark, fs, triplesPath)
-    val (covered, exact) = coverage(fs, labels)
-    if (landed > 0 && !(exact && covered == landed))
-      recanonicalize(spark, fs, workDir, labels)
+    // fold what the cadence has not: an off-cadence end, or a crash
+    // between a batch's landing and its fold's commit
+    landed.latest().foreach(foldThrough)
   }
 
-  /** The accumulated triples table with the schema its batch writes
-    * used, plus the discovered `batch` partition column: a read with a
-    * known schema skips the parquet footer-merge job that schema
-    * inference launches. */
-  private def landedTriples(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(Encoders.product[Triple].schema.add("batch", IntegerType)).parquet(path)
-
-  /** The row count a batch dir of `triples_stream` recorded at landing
-    * (a `_`-prefixed file, which parquet reads skip). */
-  private val batchRowsFile = "_rows.txt"
-
-  /** Overwrite `f` with `text` through `fs`. */
-  private def writeMarker(fs: FileSystem, f: Path, text: String): Unit = {
-    val out = fs.create(f, true)
-    try out.write(text.getBytes(UTF_8)) finally out.close()
-  }
-
-  /** The space-separated tokens of a marker file, or None when it is
-    * missing. A crash between its create and close leaves it 0 bytes,
-    * which reads as one empty token. */
-  private def readMarker(fs: FileSystem, f: Path): Option[Array[String]] =
-    Option.when(fs.exists(f)) {
-      val in = fs.open(f)
-      try new String(in.readAllBytes(), UTF_8).trim.split(" ") finally in.close()
-    }
-
-  /** Rows landed in `triples_stream`: the sum of the counts its batch
-    * dirs recorded at landing. A batch dir without a readable count (a
-    * crash between its write and the record) is counted by reading it. */
-  private def landedRows(spark: SparkSession, fs: FileSystem, triplesPath: String): Long =
-    Option(fs.globStatus(new Path(triplesPath, "batch=*"))).toSeq.flatten
-      .filter(_.isDirectory).map(_.getPath)
-      .map { dir =>
-        readMarker(fs, new Path(dir, batchRowsFile)).flatMap(_(0).toLongOption)
-          .getOrElse(spark.read.schema(Encoders.product[Triple].schema)
-            .parquet(dir.toString).count())
-      }
-      .sum
-
-  /** (covered triples rows, was-exact) of the LATEST labels version —
-    * the shipped tables must come from an exact fold (a full CC). An
-    * unparsable marker (a crash between its create and close leaves 0
-    * bytes) reads as nothing covered, so the drain fold reruns. */
-  private def coverage(fs: FileSystem, labels: Ledger): (Long, Boolean) =
-    labels.latest()
-      .map(v => new Path(labels.path(v), "_covered_rows.txt"))
-      .flatMap(readMarker(fs, _))
-      .flatMap(parts => parts(0).toLongOption.map((_, parts.length > 1 && parts(1) == "exact")))
-      .getOrElse((0L, false))
-
-  /** One re-canonicalization pass over the accumulated streamed triples:
-    * the batch build's link stage (checkpoints `link_stage/linked_<n>`
-    * and `alias_<n>`, n = covered rows, reused when complete) →
-    * `Pipeline.canonicalize` (an exact CC over the coverage's graph) →
-    * overwrite `nodes_stream`/`edges_stream`, append a new labels
-    * version. Labels are VERSIONED directories (`cc_labels/v<n>`)
-    * because overwriting the parquet a lazy plan is still reading is the
-    * classic self-overwrite corruption; versioning also gives the resume
-    * story — a crashed pass leaves the previous version intact. */
-  private def recanonicalize(spark: SparkSession, fs: FileSystem, workDir: String,
-      labels: Ledger): Unit = {
+  /** The fold through batch `b`, in commit order:
+    *  1. the batch build's link stage over the landed batches ≤ `b`,
+    *     checkpointed as `link_stage/{linked_,alias_}<b>` (reused when
+    *     complete: linking is a pure function of those batches, so a fold
+    *     interrupted after it resumes from its parquet instead of
+    *     re-running alias discovery + ambiguity resolution);
+    *  2. [[Pipeline.canonicalize]], an exact CC over the coverage's graph;
+    *  3. `nodes_stream` and `edges_stream`, as concurrent jobs;
+    *  4. `cc_labels/v<b>`, whose `_SUCCESS` commits the fold. Labels are
+    *     VERSIONED dirs: overwriting the parquet a lazy plan still reads
+    *     is the classic self-overwrite corruption;
+    *  5. prune the labels older than the previous version and every
+    *     link stage of an older batch: without it link_stage grows as
+    *     O(folds × corpus) and cc_labels as O(folds × vocabulary). */
+  private def recanonicalize(spark: SparkSession, workDir: String, landed: Ledger,
+      labels: Ledger, b: Long): Unit = {
     import spark.implicits._
-    val raw = landedTriples(spark, s"$workDir/triples_stream")
-    // the covered rows for the on-disk staleness ledger — and the
-    // linking-stage checkpoint key below — from the landing-time counts
-    val nCovered = landedRows(spark, fs, s"$workDir/triples_stream")
-
-    // ---- the batch build's link stage, its checkpoints keyed by
-    // coverage: linking is a pure function of the accumulated triples
-    // multiset, and within a run the landed set only grows, so the
-    // covered row count identifies it exactly. A fold interrupted after
-    // this stage resumes from its parquet instead of re-running alias
-    // discovery + ambiguity resolution (the dominant fold cost).
     val linkStage = new ParquetTableIO(s"$workDir/link_stage")
-    val linked = Pipeline.link(spark, raw.drop("batch").as[Triple],
-      (linkStage, s"linked_$nCovered"), (linkStage, s"alias_$nCovered"), reuse = true)
+    // read with the schema the batch writes used: a known schema skips
+    // the parquet footer-merge job that schema inference launches
+    val linked = Pipeline.link(spark,
+      spark.read.schema(Encoders.product[Triple].schema).parquet(landed.upTo(b): _*).as[Triple],
+      (linkStage, s"linked_$b"), (linkStage, s"alias_$b"), reuse = true)
     val canonical = Pipeline.canonicalize(spark, linked.mentions, linked.aliases)
-    val base = labels.latest()
-    val next = base.getOrElse(0L) + 1
-    // labels first (nodes/edges derive from the same plan; any failure
-    // here leaves the previous version live), then the two outputs
-    canonical.labels.write.mode(SaveMode.Overwrite).parquet(labels.path(next))
-    // coverage marker: how many triples rows this version folded, and
-    // that the fold was EXACT (a full CC). runIncremental's staleness
-    // check compares it against the landed count on disk, so a crash
-    // before the final fold self-heals on restart. (A production table
-    // format records this as snapshot metadata.)
-    writeMarker(fs, new Path(labels.path(next), "_covered_rows.txt"), s"$nCovered exact")
-    // both outputs read the same persisted label table — overlap the two
-    // writes as concurrent jobs exactly like the batch pipeline does
-    Pipeline.inParallel(Seq(
-      () => canonical.nodes.write.mode(SaveMode.Overwrite).parquet(s"$workDir/nodes_stream"),
-      () => canonical.edges.write.mode(SaveMode.Overwrite).parquet(s"$workDir/edges_stream")))
-    canonical.unpersistCached()
-    // this fold has landed (labels version + both outputs): labels older
-    // than its base and every smaller coverage's linking stage are dead
-    // (coverages only grow within a run, and a restarted fold can only
-    // reuse this one). Without the prune link_stage grows as
-    // O(folds × corpus) and cc_labels as O(folds × vocabulary) on tmpfs.
-    labels.prune(base.getOrElse(next))
-    Seq("linked_", "alias_").foreach(new Ledger(spark, s"$workDir/link_stage", _).prune(nCovered))
+    try {
+      Pipeline.inParallel(Seq(
+        () => canonical.nodes.write.mode(SaveMode.Overwrite).parquet(s"$workDir/nodes_stream"),
+        () => canonical.edges.write.mode(SaveMode.Overwrite).parquet(s"$workDir/edges_stream")))
+      canonical.labels.write.mode(SaveMode.Overwrite).parquet(labels.path(b))
+    } finally canonical.unpersistCached()
+    labels.prune(labels.latest(below = b).getOrElse(b))
+    Seq("linked_", "alias_").foreach(new Ledger(spark, s"$workDir/link_stage", _).prune(b))
   }
 }

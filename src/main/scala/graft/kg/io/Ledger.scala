@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Versioned state dirs `<root>/<prefix><n>` on the root's Hadoop
   * FileSystem: the format every restartable streaming lane keeps its
-  * state in (the KG fold's `cc_labels/v<n>` and `link_stage/<stage>_<n>`,
-  * st_mv_refresh's `summary_v<n>`, st_delta_pairs' index versions).
+  * state in (the KG fold's landed `triples_stream/batch=<n>`, its
+  * `cc_labels/v<n>` and `link_stage/<stage>_<n>`, st_mv_refresh's
+  * `summary_v<n>`, st_delta_pairs' index versions).
   * Version n is live once its dir is [[Ledger.complete]], so a writer
   * that dies mid-write leaves its dir invisible and the older versions
   * live, and an at-least-once replay of n overwrites n in place. */

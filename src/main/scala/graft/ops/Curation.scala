@@ -235,12 +235,12 @@ object Curation {
     * second pass over either corpus's shingles is needed (at 100 TB the
     * re-shingling join IS the bill; `decontaminate` keeps the exact
     * containment path for broadcastable eval sets). Both signature
-    * tables are PERSISTED (MEMORY_AND_DISK, LRU-evicted — the IVF
-    * precedent) because the banding path and the verify join both
-    * consume them and Catalyst would otherwise recompute the
-    * fingerprinting scan per consumer; a production deployment keeps
-    * them as on-disk index tables instead (the `ir_index_build` /
-    * `st_delta_pairs` pattern). Bench-side mega
+    * tables are materialized ([[Layout.materialize]]) because the
+    * banding path and the verify join of the returned plan both consume
+    * them and Catalyst would otherwise recompute the fingerprinting scan
+    * per consumer, and a persist here could never be released; a
+    * production deployment keeps them as on-disk index tables instead
+    * (the `ir_index_build` / `st_delta_pairs` pattern). Bench-side mega
     * buckets (boilerplate collapse) are capped + observed like
     * `Dedup.candidatePairs`; a capped-bucket doc can still match through
     * its other bands. Estimate in exact integer ppm.
@@ -251,11 +251,9 @@ object Curation {
       metricName: String = "fuzzy_decon_buckets"): DataFrame = {
     require(nHashes % rowsPerBand == 0,
       s"fuzzyDecontaminate: nHashes ($nHashes) must be a multiple of rowsPerBand ($rowsPerBand)")
-    val csig = Dedup.minhashShingles(corpus, id, text, nHashes, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bsig = Dedup.minhashShingles(bench, id, text, nHashes, shingleN)
-      .withColumnRenamed(id, "bench_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val csig = Layout.materialize(Dedup.minhashShingles(corpus, id, text, nHashes, shingleN))
+    val bsig = Layout.materialize(Dedup.minhashShingles(bench, id, text, nHashes, shingleN)
+      .withColumnRenamed(id, "bench_id"))
     // BOTH sides are capped + observed: a boilerplate-collapsed mega
     // bucket on the corpus side would otherwise fan out
     // corpus_bucket × bench_bucket candidate rows unboundedly (r5

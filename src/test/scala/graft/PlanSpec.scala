@@ -138,6 +138,18 @@ class PlanSpec extends AnyFunSuite {
       s"stream with StreamingPipeline.drain in: ${hits.distinct.mkString(", ")}")
   }
 
+  test("fold state has one home: no getFileSystem in graft/kg outside graft/kg/io") {
+    val kg = java.nio.file.Paths.get("src/main/scala/graft/kg")
+    val io = kg.resolve("io")
+    val sources = java.nio.file.Files.walk(kg)
+    val found = try sources.iterator().asScala.toSeq finally sources.close()
+    assert(found.exists(_.startsWith(io)), s"$io not found")
+    val offenders = found.filter(f => f.toString.endsWith(".scala") && !f.startsWith(io))
+      .filter(f => java.nio.file.Files.readString(f).contains("getFileSystem"))
+    assert(offenders.isEmpty, s"keep file-system state in graft.kg.io (Ledger, TableIO), " +
+      s"not in: ${offenders.mkString(", ")}")
+  }
+
   test("dedup exact-groups plan has a single shuffle") {
     val df = graft.ops.Dedup.exactGroups(
       spark.read.parquet(s"$dir/documents.parquet"), "doc_id", "text")

@@ -114,6 +114,29 @@ class PipelineSpec extends AnyFunSuite {
       .toSet)
   }
 
+  test("inParallel waits for every job before it rethrows, the others' failures suppressed") {
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException](Pipeline.inParallel(Seq(
+      () => throw new IllegalStateException("first"),
+      () => { Thread.sleep(300); done.set(true) })))
+    assert(e.getMessage == "first")
+    assert(done.get, "inParallel rethrew while a sibling job was still running")
+    val both = intercept[IllegalStateException](Pipeline.inParallel(Seq(
+      () => throw new IllegalStateException("a"),
+      () => { Thread.sleep(100); throw new IllegalArgumentException("b") })))
+    assert(both.getSuppressed.map(_.getMessage).toSeq == Seq("b"))
+  }
+
+  test("a build whose nodes write fails leaves the session's caches as it found them") {
+    val before = (spark.sparkContext.getPersistentRDDs.keySet,
+      org.apache.spark.sql.TestShim.cachedRelations(spark))
+    val work = LedgerTestFs.root(spark, "kgnodesfail")
+    intercept[Exception](LedgerTestFs.failingUnder("nodes")(
+      Pipeline.run(spark, PagesGen.pages(spark, 60L), Pipeline.Config(work, nPartitions = 4))))
+    assert((spark.sparkContext.getPersistentRDDs.keySet,
+      org.apache.spark.sql.TestShim.cachedRelations(spark)) == before)
+  }
+
   test("reversed-text docs flow through (detector fires in-pipeline)") {
     val u = PagesGen.url(99L)
     val got = spark.read.parquet(workDir + "/triples").where(col("url") === u).count()

@@ -50,6 +50,11 @@ class StreamingSpec extends AnyFunSuite {
     Observed(writes.asScala.toSeq, caches.asScala.toSeq)
   }
 
+  /** The rows of `df`'s `cols`, each joined with `|`, as a set. */
+  private def proj(df: org.apache.spark.sql.DataFrame, cols: String*): Set[String] =
+    df.select(cols.map(org.apache.spark.sql.functions.col): _*)
+      .collect().map(_.mkString("|")).toSet
+
   test("streaming triples == batch triples on the same pages") {
     val dir = Files.createTempDirectory("pages").toString
     PagesGen.pages(spark, 80L).write.mode("overwrite").parquet(dir)
@@ -157,9 +162,6 @@ class StreamingSpec extends AnyFunSuite {
     val batchRes = Pipeline.run(spark, PagesGen.pages(spark, nDocs),
       Pipeline.Config(batchDir, nPartitions = 4))
 
-    def proj(df: org.apache.spark.sql.DataFrame, cols: String*) =
-      df.select(cols.map(org.apache.spark.sql.functions.col): _*)
-        .collect().map(_.mkString("|")).toSet
     val streamNodes = spark.read.parquet(s"$work/nodes_stream")
     val streamEdges = spark.read.parquet(s"$work/edges_stream")
     // the STATEFUL half (linking + CC canonicalization), not just
@@ -172,26 +174,21 @@ class StreamingSpec extends AnyFunSuite {
     val versions = new java.io.File(s"$work/cc_labels").listFiles()
       .filter(_.getName.startsWith("v")).map(_.getName).sorted
     assert(versions.length >= 2, versions.mkString(","))
-    // 2 folds (after batches 1 and 3; the last batch lands on the
-    // cadence, so no drain fold runs): the second prunes cc_labels to
-    // its own version and that version's base
-    assert(versions.toSeq == Seq("v1", "v2"), versions.mkString(","))
+    // 2 folds, each keyed by the batch it folds through (1 and 3; the
+    // last batch lands on the cadence, so no drain fold runs): the second
+    // prunes cc_labels to its own version and that version's base
+    assert(versions.toSeq == Seq("v1", "v3"), versions.mkString(","))
     // per-batch lineage conserves rows: Σ lineage == triples landed
     val lineage = spark.read.parquet(s"$work/stream_lineage")
     assert(lineage.select("batch_id").distinct().count() == 4L)
     val lSum = lineage.agg(org.apache.spark.sql.functions.sum("rows")).head.getLong(0)
     val landed = spark.read.parquet(s"$work/triples_stream").count()
     assert(lSum == landed)
-    // every fold is exact, and the last one covers every landed row
-    val markers = versions.map(v => new String(Files.readAllBytes(
-      new java.io.File(s"$work/cc_labels/$v/_covered_rows.txt").toPath), "UTF-8").trim)
-    assert(markers.forall(_.endsWith(" exact")), markers.mkString(","))
-    assert(markers.last == s"$landed exact", markers.mkString(","))
-    // link_stage keeps one coverage, the landed one: each fold prunes the
-    // linking tables of every other coverage once its outputs land
+    // link_stage keeps the last fold's batch: each fold prunes the
+    // linking tables of every older batch once it commits
     val stages = new java.io.File(s"$work/link_stage").listFiles().map(_.getName)
-    val coverages = stages.map(n => n.substring(n.lastIndexOf('_') + 1).toLong).toSet
-    assert(coverages == Set(landed), stages.sorted.mkString(","))
+      .filterNot(_.startsWith(".")).sorted.toSeq
+    assert(stages == Seq("alias_3", "linked_3"), stages.mkString(","))
     // a crash after the last fold's link stage: its labels version and
     // outputs are lost, its linking checkpoints complete. The restart
     // folds once, from those checkpoints, and ships the batch tables.
@@ -229,39 +226,49 @@ class StreamingSpec extends AnyFunSuite {
     val nDocs = 90L
     val dir = Files.createTempDirectory("pages_uri").toString
     // 3 micro-batches, folding every 2nd: the drain fold runs only if the
-    // landed count read through the URI has moved past the fold's marker
+    // latest landed batch read through the URI is past the latest fold
     PagesGen.pages(spark, nDocs).repartition(3).write.mode("overwrite").parquet(dir)
     val pages = spark.readStream.schema(StreamingPipeline.pageSchema)
       .option("maxFilesPerTrigger", 1).parquet(dir).as[Schema.Page]
-    // a URI, not a bare path: every fold bookkeeping site (landed count,
-    // coverage marker, label versions, stage markers, link_stage prune)
-    // must resolve it through the Hadoop FileSystem
+    // a URI, not a bare path: every fold bookkeeping site (landed
+    // batches, label versions, stage markers, link_stage prune) must
+    // resolve it through the Hadoop FileSystem
     val work = new java.io.File(Files.createTempDirectory("kgincuri").toString).toURI.toString
     assert(work.startsWith("file:"))
     StreamingPipeline.runIncremental(spark, pages, work, recanonEvery = 2)
 
     val batchRes = Pipeline.run(spark, PagesGen.pages(spark, nDocs),
       Pipeline.Config(Files.createTempDirectory("kgincurib").toString, nPartitions = 2))
-    def proj(df: org.apache.spark.sql.DataFrame, cols: String*) =
-      df.select(cols.map(org.apache.spark.sql.functions.col): _*)
-        .collect().map(_.mkString("|")).toSet
     assert(proj(spark.read.parquet(s"$work/nodes_stream"),
       "canonical_name", "kind", "n_mentions", "n_urls")
       == proj(batchRes.nodes, "canonical_name", "kind", "n_mentions", "n_urls"))
     assert(proj(spark.read.parquet(s"$work/edges_stream"), "src_url", "dst_name", "weight")
       == proj(batchRes.edges, "src_url", "dst_name", "weight"))
-    // 2 folds (after batch 1, then the drain fold): the drain fold's
-    // version and its base survive the prune on a URI root too
-    def versions = new java.io.File(new java.net.URI(s"$work/cc_labels")).listFiles()
+    // 2 folds (through batch 1, then the drain fold through batch 2): the
+    // drain fold's version and its base survive the prune on a URI root too
+    val versions = new java.io.File(new java.net.URI(s"$work/cc_labels")).listFiles()
       .map(_.getName).filter(_.startsWith("v")).sorted.toSeq
     assert(versions == Seq("v1", "v2"), versions.mkString(","))
-    // a crash between the latest marker's create and close leaves it
-    // 0 bytes under a complete labels version: the restart reads it as
-    // nothing covered and folds exactly once more, to the batch tables
-    val marker = new org.apache.hadoop.fs.Path(s"$work/cc_labels/v2/_covered_rows.txt")
-    marker.getFileSystem(spark.sparkContext.hadoopConfiguration).create(marker, true).close()
-    StreamingPipeline.runIncremental(spark, pages, work, recanonEvery = 2)
-    assert(versions == Seq("v2", "v3"), versions.mkString(","))
+  }
+
+  test("a fold whose output write fails commits nothing: the restart folds again, to the batch tables") {
+    val nDocs = 60L
+    val dir = Files.createTempDirectory("pages_crash").toString
+    PagesGen.pages(spark, nDocs).repartition(3).write.mode("overwrite").parquet(dir)
+    val pages = spark.readStream.schema(StreamingPipeline.pageSchema)
+      .option("maxFilesPerTrigger", 1).parquet(dir).as[Schema.Page]
+    val work = LedgerTestFs.root(spark, "kgcrash")
+    // no cadence folds: the one fold is the drain fold through batch 2,
+    // and its edges_stream write fails after the link stage completed
+    intercept[Exception](LedgerTestFs.failingUnder("edges_stream")(
+      StreamingPipeline.runIncremental(spark, pages, work, recanonEvery = 0)))
+    val labels = new graft.kg.io.Ledger(spark, s"$work/cc_labels", "v")
+    assert(labels.list.isEmpty, labels.list.mkString(","))
+    StreamingPipeline.runIncremental(spark, pages, work, recanonEvery = 0)
+    assert(labels.list == Seq(2L), labels.list.mkString(","))
+
+    val batchRes = Pipeline.run(spark, PagesGen.pages(spark, nDocs),
+      Pipeline.Config(Files.createTempDirectory("kgcrashb").toString, nPartitions = 2))
     assert(proj(spark.read.parquet(s"$work/nodes_stream"),
       "canonical_name", "kind", "n_mentions", "n_urls")
       == proj(batchRes.nodes, "canonical_name", "kind", "n_mentions", "n_urls"))

@@ -558,10 +558,13 @@ class OpsSpec extends AnyFunSuite {
       (1L, "the quick brown fox jumps over the lazy dog repeatedly tonight"),
       (2L, "completely different content about spark shuffles and joins here"))
       .toDF("doc_id", "text")
+    def cached = org.apache.spark.sql.TestShim.cachedRelations(spark)
+    val before = cached
     val out = Curation.fuzzyDecontaminate(corpus, bench, "doc_id", "text",
       nHashes = 8, shingleN = 8, rowsPerBand = 4, minJaccardPpm = 500000L)
       .collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("bench_id"),
         r.getAs[Long]("n_agree"), r.getAs[Long]("est_jaccard_ppm"))).toSeq
+    assert(cached == before, "fuzzyDecontaminate left a cached relation")
     // identical shingle sets → every minhash position agrees → ppm 10^6;
     // the unrelated doc shares no band bucket so it is never verified
     assert(out == Seq((1L, 100L, 8L, 1000000L)), out.toString)
