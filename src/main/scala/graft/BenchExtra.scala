@@ -12,12 +12,13 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *     runMain graft.BenchExtra [reps=N] [explain=DIR] <query> [query...]
   * `explain=DIR` writes each query's .explain("formatted") to
   * DIR/<query>.txt (plan evidence for plans/r06/). `all` expands to the
-  * full sorted sweep. Between reps the kg pipeline cache is reset like
-  * Bench does between sweeps. One JSON line per query and rep on stdout;
-  * a failed rep prints `{"q":…,"rep":…,"error":…}` with no `sec` or
-  * `rows` (a failure never reads as a timing) and the process exits
-  * non-zero. Every streaming micro-batch prints one progress line on
-  * stderr. */
+  * full sorted sweep. A warm-up rep 0 runs every query once before rep
+  * 1, printed with `warmup_sec`, never `sec`. Before every timed rep
+  * the kg pipeline cache is reset like Bench does between sweeps. One
+  * JSON line per query and rep on stdout; a failed rep (rep 0 too)
+  * prints `{"q":…,"rep":…,"error":…}` with no `sec` or `rows` (a
+  * failure never reads as a timing) and the process exits non-zero.
+  * Every streaming micro-batch prints one progress line on stderr. */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -48,8 +49,8 @@ object BenchExtra {
     })
     val json = new com.fasterxml.jackson.databind.ObjectMapper()
     var failed = 0
-    for (r <- 1 to reps) {
-      if (r > 1) {
+    for (r <- 0 to reps) {
+      if (r > 0) {
         graft.queries.KgQueries.resetRunCache()
         spark.catalog.clearCache()
       }
@@ -68,7 +69,8 @@ object BenchExtra {
               java.nio.file.Paths.get(s"$d/$name.txt"),
               plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
           }
-          println(f"""{"q":"$name","rep":$r,"sec":$sec%.3f,"rows":$rows}""")
+          if (r == 0) println(f"""{"q":"$name","rep":0,"warmup_sec":$sec%.3f}""")
+          else println(f"""{"q":"$name","rep":$r,"sec":$sec%.3f,"rows":$rows}""")
         } catch { case e: Throwable =>
           failed += 1
           val msg = json.writeValueAsString(Option(e.getMessage).getOrElse(e.toString))

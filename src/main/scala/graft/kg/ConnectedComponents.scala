@@ -21,24 +21,20 @@ import graft.ops.Layout.materialize
   */
 object ConnectedComponents {
 
-  /** Below this edge count the graph is collected and solved with
-    * driver-side union-find — one job instead of ~3 per CC round. Alias
-    * graphs are entity-vocabulary-sized (≪ corpus size), so even 100 TB
-    * corpora usually stay under it; the distributed loop is the fallback,
-    * not the common path. Same labels either way (min-id per component). */
-  val DriverSolveMaxEdges: Long = 2000000L
-
   /** Edge budget for the driver fast path derived from the ACTUAL driver
     * heap, not a constant. Bytes/edge is MEASURED, not estimated:
     * tools/CcBudget builds the exact collect-array + boxed union-find
     * HashMap this path allocates and reports 283.7 B/edge at 2M random
     * edges (56 B tuple array + 227 B map — a random graph adds ~2 boxed
     * entries per edge, the worst case; alias graphs that reuse vertices
-    * cost less). Budget = heapFraction of max heap / 300 B (measurement
-    * rounded up), so a small driver degrades to the distributed loop
-    * instead of OOMing, and a big driver solves bigger alias graphs in
-    * one job. Never floored at a constant — that would reintroduce
-    * exactly the small-driver OOM this exists to prevent.
+    * cost less). Budget = 5% of max heap / 300 B (measurement rounded
+    * up). Every entry point defaults `driverSolveThreshold` to it: under
+    * it the graph is collected and solved by driver-side union-find, one
+    * job instead of ~3 per CC round, with the same labels. A small
+    * driver degrades to the distributed loop instead of OOMing, and a
+    * big driver solves bigger alias graphs in one job. Never floored at
+    * a constant — that would reintroduce exactly the small-driver OOM
+    * this exists to prevent.
     *
     * The one collect is also bounded by the session's
     * `spark.driver.maxResultSize` (0 = unlimited): past it the job fails
@@ -47,10 +43,11 @@ object ConnectedComponents {
     * Spark 4.1 (16 MiB cap, 2 M edges: `limit(1000001)` passed,
     * `limit(1500001)` failed), so the cap allows cap / 24 B edges, 24 B
     * being the row's uncompressed UnsafeRow size. */
-  def driverEdgeBudget(heapFraction: Double = 0.05): Long =
+  def driverEdgeBudget(): Long =
     edgeBudget(Runtime.getRuntime.maxMemory,
       SparkSession.active.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g"),
-      heapFraction)
+      HeapFraction)
+  private val HeapFraction = 0.05
 
   /** [[driverEdgeBudget]] for a heap of `maxHeap` bytes and a result cap
     * of `resultCap` bytes (0 = unlimited). */
@@ -60,7 +57,7 @@ object ConnectedComponents {
   }
 
   def run(spark: SparkSession, edges: DataFrame, maxIterations: Int = 25,
-      driverSolveThreshold: Long = DriverSolveMaxEdges): DataFrame =
+      driverSolveThreshold: Long = driverEdgeBudget()): DataFrame =
     runWithStats(spark, edges, maxIterations, driverSolveThreshold)._1
 
   /** Like `run`, but also returns the number of distributed rounds
@@ -77,7 +74,7 @@ object ConnectedComponents {
     * under the driver budget by definition. Every returned table is
     * materialized, so none reads the released cache. */
   def runWithStats(spark: SparkSession, edges: DataFrame, maxIterations: Int = 25,
-      driverSolveThreshold: Long = DriverSolveMaxEdges): (DataFrame, Int) = {
+      driverSolveThreshold: Long = driverEdgeBudget()): (DataFrame, Int) = {
     val es = edges.select(col("src"), col("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try solve(spark, es, maxIterations, driverSolveThreshold)
@@ -184,14 +181,14 @@ object ConnectedComponents {
     * [[run]] until it derives a delta edge set). */
   def incremental(spark: SparkSession, prevLabels: DataFrame, newEdges: DataFrame,
       maxIterations: Int = 25,
-      driverSolveThreshold: Long = DriverSolveMaxEdges): DataFrame =
+      driverSolveThreshold: Long = driverEdgeBudget()): DataFrame =
     incrementalWithStats(spark, prevLabels, newEdges, maxIterations,
       driverSolveThreshold)._1
 
   /** `incremental` + distributed-round count (0 = driver fast path). */
   def incrementalWithStats(spark: SparkSession, prevLabels: DataFrame,
       newEdges: DataFrame, maxIterations: Int = 25,
-      driverSolveThreshold: Long = DriverSolveMaxEdges): (DataFrame, Int) = {
+      driverSolveThreshold: Long = driverEdgeBudget()): (DataFrame, Int) = {
     val delta = newEdges.select(col("src"), col("dst"))
     val ends = delta.select(col("src").as("id"))
       .union(delta.select(col("dst").as("id"))).distinct()

@@ -223,10 +223,7 @@ object Pipeline {
       aliases: DataFrame): Canonical = {
     import spark.implicits._
 
-    val ccLabels = ConnectedComponents.run(
-      spark, ccEdges(linked.toDF(), aliases),
-      // fast-path budget from the driver's real heap, not a constant
-      driverSolveThreshold = ConnectedComponents.driverEdgeBudget())
+    val ccLabels = ConnectedComponents.run(spark, ccEdges(linked.toDF(), aliases))
 
     // entity_key -> component (keys not in any alias edge are their own
     // component). Persisted: nodes AND edges both derive from it, and the

@@ -259,15 +259,10 @@ object Curation {
     // corpus_bucket × bench_bucket candidate rows unboundedly (r5
     // ADVICE) — the 100-TB cross-corpus framing needs the quadratic
     // guard on each side, each under its own metric name
-    val cbAll = Dedup.minhashBands(csig, id, rowsPerBand)
-    val cb = cbAll.join(
-      Dedup.cappedBuckets(cbAll, Seq("band", "bucket"), maxBucketSize,
-        metricName + "_corpus"),
-      Seq("band", "bucket"))
-    val bbAll = Dedup.minhashBands(bsig, "bench_id", rowsPerBand)
-    val bb = bbAll.join(
-      Dedup.cappedBuckets(bbAll, Seq("band", "bucket"), maxBucketSize, metricName),
-      Seq("band", "bucket"))
+    val cb = Dedup.cappedBuckets(Dedup.minhashBands(csig, id, rowsPerBand),
+      Seq("band", "bucket"), maxBucketSize, metricName + "_corpus")
+    val bb = Dedup.cappedBuckets(Dedup.minhashBands(bsig, "bench_id", rowsPerBand),
+      Seq("band", "bucket"), maxBucketSize, metricName)
     val cands = cb.join(bb, Seq("band", "bucket"))
       .select(col(id), col("bench_id")).distinct()
     cands
@@ -291,14 +286,11 @@ object Curation {
     * corpus-sized shuffle. Output: (id, bench_id, n_shared, containment). */
   def decontaminate(corpus: DataFrame, bench: DataFrame, id: String, text: String,
       n: Int, minContainment: Double): DataFrame = {
-    // the containment join carries a 64-bit hash of the shingle, not its
-    // text — the join only decides identity, and the broadcast side
-    // shrinks with it (guide §2.3; same proxy-key rationale as
-    // Dedup.containmentFromUnits; charShingles never emits nulls)
+    // the join carries Dedup.unitKey, so the broadcast side shrinks too
     val cs = Dedup.charShingles(corpus, id, text, n)
-      .select(col(id), xxhash64(col("shingle")).as("shingle"))
+      .select(col(id), Dedup.unitKey(col("shingle")).as("shingle"))
     val bs = Dedup.charShingles(bench, id, text, n)
-      .select(col(id).as("bench_id"), xxhash64(col("shingle")).as("shingle"))
+      .select(col(id).as("bench_id"), Dedup.unitKey(col("shingle")).as("shingle"))
     val bsz = bs.groupBy(col("bench_id")).agg(count(lit(1)).as("bn"))
     cs.join(broadcast(bs), Seq("shingle"))
       .groupBy(col(id), col("bench_id")).agg(count(lit(1)).as("n_shared"))

@@ -16,12 +16,17 @@ import org.apache.spark.sql.functions._
   * Catalyst can push/prune freely; the per-row fingerprint kernels
   * (simhashShingles/minhashShingles) are narrow single-pass loops.
   *
+  * Pair finding has one home here: the capped bucket gate, the proxy
+  * key of every postings join ([[unitKey]]), and the Jaccard and
+  * containment operators; `Similarity`, `Curation` and the queries
+  * compose them instead of restating them.
+  *
   * Scale notes: the only shuffles are the per-doc token dedup (narrow
   * after a doc-id repartition), the band-bucket self-join (bounded: bucket
   * sizes are tiny under uniform hashing; AQE skew-join covers adversarial
   * buckets), and the candidate-pair verification join (candidates only —
-  * never all-pairs). At 100 TB the all-pairs blocked variant
-  * (`ngramJaccardPairs`) is for small blocks only; LSH is the scale path.
+  * never all-pairs). At 100 TB the postings all-pairs Jaccard
+  * (`jaccardFromUnits`) is for small blocks only; LSH is the scale path.
   */
 object Dedup {
 
@@ -76,31 +81,51 @@ object Dedup {
           x => x.getField("minhash").cast("string")))).as("bucket"))
 
   /** THE shared capped+observed bucket gate for every banded self/cross
-    * join (candidatePairs, deltaCandidatePairs, simhashPairs,
-    * metaBlocking, Curation.fuzzyDecontaminate — one definition so the
-    * cap/observe semantics can't drift): (key…) groups larger than
-    * `maxBucketSize` are dropped BEFORE any join; dropped-bucket count
-    * and the max observed size surface as the `metricName` observe
-    * metric so the cap is never silent. Sizes come from a
-    * partial-aggregated groupBy joined back — deliberately NOT a window
-    * count: a window over the keys must SORT each bucket in one
-    * un-splittable task, so the adversarial mega-bucket this cap exists
-    * for would become a straggler before the filter could drop it, and
-    * AQE cannot split a Window partition; the groupBy's map-side
-    * partials keep the mega-bucket's reducer input at one row per
-    * distinct key. Returns the surviving key tuples. */
+    * join ([[candidatePairs]], and through it `Similarity.annTopK` and
+    * `cosineNearDups`; [[metaBlocking]], [[deltaCandidatePairs]],
+    * [[simhashPairs]], `Curation.fuzzyDecontaminate`) — one definition so
+    * the cap/observe semantics can't drift (`EntityLinking`'s name blocking
+    * gates in its member-collecting pass): (key…) groups larger than
+    * `maxBucketSize` are dropped BEFORE any join; dropped-bucket count and
+    * the max observed size surface as the `metricName` observe metric so
+    * the cap is never silent. Sizes come from a partial-aggregated groupBy
+    * joined back — deliberately NOT a window count: a window over the keys
+    * must SORT each bucket in one un-splittable task, so the adversarial
+    * mega-bucket this cap exists for would become a straggler before the
+    * filter could drop it, and AQE cannot split a Window partition; the
+    * groupBy's map-side partials keep the mega-bucket's reducer input at
+    * one row per distinct key. Returns the rows of `bands` in surviving
+    * buckets. */
   private[ops] def cappedBuckets(bands: DataFrame, keys: Seq[String],
       maxBucketSize: Long, metricName: String): DataFrame =
-    bands
+    bands.join(bands
       .groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("bucket_n"))
       .observe(metricName,
         sum(when(col("bucket_n") > maxBucketSize, 1L).otherwise(0L)).as("capped_buckets"),
         max(col("bucket_n")).as("max_bucket"))
       .where(col("bucket_n") <= maxBucketSize)
-      .select(keys.map(col): _*)
+      .select(keys.map(col): _*), keys)
 
-  /** Candidate pairs: ids sharing any band bucket (id1 < id2).
+  /** The capped (band, bucket) self-join shared by [[candidatePairs]] and
+    * [[metaBlocking]]: the [[cappedBuckets]] gate, then both join
+    * branches project the SAME `inBuckets` plan (identical subtrees — the
+    * exchange is reusable). Returns one (id1, id2) row, id1 < id2, per
+    * shared bucket — NOT distinct: a pair sharing b buckets appears b
+    * times. */
+  private def bucketPairs(bands: DataFrame, id: String,
+      maxBucketSize: Long, metricName: String): DataFrame = {
+    val inBuckets = cappedBuckets(bands, Seq("band", "bucket"), maxBucketSize, metricName)
+    val l = inBuckets.select(col("band"), col("bucket"), col(id).as("id1"))
+    val r = inBuckets.select(col("band"), col("bucket"), col(id).as("id2"))
+    l.join(r, Seq("band", "bucket"))
+      .where(col("id1") < col("id2"))
+      .select(col("id1"), col("id2"))
+  }
+
+  /** Candidate pairs: ids sharing any band bucket (id1 < id2), distinct'd
+    * BEFORE any scoring (a pair sharing b bands must not be scored b
+    * times).
     *
     * Scale guard: a (band, bucket) group larger than `maxBucketSize` is
     * dropped before the self-join — its pair count is quadratic in the
@@ -108,29 +133,16 @@ object Dedup {
     * near-identical pages collapse into ONE band signature, turning the
     * join into a silent all-pairs. Dropped-bucket count and the max
     * observed bucket size surface as the `metricName` `observe` metric
-    * so the cap is never silent (same cap semantics as `simhashPairs` /
-    * `Similarity.bandedCandidates`). Members of a capped bucket can
-    * still pair through their other bands.
+    * so the cap is never silent. Members of a capped bucket can still
+    * pair through their other bands.
     *
-    * Shape: the [[cappedBuckets]] gate (see its doc for why groupBy, not
-    * a window), then both self-join branches project the SAME
-    * `inBuckets` plan (identical subtrees — the exchange is reusable).
     * `metricName` must be unique per query plan (Spark rejects same-name
     * observed metrics over different subplans); callers composing
     * several candidate passes pass distinct names. */
   def candidatePairs(bands: DataFrame, id: String,
       maxBucketSize: Long = 100000L,
-      metricName: String = "minhash_buckets"): DataFrame = {
-    val inBuckets = bands.join(
-      cappedBuckets(bands, Seq("band", "bucket"), maxBucketSize, metricName),
-      Seq("band", "bucket"))
-    val l = inBuckets.select(col("band"), col("bucket"), col(id).as("id1"))
-    val r = inBuckets.select(col("band"), col("bucket"), col(id).as("id2"))
-    l.join(r, Seq("band", "bucket"))
-      .where(col("id1") < col("id2"))
-      .select(col("id1"), col("id2"))
-      .distinct()
-  }
+      metricName: String = "minhash_buckets"): DataFrame =
+    bucketPairs(bands, id, maxBucketSize, metricName).distinct()
 
   /** Entity-resolution META-BLOCKING (SparkER's weighted-node-pruning
     * family, Simonini et al., EDBT 2019): score every candidate pair by
@@ -154,13 +166,7 @@ object Dedup {
   def metaBlocking(bands: DataFrame, id: String,
       maxBucketSize: Long = 100000L,
       metricName: String = "meta_blocking_buckets"): DataFrame = {
-    val inBuckets = bands.join(
-      cappedBuckets(bands, Seq("band", "bucket"), maxBucketSize, metricName),
-      Seq("band", "bucket"))
-    val l = inBuckets.select(col("band"), col("bucket"), col(id).as("id1"))
-    val r = inBuckets.select(col("band"), col("bucket"), col(id).as("id2"))
-    val pr = l.join(r, Seq("band", "bucket"))
-      .where(col("id1") < col("id2"))
+    val pr = bucketPairs(bands, id, maxBucketSize, metricName)
       .groupBy(col("id1"), col("id2")).agg(count(lit(1)).as("w"))
     val nodes = pr.select(col("id1").as("node"), col("w"))
       .union(pr.select(col("id2").as("node"), col("w")))
@@ -197,9 +203,7 @@ object Dedup {
   def deltaCandidatePairs(allBands: DataFrame, isNew: Column, id: String,
       maxBucketSize: Long = 100000L,
       metricName: String = "minhash_delta_buckets"): DataFrame = {
-    val inBuckets = allBands.join(
-      cappedBuckets(allBands, Seq("band", "bucket"), maxBucketSize, metricName),
-      Seq("band", "bucket"))
+    val inBuckets = cappedBuckets(allBands, Seq("band", "bucket"), maxBucketSize, metricName)
     val newBands = inBuckets.where(isNew)
     val touched = newBands.select(col("band"), col("bucket")).distinct()
     val l = newBands.select(col("band"), col("bucket"), col(id).as("id_new"))
@@ -212,16 +216,22 @@ object Dedup {
       .distinct()
   }
 
+  /** The 64-bit proxy key of every postings join (tokens, shingles, url
+    * paths): the joins decide unit IDENTITY only, so they shuffle and
+    * match a 64-bit hash instead of the unit text (guide §2.3: shuffle
+    * keys, not payloads; measured 10.6 s → 6.0 s at sf0.1 on the
+    * containment join's 58M-row intermediate). A NULL unit stays NULL,
+    * so it matches nothing, as in the string join (xxhash64 alone maps
+    * every null to its seed, one shared key). A collision needs two
+    * distinct units of one corpus with the same xxhash64: ~n²/2⁶⁵ for n
+    * distinct units, ~3% at 10⁹, and it costs one spurious shared-unit
+    * count, never a crash. */
+  def unitKey(c: Column): Column = when(c.isNull, lit(null)).otherwise(xxhash64(c))
+
   /** Exact token-set Jaccard for given candidate pairs (verification
     * step of MinHash-LSH dedup). Output: (id1, id2, jaccard). */
   def jaccardVerify(pairs: DataFrame, tokens: DataFrame, id: String): DataFrame = {
-    // the intersection join needs only token IDENTITY — carry a 64-bit
-    // hash instead of the token text through both join sides (guide
-    // §2.3; same proxy-key + null-passthrough rationale as
-    // containmentFromUnits)
-    val tk = tokens.select(col(id),
-      when(col("token").isNull, lit(null)).otherwise(xxhash64(col("token"))).as("token"))
-    val sizes = tk.groupBy(col(id)).agg(count(lit(1)).as("sz"))
+    val tk = tokens.select(col(id), unitKey(col("token")).as("token"))
     val t1 = tk.select(col(id).as("id1"), col("token"))
     val t2 = tk.select(col(id).as("id2"), col("token"))
     val inter = pairs
@@ -229,6 +239,31 @@ object Dedup {
       .join(t2, Seq("id2", "token"))
       .groupBy(col("id1"), col("id2"))
       .agg(count(lit(1)).as("inter"))
+    withJaccard(inter, tk, id)
+  }
+
+  /** All-pairs Jaccard over pre-extracted (id, unit) rows — UNIQUE per
+    * (id, unit), the caller's contract — the sibling of
+    * [[containmentFromUnits]]: a postings self-join on [[unitKey]], the
+    * intersection count per pair, and the per-id sizes. Quadratic in a
+    * unit's document frequency, so it is for small blocks; LSH
+    * ([[candidatePairs]] + [[jaccardVerify]]) is the scale path.
+    * Output: (id1, id2, jaccard), id1 < id2, jaccard ≥ threshold. */
+  def jaccardFromUnits(units: DataFrame, id: String, unit: String,
+      threshold: Double): DataFrame = {
+    val sh = units.select(col(id), unitKey(col(unit)).as("__unit"))
+    val inter = sh.select(col(id).as("id1"), col("__unit"))
+      .join(sh.select(col(id).as("id2"), col("__unit")), Seq("__unit"))
+      .where(col("id1") < col("id2"))
+      .groupBy(col("id1"), col("id2")).agg(count(lit(1)).as("inter"))
+    withJaccard(inter, sh, id).where(col("jaccard") >= threshold)
+  }
+
+  /** The sizes tail of both Jaccard operators: per-pair intersection
+    * counts `inter` (id1, id2, inter) joined to the per-id unit counts
+    * of `keyed`, rounded to 4 places. */
+  private def withJaccard(inter: DataFrame, keyed: DataFrame, id: String): DataFrame = {
+    val sizes = keyed.groupBy(col(id)).agg(count(lit(1)).as("sz"))
     inter
       .join(sizes.withColumnRenamed(id, "id1").withColumnRenamed("sz", "sz1"), Seq("id1"))
       .join(sizes.withColumnRenamed(id, "id2").withColumnRenamed("sz", "sz2"), Seq("id2"))
@@ -404,9 +439,7 @@ object Dedup {
       explode(array((0 until 4).map(c => struct(lit(c).as("c"),
         substring(col("simhash"), c * 16 + 1, 16).as("chunk"))): _*)).as("x"))
       .select(col(id), col("simhash"), col("x.c").as("c"), col("x.chunk").as("chunk"))
-    val inBuckets = chunks.join(
-      cappedBuckets(chunks, Seq("c", "chunk"), maxBucketSize, "simhash_buckets"),
-      Seq("c", "chunk"))
+    val inBuckets = cappedBuckets(chunks, Seq("c", "chunk"), maxBucketSize, "simhash_buckets")
     val l = inBuckets.select(col("c"), col("chunk"), col(id).as("id1"), col("simhash").as("s1"))
     val r = inBuckets.select(col("c"), col("chunk"), col(id).as("id2"), col("simhash").as("s2"))
     val pairs = l.join(r, Seq("c", "chunk"))
@@ -468,20 +501,7 @@ object Dedup {
       metricName: String = "containment_units"): DataFrame = {
     require(dfCap >= 2 && threshold > 0 && threshold <= 1,
       s"containmentFromUnits: need dfCap>=2, 0<threshold<=1 (got $dfCap, $threshold)")
-    // the postings join and its Σ df² intermediate carry only a 64-bit
-    // hash of the unit, never the unit text — the join decides identity,
-    // so a narrow proxy key suffices (guide §2.3: shuffle keys, not
-    // payloads; measured 10.6 s → 6.0 s at sf0.1 on the 58M-row
-    // intermediate). NULL units keep their string-join semantics (a
-    // null key matches nothing) via the explicit null passthrough.
-    // Hash collisions would need two distinct unit strings of the same
-    // xxhash64 inside one corpus (~n²/2⁶⁵ for n distinct units — at
-    // even 10⁹ distinct units the corpus-level chance is ~3%, and a
-    // collision costs one spurious shared-unit count, not a crash;
-    // callers needing exactness beyond that keep dfCap semantics
-    // unchanged and can pre-dedup units).
-    val sh = units.select(col(id),
-      when(col(unit).isNull, lit(null)).otherwise(xxhash64(col(unit))).as("__unit"))
+    val sh = units.select(col(id), unitKey(col(unit)).as("__unit"))
     val sizes = sh.groupBy(col(id)).agg(count(lit(1)).as("sz"))
     val hot = sh.groupBy(col("__unit")).agg(count(lit(1)).as("df"))
       .where(col("df") > dfCap)
@@ -513,8 +533,7 @@ object Dedup {
     * every input doc; training keeps `is_canonical`. */
   def dedupClusters(df: DataFrame, id: String, pairs: DataFrame): DataFrame = {
     val labels = graft.kg.ConnectedComponents.run(
-      df.sparkSession, pairs.select(col("id1").as("src"), col("id2").as("dst")),
-      driverSolveThreshold = graft.kg.ConnectedComponents.driverEdgeBudget())
+      df.sparkSession, pairs.select(col("id1").as("src"), col("id2").as("dst")))
     // canonical = the min id PRESENT IN df within the cluster — NOT
     // simply id == cluster label: when pairs were computed on a wider
     // corpus than df (pairs ids ⊄ df ids, a normal composition), the CC
@@ -534,29 +553,6 @@ object Dedup {
         coalesce(col("component"), col(id)).as("cluster"),
         when(col("component").isNull, lit(true))
           .otherwise(col(id) === col("__minp")).as("is_canonical"))
-  }
-
-  /** Blocked all-pairs n-gram (token) Jaccard — for small blocks; LSH is
-    * the scale path. Block key = any low-cardinality column. */
-  def ngramJaccardPairs(df: DataFrame, id: String, text: String,
-      blockCols: Seq[String], threshold: Double): DataFrame = {
-    val toks = df
-      .select((col(id) +: blockCols.map(col)) :+
-        explode(split(col(text), " ")).as("token"): _*)
-      .where(col("token") =!= "").distinct()
-    val l = toks.select(blockCols.map(col) :+ col(id).as("id1") :+ col("token"): _*)
-    val r = toks.select(blockCols.map(col) :+ col(id).as("id2") :+ col("token"): _*)
-    val sizes = toks.groupBy(col(id)).agg(count(lit(1)).as("sz"))
-    val inter = l.join(r, blockCols :+ "token")
-      .where(col("id1") < col("id2"))
-      .groupBy(col("id1"), col("id2"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed(id, "id1").withColumnRenamed("sz", "sz1"), Seq("id1"))
-      .join(sizes.withColumnRenamed(id, "id2").withColumnRenamed("sz", "sz2"), Seq("id2"))
-      .select(col("id1"), col("id2"),
-        round(col("inter") / (col("sz1") + col("sz2") - col("inter")), 4).as("jaccard"))
-      .where(col("jaccard") >= threshold)
   }
 
   /** Cross-document duplicated-span inventory — the discovery half of

@@ -28,10 +28,18 @@ object Similarity {
   def cosineTopK(corpus: DataFrame, probes: DataFrame, id: String, vec: String, k: Int): DataFrame = {
     val p = probes.select(col(id).as("probe_id"), col(vec).as("probe_vec"))
     val c = corpus.select(col(id).as("neighbor_id"), col(vec).as("corpus_vec"))
-    val scored = c.crossJoin(broadcast(p))
-      .where(col("probe_id") =!= col("neighbor_id"))
-      .select(col("probe_id"), col("neighbor_id"),
-        round(cosine(col("probe_vec"), col("corpus_vec")), 4).as("cos_sim"))
+    topKByCosine(c.crossJoin(broadcast(p)).where(col("probe_id") =!= col("neighbor_id")), k)
+  }
+
+  /** The ranking tail of every top-k search ([[cosineTopK]], [[annTopK]],
+    * [[ivfTopK]]), each of which brings its own candidate join of
+    * (probe_id, neighbor_id, probe_vec, corpus_vec) rows: cos_sim =
+    * cosine rounded to 4 places, ranked per probe by (cos_sim desc,
+    * neighbor_id asc) — the tie-break makes the cut deterministic — and
+    * cut at rank k. Output: (probe_id, neighbor_id, cos_sim, rank). */
+  private def topKByCosine(cands: DataFrame, k: Int): DataFrame = {
+    val scored = cands.select(col("probe_id"), col("neighbor_id"),
+      round(cosine(col("probe_vec"), col("corpus_vec")), 4).as("cos_sim"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("probe_id"))
       .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
@@ -108,60 +116,34 @@ object Similarity {
     lshBands(df, id, vec, nBands = 1, planesPerBand = nPlanes)
       .select(col(id), col("bucket"))
 
-  /** Banded candidate pairs: ids sharing any band bucket, distinct'd
-    * BEFORE any scoring (a pair sharing b bands must not be scored b
-    * times). Oversized buckets are dropped (quadratic in-bucket blow-up)
-    * with an `observe` metric ("ann_buckets") so the cap is never
-    * silent. Output: (id1, id2) with id1 < id2 over column `idCol`. */
-  private def bandedCandidates(bands: DataFrame, id: String,
-      maxBucketSize: Long): DataFrame = {
-    val kept = bands.groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("bucket_n"))
-      .observe("ann_buckets",
-        sum(when(col("bucket_n") > maxBucketSize, 1L).otherwise(0L)).as("capped_buckets"),
-        max(col("bucket_n")).as("max_bucket"))
-      .where(col("bucket_n") <= maxBucketSize)
-      .select(col("band"), col("bucket"))
-    val in = bands.join(kept, Seq("band", "bucket"))
-    val l = in.select(col("band"), col("bucket"), col(id).as("id1"))
-    val r = in.select(col("band"), col("bucket"), col(id).as("id2"))
-    l.join(r, Seq("band", "bucket"))
-      .where(col("id1") < col("id2"))
-      .select(col("id1"), col("id2"))
-      .distinct()
-  }
-
   /** ANN top-k via banded LSH (OR of nBands buckets): candidates from any
-    * shared band bucket, deduped, then exact cosine re-rank. Recall vs
-    * the brute-force `cosineTopK` grows with nBands (measured in
-    * OpsSpec); per-band bucket sizes stay bounded — the scale path for
-    * 100 TB corpora (single-band bucketing has a quadratic in-bucket
-    * blow-up and a recall cliff). */
+    * shared band bucket (`Dedup.candidatePairs`: capped and observed as
+    * "ann_buckets", distinct'd before scoring), then exact cosine
+    * re-rank. Recall vs the brute-force `cosineTopK` grows with nBands
+    * (measured in OpsSpec); per-band bucket sizes stay bounded — the
+    * scale path for 100 TB corpora (single-band bucketing has a
+    * quadratic in-bucket blow-up and a recall cliff). */
   def annTopK(df: DataFrame, id: String, vec: String, k: Int,
       nBands: Int = 4, planesPerBand: Int = 8,
       maxBucketSize: Long = 100000L): DataFrame = {
-    val cands = bandedCandidates(lshBands(df, id, vec, nBands, planesPerBand), id, maxBucketSize)
+    val cands = Dedup.candidatePairs(lshBands(df, id, vec, nBands, planesPerBand), id,
+      maxBucketSize, "ann_buckets")
     // candidates are symmetric (id1 < id2); a probe must see neighbors on
     // both sides, so mirror before scoring
     val sym = cands.select(col("id1").as("probe_id"), col("id2").as("neighbor_id"))
       .union(cands.select(col("id2").as("probe_id"), col("id1").as("neighbor_id")))
     val pv = df.select(col(id).as("probe_id"), col(vec).as("probe_vec"))
     val nv = df.select(col(id).as("neighbor_id"), col(vec).as("corpus_vec"))
-    val scored = sym.join(pv, Seq("probe_id")).join(nv, Seq("neighbor_id"))
-      .select(col("probe_id"), col("neighbor_id"),
-        round(cosine(col("probe_vec"), col("corpus_vec")), 4).as("cos_sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("probe_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+    topKByCosine(sym.join(pv, Seq("probe_id")).join(nv, Seq("neighbor_id")), k)
   }
 
-  /** Embedding-cosine near-duplicate pairs: banded candidates with
-    * rounded cosine ≥ threshold (id1 < id2). */
+  /** Embedding-cosine near-duplicate pairs: banded candidates (as in
+    * [[annTopK]]) with rounded cosine ≥ threshold (id1 < id2). */
   def cosineNearDups(df: DataFrame, id: String, vec: String,
       threshold: Double, nBands: Int = 4, planesPerBand: Int = 8,
       maxBucketSize: Long = 100000L): DataFrame = {
-    val cands = bandedCandidates(lshBands(df, id, vec, nBands, planesPerBand), id, maxBucketSize)
+    val cands = Dedup.candidatePairs(lshBands(df, id, vec, nBands, planesPerBand), id,
+      maxBucketSize, "ann_buckets")
     val v1 = df.select(col(id).as("id1"), col(vec).as("v1"))
     val v2 = df.select(col(id).as("id2"), col(vec).as("v2"))
     cands.join(v1, Seq("id1")).join(v2, Seq("id2"))
@@ -380,13 +362,7 @@ object Similarity {
       .select(col("probe_id"), col("neighbor_id"))
     val pv = probes.select(col(id).as("probe_id"), col(vec).as("probe_vec"))
     val nv = corpus.select(col(id).as("neighbor_id"), col(vec).as("corpus_vec"))
-    val scored = cands.join(broadcast(pv), Seq("probe_id")).join(nv, Seq("neighbor_id"))
-      .select(col("probe_id"), col("neighbor_id"),
-        round(cosine(col("probe_vec"), col("corpus_vec")), 4).as("cos_sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("probe_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+    topKByCosine(cands.join(broadcast(pv), Seq("probe_id")).join(nv, Seq("neighbor_id")), k)
   }
 
   /** Symmetric int8 scalar quantization — embedding compression for

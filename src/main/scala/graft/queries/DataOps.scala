@@ -58,6 +58,39 @@ object DataOps {
   private val nearDupTail = " additional tail content for near duplicate testing"
   private val decontTail = " extra trailing content appended after the contaminated span"
 
+  /** The planted decontamination corpus of `cu_decontaminate` and
+    * `cu_fuzzy_decontam`: bench = doc_id % 97 == 0, and the corpus is
+    * the other docs plus one contaminated copy of each bench doc (its
+    * text + `decontTail`, doc_id + 3000000). Returns (corpus, bench). */
+  private def decontCorpus(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val base = docs(s, dir).select(col("doc_id"), col("text"))
+    val bench = base.where(col("doc_id") % 97 === 0)
+    val contaminated = bench.select((col("doc_id") + 3000000L).as("doc_id"),
+      concat(col("text"), lit(decontTail)).as("text"))
+    (base.where(col("doc_id") % 97 =!= 0).union(contaminated), bench)
+  }
+
+  /** The 2-epoch SCD2 history of `tb_time_travel` and `tb_scd2_merge`:
+    * every customer open at its segment from 0, plus a pre-closed OLD
+    * version over [-10, 0) for keys % 10 == 0. */
+  private def scd2History(c: DataFrame): DataFrame =
+    c.where(col("c_custkey") % 10 === 0)
+      .select(col("c_custkey").as("k"), lit("OLD").as("segment"),
+        lit(-10L).as("valid_from"), lit(0L).as("valid_to"))
+      .unionAll(c.select(col("c_custkey").as("k"), col("c_mktsegment").as("segment"),
+        lit(0L).as("valid_from"), lit(null).cast("long").as("valid_to")))
+
+  /** The mutated customer snapshot of `tb_scd2_merge` and
+    * `tb_snapshot_diff`: deletes keys % 7, changes the segment of keys
+    * % 5, adds keys % 11 shifted by 100000 — all four merge arms. */
+  private def mutatedSnapshot(c: DataFrame): DataFrame =
+    c.where(col("c_custkey") % 7 =!= 0)
+      .select(col("c_custkey").as("k"),
+        when(col("c_custkey") % 5 === 0, lit("CHANGED"))
+          .otherwise(col("c_mktsegment")).as("segment"))
+      .unionAll(c.where(col("c_custkey") % 11 === 0)
+        .select((col("c_custkey") + 100000L).as("k"), lit("NEWSEG").as("segment")))
+
 
   /** Deterministic crawl-page synthesis for the wt_* webgraph queries:
     * 3 absolute anchors per page over a 23-host universe plus a
@@ -126,7 +159,7 @@ object DataOps {
   }
 
   /** Banded hyperplane-LSH candidate CTE over `embeddings` (mirrors
-    * Similarity.lshBands + bandedCandidates: 4 bands × 8 planes, bucket
+    * Similarity.lshBands + Dedup.candidatePairs: 4 bands × 8 planes, bucket
     * cap, pairs distinct'd before scoring). Yields `cand(id1, id2)`. */
   private val bandedCandSql: String =
     """dims AS (
@@ -457,21 +490,8 @@ object DataOps {
       // quadratic check is the SMALL-BLOCK tool; LSH (dd_minhash_pairs)
       // is the scale path. Planted near-dups (% 20) stay in the subset.
       val input = ddInput(s, dir).where(col("doc_id") % 4 === 0)
-      // the all-pairs intersection join carries a 64-bit hash of the
-      // shingle, not its text (guide §2.3 — the join only decides
-      // identity; same proxy-key rationale as containmentFromUnits)
-      val sh = Dedup.charShingles(input, "doc_id", "text", 8)
-        .select(col("doc_id"), xxhash64(col("shingle")).as("token"))
-      val l = sh.select(col("doc_id").as("id1"), col("token"))
-      val r = sh.select(col("doc_id").as("id2"), col("token"))
-      val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-      l.join(r, Seq("token")).where(col("id1") < col("id2"))
-        .groupBy(col("id1"), col("id2")).agg(count(lit(1)).as("inter"))
-        .join(sizes.withColumnRenamed("doc_id", "id1").withColumnRenamed("sz", "sz1"), Seq("id1"))
-        .join(sizes.withColumnRenamed("doc_id", "id2").withColumnRenamed("sz", "sz2"), Seq("id2"))
-        .select(col("id1"), col("id2"),
-          round(col("inter") / (col("sz1") + col("sz2") - col("inter")), 4).as("jaccard"))
-        .where(col("jaccard") >= 0.5)
+      Dedup.jaccardFromUnits(Dedup.charShingles(input, "doc_id", "text", 8),
+        "doc_id", "shingle", 0.5)
     }),
 
     // asymmetric containment over the same %4 subset bound as
@@ -605,11 +625,7 @@ object DataOps {
     // scale (sf0.01), so 0.5 isolates the plants there (tiny sf0.001
     // benchmark docs can be near-covered naturally — OpsSpec handles it)
     "cu_decontaminate" -> ((s, dir) => {
-      val base = docs(s, dir).select(col("doc_id"), col("text"))
-      val bench = base.where(col("doc_id") % 97 === 0)
-      val contaminated = bench.select((col("doc_id") + 3000000L).as("doc_id"),
-        concat(col("text"), lit(decontTail)).as("text"))
-      val corpus = base.where(col("doc_id") % 97 =!= 0).union(contaminated)
+      val (corpus, bench) = decontCorpus(s, dir)
       Curation.decontaminate(corpus, bench, "doc_id", "text", 8, 0.5)
     }),
 
@@ -617,11 +633,7 @@ object DataOps {
     // bench-too-big-to-broadcast shape), verified from the signatures'
     // agreement fraction — same planted contamination as cu_decontaminate
     "cu_fuzzy_decontam" -> ((s, dir) => {
-      val base = docs(s, dir).select(col("doc_id"), col("text"))
-      val bench = base.where(col("doc_id") % 97 === 0)
-      val contaminated = bench.select((col("doc_id") + 3000000L).as("doc_id"),
-        concat(col("text"), lit(decontTail)).as("text"))
-      val corpus = base.where(col("doc_id") % 97 =!= 0).union(contaminated)
+      val (corpus, bench) = decontCorpus(s, dir)
       Curation.fuzzyDecontaminate(corpus, bench, "doc_id", "text",
         nHashes = 8, shingleN = 8, rowsPerBand = 4, minJaccardPpm = 500000L)
     }),
@@ -1196,40 +1208,23 @@ object DataOps {
       Cdc.refreshSummary(base, ev.where(col("event_id") % 10 >= 8), keys, ms)
     }),
 
-    // SCD2 snapshot fold (the MERGE INTO shape on plain checkpoints):
-    // history = customers open at segment v0 + pre-closed OLD versions;
-    // snapshot at ts=100 deletes %7 keys, changes %5 segments, adds %11
-    // new keys — exercising all four merge arms in one query
     // SCD2 time travel: the same 2-epoch history as tb_scd2_merge read
     // AS OF an instant in each epoch — half-open intervals, so the OLD
     // epoch serves ts=-5 and the current epoch serves ts=5
     "tb_time_travel" -> ((s, dir) => {
-      val c = s.read.parquet(s"$dir/customer.parquet")
-      val history = c.where(col("c_custkey") % 10 === 0)
-        .select(col("c_custkey").as("k"), lit("OLD").as("segment"),
-          lit(-10L).as("valid_from"), lit(0L).as("valid_to"))
-        .unionAll(c.select(col("c_custkey").as("k"), col("c_mktsegment").as("segment"),
-          lit(0L).as("valid_from"), lit(null).cast("long").as("valid_to")))
+      val history = scd2History(s.read.parquet(s"$dir/customer.parquet"))
       Cdc.snapshotAsOf(history, "valid_from", "valid_to", -5L)
         .select(lit(-5L).as("asof"), col("k"), col("segment"))
         .unionAll(Cdc.snapshotAsOf(history, "valid_from", "valid_to", 5L)
           .select(lit(5L).as("asof"), col("k"), col("segment")))
     }),
 
+    // SCD2 snapshot fold (the MERGE INTO shape on plain checkpoints):
+    // the 2-epoch history folded with the mutated snapshot at ts=100,
+    // exercising all four merge arms in one query
     "tb_scd2_merge" -> ((s, dir) => {
       val c = s.read.parquet(s"$dir/customer.parquet")
-      val history = c.where(col("c_custkey") % 10 === 0)
-        .select(col("c_custkey").as("k"), lit("OLD").as("segment"),
-          lit(-10L).as("valid_from"), lit(0L).as("valid_to"))
-        .unionAll(c.select(col("c_custkey").as("k"), col("c_mktsegment").as("segment"),
-          lit(0L).as("valid_from"), lit(null).cast("long").as("valid_to")))
-      val snapshot = c.where(col("c_custkey") % 7 =!= 0)
-        .select(col("c_custkey").as("k"),
-          when(col("c_custkey") % 5 === 0, lit("CHANGED"))
-            .otherwise(col("c_mktsegment")).as("segment"))
-        .unionAll(c.where(col("c_custkey") % 11 === 0)
-          .select((col("c_custkey") + 100000L).as("k"), lit("NEWSEG").as("segment")))
-      Cdc.scd2Merge(history, snapshot, "k", Seq("segment"), 100L)
+      Cdc.scd2Merge(scd2History(c), mutatedSnapshot(c), "k", Seq("segment"), 100L)
     }),
 
     // CDC extract between two snapshots: delta-sized (insert/update/
@@ -1237,13 +1232,7 @@ object DataOps {
     "tb_snapshot_diff" -> ((s, dir) => {
       val c = s.read.parquet(s"$dir/customer.parquet")
       val older = c.select(col("c_custkey").as("k"), col("c_mktsegment").as("segment"))
-      val newer = c.where(col("c_custkey") % 7 =!= 0)
-        .select(col("c_custkey").as("k"),
-          when(col("c_custkey") % 5 === 0, lit("CHANGED"))
-            .otherwise(col("c_mktsegment")).as("segment"))
-        .unionAll(c.where(col("c_custkey") % 11 === 0)
-          .select((col("c_custkey") + 100000L).as("k"), lit("NEWSEG").as("segment")))
-      Cdc.snapshotDiff(older, newer, "k", Seq("segment"))
+      Cdc.snapshotDiff(older, mutatedSnapshot(c), "k", Seq("segment"))
     }),
 
     // registered-domain extraction (the per-source curation key):

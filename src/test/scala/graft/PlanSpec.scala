@@ -138,6 +138,48 @@ class PlanSpec extends AnyFunSuite {
       s"stream with StreamingPipeline.drain in: ${hits.distinct.mkString(", ")}")
   }
 
+  /** The files under `roots` (below src/main/scala/graft) holding a
+    * match of `re` in code (comment lines skipped) outside the allowed
+    * defs; `allowed` maps a file's path below graft/ to its def names,
+    * and a def's text runs from `def <name>(` to its first blank line
+    * or the end of the file. */
+  private def matchesOutside(re: scala.util.matching.Regex, roots: Seq[String],
+      allowed: Map[String, Seq[String]]): Seq[String] = {
+    val graft = java.nio.file.Paths.get("src/main/scala/graft")
+    val found = roots.flatMap { r =>
+      val sources = java.nio.file.Files.walk(graft.resolve(r).normalize())
+      try sources.iterator().asScala.toSeq finally sources.close()
+    }
+    for ((file, defs) <- allowed; d <- defs)
+      assert(java.nio.file.Files.readString(graft.resolve(file)).contains(s"def $d("),
+        s"$file: def $d not found")
+    found.filter(_.toString.endsWith(".scala")).flatMap { f =>
+      val rel = graft.relativize(f).toString
+      val text = allowed.getOrElse(rel, Nil).foldLeft(java.nio.file.Files.readString(f)) {
+        (t, d) =>
+          val start = t.indexOf(s"def $d(")
+          val end = t.indexOf("\n\n", start)
+          t.substring(0, start) + (if (end < 0) "" else t.substring(end))
+      }
+      val code = text.linesIterator.filterNot(l => Seq("*", "/*", "//").exists(l.trim.startsWith))
+      code.flatMap(l => re.findAllIn(l)).map(_ => rel).toSeq
+    }
+  }
+
+  test("the bucket gate has one home: no bucket_n outside Dedup.cappedBuckets and name blocking") {
+    val hits = matchesOutside(""""bucket_n"""".r, Seq(""), Map(
+      "ops/Dedup.scala" -> Seq("cappedBuckets"),
+      "kg/EntityLinking.scala" -> Seq("nameSimilarityEdges")))
+    assert(hits.isEmpty, s"gate the buckets with Dedup.cappedBuckets in: ${hits.distinct.mkString(", ")}")
+  }
+
+  test("the proxy key has one home: no xxhash64( in ops or queries outside Dedup.unitKey and Skew's salts") {
+    val hits = matchesOutside("""xxhash64\(""".r, Seq("ops", "queries"), Map(
+      "ops/Dedup.scala" -> Seq("unitKey"),
+      "ops/Skew.scala" -> Seq("saltedJoin", "saltedSum")))
+    assert(hits.isEmpty, s"key the units with Dedup.unitKey in: ${hits.distinct.mkString(", ")}")
+  }
+
   test("fold state has one home: no getFileSystem in graft/kg outside graft/kg/io") {
     val kg = java.nio.file.Paths.get("src/main/scala/graft/kg")
     val io = kg.resolve("io")

@@ -47,6 +47,36 @@ class OpsSpec extends AnyFunSuite {
       && r.getAs[Double]("jaccard") > 0.8), verified.mkString(";"))
   }
 
+  test("jaccardFromUnits equals jaccardVerify fed every pair") {
+    val base = docs.select($"doc_id", $"text").where($"doc_id" < 40)
+    val near = base.where($"doc_id" === 3 || $"doc_id" === 7)
+      .select(($"doc_id" + 100000).as("doc_id"), concat($"text", lit(" tiny tail")).as("text"))
+    val sh = Dedup.charShingles(base.union(near), "doc_id", "text", 8)
+    val ids = sh.select($"doc_id").distinct()
+    val every = ids.select($"doc_id".as("id1"))
+      .crossJoin(ids.select($"doc_id".as("id2"))).where($"id1" < $"id2")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select($"id1", $"id2", $"jaccard").as[(Long, Long, Double)].collect().toSet
+    val verified = rows(Dedup.jaccardVerify(every, sh.withColumnRenamed("shingle", "token"), "doc_id"))
+    assert(rows(Dedup.jaccardFromUnits(sh, "doc_id", "shingle", 0.0)) == verified)
+    val kept = rows(Dedup.jaccardFromUnits(sh, "doc_id", "shingle", 0.5))
+    assert(kept == verified.filter(_._3 >= 0.5))
+    assert(Set(3L -> 100003L, 7L -> 100007L).subsetOf(kept.map(r => r._1 -> r._2)), kept.toString)
+  }
+
+  test("null units match nothing: two null texts never pair") {
+    val texts = Seq((1L, null: String), (2L, null: String), (3L, "some shared text here"),
+      (4L, "some shared text here")).toDF("doc_id", "text")
+    val sh = Dedup.charShingles(texts, "doc_id", "text", 8)
+    assert(sh.where($"shingle".isNull).count() == 2, "a null text is one null shingle")
+    val pairs = Dedup.jaccardFromUnits(sh, "doc_id", "shingle", 0.0)
+      .as[(Long, Long, Double)].collect().toSeq
+    assert(pairs == Seq((3L, 4L, 1.0)), pairs.toString)
+    val decon = Curation.decontaminate(texts.where($"doc_id" =!= 1L),
+      texts.where($"doc_id" === 1L), "doc_id", "text", 8, 0.0)
+    assert(decon.count() == 0, "a null bench text contaminates nothing")
+  }
+
   test("simhash is deterministic and near-dups have small hamming distance") {
     val base = docs.select($"doc_id", $"text").where($"doc_id" < 30)
     val near = base.where($"doc_id" === 5)
@@ -1080,6 +1110,21 @@ class OpsSpec extends AnyFunSuite {
     assert(Dedup.candidatePairs(bands, "doc_id").count() == 67L)
   }
 
+  test("banded ANN: a mega-bucket is capped and observed as ann_buckets") {
+    // 12 copies of v share one bucket in every band (over the cap of 10);
+    // 3 copies of -v fill the opposite buckets and still pair
+    val v = (1 to 16).map(i => (i % 5 - 2).toFloat + 0.5f)
+    val vecs = ((0 until 12).map(i => (i.toLong, v)) ++
+      (0 until 3).map(i => (100L + i, v.map(-_)))).toDF("vec_id", "embedding")
+    val ann = Similarity.annTopK(vecs, "vec_id", "embedding", 3, 2, 8, maxBucketSize = 10L)
+    val m = observedMetric(ann, "ann_buckets")
+    assert(m.getAs[Long]("capped_buckets") >= 1L, m.toString)
+    assert(m.getAs[Long]("max_bucket") == 12L, m.toString)
+    val got = ann.select($"probe_id", $"neighbor_id").as[(Long, Long)].collect().toSet
+    assert(got == (for (a <- 100L to 102L; b <- 100L to 102L if a != b) yield (a, b)).toSet,
+      got.toString)
+  }
+
   test("NFC normalization composes, strips controls, keeps ligatures, flags changes") {
     val rows = Seq(
       (1L, "e\u0301cole"),          // decomposed -> composed U+00E9
@@ -1384,9 +1429,10 @@ class OpsSpec extends AnyFunSuite {
     assert(out.length == 1)
     assert(out.head.getAs[Double]("c_1_in_2") == 1.0, "every quote shingle is in the container")
     assert(out.head.getAs[Double]("c_2_in_1") < 0.3, "asymmetry: the container is not in the quote")
-    // symmetric jaccard on the same pair stays below any useful threshold
-    val j = graft.ops.Dedup.ngramJaccardPairs(
-      docs.withColumn("b", lit(1)), "doc_id", "text", Seq("b"), 0.5)
+    // symmetric jaccard over the same char-8 shingles stays below any
+    // useful threshold
+    val j = graft.ops.Dedup.jaccardFromUnits(
+      graft.ops.Dedup.charShingles(docs, "doc_id", "text", 8), "doc_id", "shingle", 0.5)
     assert(j.count() == 0)
   }
 
